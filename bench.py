@@ -76,29 +76,6 @@ def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def cpu_reference_miters(seconds: float = 2.0) -> float:
-    """Single-core integer-loop throughput (M iterations/s) — a host
-    speed reference recorded with every bench run. The shared sandbox
-    host's per-core speed varies several-fold between sessions, so
-    absolute events/sec numbers from different rounds are only
-    comparable after normalizing by this.
-
-    LEGACY kernel: checks the wall clock every iteration, so it partly
-    measures clock-call overhead. Kept verbatim because round 2's
-    recorded ``value_per_cpu_miter`` baseline (12,714.7) was normalized
-    by THIS kernel — changing it would silently break the one
-    cross-round comparator that survives host-speed swings. New rounds
-    also record :func:`cpu_reference_miters_fixedwork`, the clean
-    kernel that becomes the comparator once two rounds carry it."""
-    import time as _t
-
-    t0 = _t.time()
-    x = 0
-    while _t.time() - t0 < seconds:
-        x += 1
-    return x / 1e6 / seconds
-
-
 def cpu_reference_miters_fixedwork(target_seconds: float = 1.0, chunk: int = 2_000_000) -> float:
     """Fixed-work host-speed reference: times pure integer-arithmetic
     chunks with ``perf_counter`` checked once per *chunk* (not per
@@ -123,7 +100,7 @@ def cpu_reference_miters_fixedwork(target_seconds: float = 1.0, chunk: int = 2_0
 def cpu_reference_miters_multicore(n_procs: int, per_proc_seconds: float = 1.0) -> float:
     """Aggregate fixed-work Miters/s across ``n_procs`` concurrent
     processes — the host's MULTI-core capacity at sample time. The
-    single-core kernels miss the dominant noise mode on this shared
+    single-core kernel misses the dominant noise mode on this shared
     host (neighbor steal of the other vCPUs: a run can show fast
     single-core burns while a 32-thread Spark stage runs 3× slow), so
     the MoR headline is additionally normalized by this, sampled right
@@ -265,7 +242,6 @@ def main() -> None:
         shutil.rmtree(base, ignore_errors=True)
 
     total = round(time.time() - t_all, 3)
-    miters = cpu_reference_miters()
     miters_fw = cpu_reference_miters_fixedwork()
     queries_norm: dict[str, float] = {}
     brackets_out: dict[str, list[float]] = {}
@@ -309,21 +285,11 @@ def main() -> None:
         "cdc_wal_files": n_files,
         "cdc_max_files_per_trigger": None,
         "cdc_n_epochs": 1,
-        # host speed reference: single-core M iters/s at bench time.
-        # The shared sandbox host swings several-fold between sessions
-        # (see BENCH/BASELINE.md variance appendix), so cross-round
+        # host speed reference: single-core M iters/s at bench time
+        # (perf_counter, clock checked per 2M-iteration chunk). The
+        # shared sandbox host swings several-fold between runs (see
+        # BENCH/BASELINE.md variance appendix), so cross-round
         # comparisons should use the normalized headlines below.
-        # *_fixedwork is the clean kernel (perf_counter, clock checked
-        # per 2M-iteration chunk); the unsuffixed pair keeps round 2's
-        # legacy kernel for continuity with its 12,714.7 baseline.
-        "cpu_ref_miters": round(miters, 1),
-        "value_per_cpu_miter": round(N_EVENTS / pipe_mor_s / miters, 1),
-        # like-for-like comparator vs round 2's SINGLE-shot 12,714.7:
-        # min-of-N is systematically faster than one draw on a noisy
-        # host, so the first rep (same position in the run as r2's
-        # only rep — after the same warmup) is the unbiased cross-round
-        # number; the best-of headline above is the noise-robust one.
-        "value_per_cpu_miter_first_rep": round(N_EVENTS / mor_reps[0] / miters, 1),
         "cpu_ref_miters_fixedwork": round(miters_fw, 1),
         "value_per_cpu_miter_fixedwork": round(N_EVENTS / pipe_mor_s / miters_fw, 1),
         # window brackets around the single-shot analytics phase (pre /

@@ -18,8 +18,9 @@ North-rule mechanics and where they live:
   sees ``epoch <= watermark`` and is skipped. Reference gap this
   fixes: blind ``overwrite`` sink (DBpediaTKGExtractionSpark.scala:44).
 - **resumable lineage** → per-epoch, per-bucket applied-LSN high-water
-  marks appended to a lineage LakeTable; throughput metrics rows per
-  batch (reference ThroughputMonitor/HeartbeatMonitor semantics,
+  marks, stamped into the data commit's summary and appended to a
+  lineage LakeTable; throughput metrics rows per batch (reference
+  ThroughputMonitor/HeartbeatMonitor semantics,
   utils/ThrougputMonitor.scala:5-23, log/HeartbeatMonitor.scala:11-71).
 - **failures never become deletes** → corrupt events split to a
   dead-letter LakeTable before MERGE
@@ -38,7 +39,7 @@ from __future__ import annotations
 
 import threading
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -151,7 +152,6 @@ class PipelineConfig:
     #: resumed store silently reverts to full-snapshot uploads and
     #: loses the O(batch) commit cost.
     state_store: str = "hdfs"
-    extra: dict = field(default_factory=dict)
 
 
 class TranscriptCdcPipeline:
@@ -290,7 +290,15 @@ class TranscriptCdcPipeline:
                 table,
                 flagged.filter(~F.col("_dead")).drop("_dead", "_b"),
                 KEY_COLS,
-                summary={"stream_id": self.cfg.stream_id, "epoch": epoch_id, "n_events": n_ok},
+                # the epoch's bookkeeping rides the data commit, so a
+                # fenced replay can re-emit it exactly (_ensure_side_rows)
+                summary={
+                    "stream_id": self.cfg.stream_id,
+                    "epoch": epoch_id,
+                    "n_events": n_ok,
+                    "n_dead": n_dead,
+                    "lineage": lineage_rows,
+                },
                 watermarks_update={self.cfg.stream_id: epoch_id},
                 touched_buckets=touched,
                 tombstone_gc_below_lsn=gc_below,
@@ -366,8 +374,11 @@ class TranscriptCdcPipeline:
 
     def _ensure_side_rows(self, epoch_id: int) -> None:
         """Idempotent catch-up when a batch replay was fenced: if the
-        crash hit between lake commit and side-table append, re-derive
-        the lineage for that epoch from the commit summary."""
+        crash hit between lake commit and side-table append, re-emit
+        the epoch's lineage and counts from its data commit's summary.
+        The walk goes back from the head and stops at the epoch's
+        commit (or an older epoch of this stream), so its cost does
+        not grow with table history."""
         lin = LakeTable.load(self.spark, self.lineage_root)
         present = (
             lin.read()
@@ -377,15 +388,19 @@ class TranscriptCdcPipeline:
         )
         if present:
             return
-        # find the fenced commit's summary for row counts
         table = LakeTable.load(self.spark, self.table_root)
-        n_ok = 0
-        for man in reversed(table.history()):
-            s = man.get("summary", {})
-            if s.get("stream_id") == self.cfg.stream_id and s.get("epoch") == epoch_id:
-                n_ok = s.get("n_events", 0)
+        found: dict = {}
+        for v in range(table.current_version(), 0, -1):
+            s = table.manifest(v).get("summary", {})
+            if s.get("stream_id") != self.cfg.stream_id or "epoch" not in s:
+                continue  # other writers, schema evolution, compaction
+            if s["epoch"] == epoch_id:
+                found = s
+            if s["epoch"] <= epoch_id:
                 break
-        self._append_side_rows(epoch_id, [], n_ok, 0, 0.0)
+        self._append_side_rows(
+            epoch_id, found.get("lineage", []), found.get("n_events", 0), found.get("n_dead", 0), 0.0
+        )
 
     # ---------------------------------------------------------- running
     def _stream_reader(self, wal_schema: T.StructType) -> DataFrame:

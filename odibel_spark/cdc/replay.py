@@ -6,16 +6,15 @@ engine (cdc/pipeline.py) must converge to the same table; tests compare
 the two with the full-outer-join diff (operators/diff.py), the
 reference's own correctness idiom (eval/SnapshotEval.scala:132-160).
 
-Scale shape: one hash shuffle on (conv_id, turn_idx) for the window
-fold — the minimum possible for a keyed reduction — and the duplicate
-drop rides the same partitioning (dropDuplicates on a superset of the
-window keys is merged into the same exchange by Catalyst). No Python
-UDFs anywhere.
+Scale shape: one hash shuffle on (conv_id, turn_idx) for the
+``max_by`` fold — the minimum possible for a keyed reduction — with
+map-side partial aggregation, so exact duplicates collapse before the
+exchange. No Python UDFs anywhere.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 EVENT_OPS = ("insert", "update", "delete")
@@ -56,8 +55,6 @@ def last_writer_wins(
     events: DataFrame,
     key_cols: list[str] | None = None,
     lsn_col: str = "lsn",
-    *,
-    tie_break: list[str] | None = None,
 ) -> DataFrame:
     """Reduce a WAL to one winning event per key: the event with the
     highest LSN (exact duplicates collapse first — LSNs are unique per
@@ -78,16 +75,6 @@ def last_writer_wins(
     """
     keys = key_cols or KEY_COLS
     others = [c for c in events.columns if c not in keys]
-    if tie_break:
-        # caller needs an order beyond the LSN (non-unique versions):
-        # fall back to the explicit window sort
-        w = Window.partitionBy(*keys).orderBy(F.col(lsn_col).desc(), *tie_break)
-        return (
-            events.dropDuplicates([*keys, lsn_col])
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
     winner = F.max_by(F.struct(*[F.col(c) for c in others]), F.col(lsn_col)).alias("_w")
     folded = events.groupBy(*[F.col(k) for k in keys]).agg(winner)
     return folded.select(*keys, *[F.col(f"_w.{c}").alias(c) for c in others])

@@ -2,7 +2,6 @@ from odibel_spark.lake.table import BucketSpec, LakeTable, CommitConflict  # noq
 from odibel_spark.lake.merge import (  # noqa: F401
     cdc_table_schema,
     compact_buckets,
-    compact_tombstones,
     create_cdc_table,
     merge_upsert,
 )

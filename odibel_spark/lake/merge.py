@@ -14,9 +14,9 @@ t.applied_lsn` merge):
   payload NULL, ``_lsn`` = delete LSN). Without tombstones, a stale
   out-of-order update arriving in a *later* batch would resurrect the
   deleted key — the LSN fence must outlive the row. Tombstones are
-  hidden by ``LakeTable.read`` and garbage-collected by
-  ``compact_tombstones`` once the stream's low-watermark LSN passes
-  them;
+  hidden by ``LakeTable.read`` and garbage-collected by the
+  ``tombstone_gc_below_lsn`` filter of ``merge_upsert`` and
+  ``compact_buckets`` once the stream's low-watermark LSN passes them;
 - a corrupt/failed event must be dead-lettered *before* calling this
   (reference policy: failures never become deletes,
   DBpediaTKGExtraction.scala:174-195).
@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from odibel_spark.lake.table import BucketSpec, LakeTable
+from odibel_spark.lake.table import BucketSpec, CommitConflict, LakeTable, lww_fold
 
 LSN_FIELD = "_lsn"
 DELETED_FIELD = "_deleted"
@@ -185,18 +185,9 @@ def merge_upsert(
                 "_salt", F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(write_salt))
             )
             part_cols.append("_salt")
-        n_parts = spec.buckets * write_salt
+        winners = src.repartition(spec.buckets * write_salt, *part_cols)
         if fold:
-            src = src.repartition(n_parts, *part_cols)
-            others = [c for c in src.columns if c not in (*key_cols, *part_cols)]
-            winner = F.max_by(F.struct(*[F.col(c) for c in others]), F.col(lsn_col)).alias("_w")
-            winners = (
-                src.groupBy(*part_cols, *key_cols)
-                .agg(winner)
-                .select(*part_cols, *key_cols, *[F.col(f"_w.{c}").alias(c) for c in others])
-            )
-        else:
-            winners = src.repartition(n_parts, *part_cols)
+            winners = lww_fold(winners, [*part_cols, *key_cols], lsn_col)
         out_cols = [F.col("_bucket"), *[F.col(c) for c in key_cols]]
         is_del = F.col(op_col) == delete_op
         for c in payload_cols:
@@ -300,8 +291,6 @@ def compact_buckets(
     idempotent, so the retry is free of side effects. Raises
     :class:`~odibel_spark.lake.table.CommitConflict` after ``retries``
     lost races (a busy stream; rerun between drains)."""
-    from odibel_spark.lake.table import CommitConflict
-
     spec = table.bucket_spec()
     if spec is None:
         raise ValueError("compact_buckets requires a bucketed table")
@@ -313,13 +302,7 @@ def compact_buckets(
     for attempt in range(retries):
         base_version = table.current_version()
         raw = table.read(version=base_version, buckets=target, include_tombstones=True, fold=False)
-        others = [c for c in raw.columns if c not in keys]
-        winner = F.max_by(F.struct(*[F.col(c) for c in others]), F.col(LSN_FIELD)).alias("_w")
-        folded = (
-            raw.groupBy(*[F.col(k) for k in keys])
-            .agg(winner)
-            .select(*keys, *[F.col(f"_w.{c}").alias(c) for c in others])
-        )
+        folded = lww_fold(raw, keys, LSN_FIELD)
         if tombstone_gc_below_lsn is not None:
             folded = folded.filter(
                 ~(F.coalesce(F.col(DELETED_FIELD), F.lit(False)) & (F.col(LSN_FIELD) < F.lit(tombstone_gc_below_lsn)))
@@ -333,18 +316,3 @@ def compact_buckets(
             if attempt == retries - 1:
                 raise
     raise CommitConflict("unreachable")
-
-
-def compact_tombstones(table: LakeTable, below_lsn: int) -> dict:
-    """Standalone tombstone GC: rewrite every bucket dropping tombstones
-    whose fence LSN is safely below the stream low-watermark. Pinned to
-    the snapshot it reads — a concurrent merge aborts the commit rather
-    than losing rows (rerun between drains)."""
-    spec = table.bucket_spec()
-    base_version = table.current_version()
-    df = table.read(version=base_version, include_tombstones=True)
-    keep = df.filter(~(F.col(DELETED_FIELD) & (F.col(LSN_FIELD) < F.lit(below_lsn))))
-    all_buckets = set(range(spec.buckets))
-    return table.replace_buckets(
-        all_buckets, keep, op="compact-tombstones", base_version=base_version
-    )

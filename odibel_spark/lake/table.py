@@ -82,6 +82,22 @@ class BucketSpec:
         return BucketSpec(d["column"], d["buckets"]) if d else None
 
 
+def lww_fold(df: DataFrame, group_cols: list[str], order_col: str) -> DataFrame:
+    """Last-writer-wins fold: one row per ``group_cols`` group, carrying
+    the other columns of the row with the highest ``order_col``. One
+    hash aggregation with map-side partial ``max_by``, no sort. The
+    lake's single LWW fold: the MoR merge pre-fold (grouped on
+    ``_bucket[, _salt]`` + keys, so the layout exchange also serves the
+    aggregation), compaction and the read-time fold all call it."""
+    others = [c for c in df.columns if c not in group_cols]
+    winner = F.max_by(F.struct(*[F.col(c) for c in others]), F.col(order_col)).alias("_w")
+    return (
+        df.groupBy(*group_cols)
+        .agg(winner)
+        .select(*group_cols, *[F.col(f"_w.{c}").alias(c) for c in others])
+    )
+
+
 def _stats_encode(v):
     """Footer min/max value → JSON-safe manifest form. Datetimes and
     decimals keep their type through a tagged dict (plain strings
@@ -578,7 +594,7 @@ class LakeTable:
                     f"v{man['summary'].get('rollback_of')}); incremental "
                     "consumers must re-sync from a snapshot read"
                 )
-            if op in ("compact", "compact-tombstones"):
+            if op == "compact":
                 continue  # physical rewrite, logical no-op
             prev = (
                 {f["path"] for f in self.manifest(v - 1)["files"]} if v > 1 else set()
@@ -692,13 +708,7 @@ class LakeTable:
             keys = props.get("merge_keys")
             if not keys:
                 raise ValueError("mor fold requested but table has no merge_keys property")
-            others = [c for c in df.columns if c not in keys]
-            winner = F.max_by(F.struct(*[F.col(c) for c in others]), F.col("_lsn")).alias("_w")
-            df = (
-                df.groupBy(*[F.col(k) for k in keys])
-                .agg(winner)
-                .select(*keys, *[F.col(f"_w.{c}").alias(c) for c in others])
-            )
+            df = lww_fold(df, keys, "_lsn")
         if "_deleted" in schema.fieldNames() and not include_tombstones:
             df = df.filter(~F.coalesce(F.col("_deleted"), F.lit(False))).drop("_deleted")
         if with_bucket_col:

@@ -14,7 +14,6 @@ from odibel_spark.lake import (
     CommitConflict,
     LakeTable,
     cdc_table_schema,
-    compact_tombstones,
     create_cdc_table,
     merge_upsert,
 )
@@ -136,8 +135,12 @@ def test_tombstone_fences_stale_update_and_compaction(spark, tmpdir_path):
     assert [r.text for r in t.read().collect()] == ["alive"]
 
     # tombstone GC once low-watermark passes
-    merge_upsert(t, spark.createDataFrame([(20, "delete", "c1", 0, None, None, None, None)], ev_schema), KEYS)
-    compact_tombstones(t, below_lsn=100)
+    merge_upsert(
+        t,
+        spark.createDataFrame([(20, "delete", "c1", 0, None, None, None, None)], ev_schema),
+        KEYS,
+        tombstone_gc_below_lsn=100,
+    )
     assert t.read(include_tombstones=True).count() == 0
 
 

@@ -111,6 +111,13 @@ def test_exactly_once_under_crash_restart(spark, wal_dir, tmpdir_path):
         if m["summary"].get("epoch") == 1 and m["summary"].get("op", "merge") == "merge"
     ]
     assert len(merges_e1) == 1, "epoch 1 must be applied exactly once"
+    # ... with exact lineage: the rows re-emitted after the fence carry
+    # the buckets and LSN bounds stamped into epoch 1's data commit
+    e1 = merges_e1[0]["summary"]
+    lin_rows = sorted((r.bucket, r.n_events, r.min_lsn, r.max_lsn) for r in lin.collect())
+    assert [b for b, *_ in lin_rows] == e1["touched_buckets"] and lin_rows == sorted(
+        (r["bucket"], r["n_events"], r["min_lsn"], r["max_lsn"]) for r in e1.get("lineage", [])
+    ), f"fenced epoch lineage {lin_rows} != data commit {e1.get('lineage')}"
 
 
 def test_mid_stream_schema_evolution_restart(spark, tmpdir_path):

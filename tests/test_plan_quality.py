@@ -62,10 +62,9 @@ def test_lww_fold_single_shuffle_with_partial_agg(spark, sf_dir):
 
 def test_mor_merge_single_exchange(spark, tmpdir_path):
     """The fused MoR claim: fold + bucket layout share one exchange.
-    Captured from the physical plan of the exact DataFrame the merge
-    writes (replicated here with the same construction)."""
-    from odibel_spark.lake.merge import cdc_table_schema
-    from odibel_spark.lake.table import BucketSpec
+    The plan is built with the merge's own fold helper over the same
+    bucket repartition, grouped on (_bucket, *keys) as the merge does."""
+    from odibel_spark.lake.table import BucketSpec, lww_fold
 
     src = spark.createDataFrame(
         [(1, "insert", "c1", 0, "user", "hi", None, None)],
@@ -73,10 +72,7 @@ def test_mor_merge_single_exchange(spark, tmpdir_path):
     )
     spec = BucketSpec("conv_id", 8)
     pre = src.withColumn("_bucket", spec.expr()).repartition(8, "_bucket")
-    others = [c for c in pre.columns if c not in ("conv_id", "turn_idx", "_bucket")]
-    winner = F.max_by(F.struct(*[F.col(c) for c in others]), F.col("lsn")).alias("_w")
-    folded = pre.groupBy("_bucket", "conv_id", "turn_idx").agg(winner)
-    p = plan(folded)
+    p = plan(lww_fold(pre, ["_bucket", "conv_id", "turn_idx"], "lsn"))
     assert count_exchanges(p) == 1, (
         "bucket repartition must satisfy the groupBy distribution — a second "
         "exchange means Catalyst stopped accepting the bucket partitioning"

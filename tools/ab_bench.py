@@ -16,18 +16,18 @@ Usage:
     python tools/ab_bench.py trigger_posture [--events 1000000] [--reps 3]
     python tools/ab_bench.py lsh_mass_dup    [--copies 20000] [--reps 3]
     python tools/ab_bench.py lsh_clean_corpus [--docs 20000] [--reps 3]
-    python tools/ab_bench.py shingle_tokenize [--docs 20000] [--words 50] [--reps 3]
-    python tools/ab_bench.py infer_filter_pushdown [--docs 20000] [--words 200] [--reps 3]
-    python tools/ab_bench.py profile_cse [--docs 20000] [--words 120] [--reps 3]
-    python tools/ab_bench.py kmeans_divide [--docs 200000] [--reps 3]   (--docs = vector count)
     python tools/ab_bench.py stream_dedup [--events 1000000] [--reps 3]
     python tools/ab_bench.py state_store     [--events 1000000] [--reps 3]
     python tools/ab_bench.py state_store_pressure --events 8000000 --heap 2g --timeout 2100
         (argparse defaults are 1M/1g/900 — too light for the heap arm
         to OOM; the recorded artifact's invocation is the line above)
-    python tools/ab_bench.py triples_cache [--reps 3]   (negative result, kept on purpose)
     python tools/ab_bench.py cluster_layout [--events 2000000] [--reps 3]   (--events = row count)
     python tools/ab_bench.py compact_cluster [--events 4000000] [--reps 3]  (--events = row count)
+
+Modes whose decision is closed are retired from the tool; their
+recorded artifacts stay under BENCH/ as the record
+(ab_shingle_tokenize_w*.json, ab_infer_filter_pushdown.json,
+ab_profile_cse.json, ab_kmeans_divide.json, ab_triples_cache.json).
 """
 
 from __future__ import annotations
@@ -415,199 +415,6 @@ def ab_state_store_pressure(events: int, heap: str, cpus: int, timeout_s: int) -
         shutil.rmtree(base, ignore_errors=True)
 
 
-def ab_shingle_tokenize(spark, docs_n: int, reps: int, words_n: int = 50) -> None:
-    """r4 shingle-stage rewrite: tokenizing INSIDE the transform lambda
-    re-evaluates the regex-normalize + split once per array ELEMENT
-    (Catalyst does not hoist non-attribute lambda captures), i.e.
-    O(words × doc_len) string work per document; materializing the
-    words array in its own projection first (_split_words) makes each
-    lambda call an O(1) attribute reference. Both arms produce the
-    identical distinct (id, shingle) set; the word count per doc (~50)
-    bounds the expected ratio."""
-    import pyspark.sql.functions as F
-
-    from odibel_spark.functions.dedup import _shingles_from_words, _split_words
-    from odibel_spark.functions.text import normalized_text
-
-    words = F.transform(
-        F.sequence(F.lit(1), F.lit(words_n)),
-        lambda j: F.substring(
-            F.md5(F.concat(F.col("id").cast("string"), F.lit("_"), j.cast("string"))), 1, 6
-        ),
-    )
-    docs = (
-        spark.range(docs_n)
-        .select(F.col("id").alias("doc_id"), F.concat_ws(" ", words).alias("text"))
-        .repartition(16)
-    )
-    docs.cache().count()
-
-    def run_inline():  # pre-r4 shape: tokenize captured by the lambda
-        toks = F.split(normalized_text(F.col("text")), r"\s+")
-        idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - 3 + 1, F.lit(1)))
-        arr = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, 3)))
-        sh = (
-            docs.select(F.col("doc_id"), F.explode(arr).alias("shingle"))
-            .filter(F.length("shingle") > 0)
-            .distinct()
-        )
-        materialize(sh.agg(F.count("*").alias("n")))
-
-    def run_materialized():  # r4 shape: words array projected first
-        sh = (
-            docs.select(F.col("doc_id"), _split_words(F.col("text")).alias("_w"))
-            .select(F.col("doc_id"), F.explode(_shingles_from_words(F.col("_w"), 3)).alias("shingle"))
-            .filter(F.length("shingle") > 0)
-            .distinct()
-        )
-        materialize(sh.agg(F.count("*").alias("n")))
-
-    try:
-        run_ab(
-            f"shingle_tokenize_w{words_n}", spark,
-            {"inline_tokenize": run_inline, "materialized_words": run_materialized},
-            reps,
-            {"docs": docs_n, "words_per_doc": words_n,
-             "note": "distinct 3-gram shingle build, identical output both arms; "
-                     "speedup_b_vs_a = cost of re-tokenizing per transform element "
-                     "vs one materialized words projection per row"},
-        )
-    finally:
-        docs.unpersist()
-
-
-def ab_infer_filter_pushdown(spark, docs_n: int, reps: int, words_n: int = 50) -> None:
-    """r4 decontamination fix #2: exploding the aliased shingle-array
-    ATTRIBUTE makes InferFiltersFromGenerate add size(arr)>0 under the
-    Generate, and predicate pushdown substitutes the alias chain into
-    the scan Filter — re-inlining the whole shingle build (per-element
-    tokenize included) once per corpus row. _explode_no_infer wraps the
-    attribute in array_compact so the rule declines to infer. Both arms
-    run the full benchmark_contamination shape on the same corpus."""
-    import pyspark.sql.functions as F
-
-    from odibel_spark.functions.dedup import (
-        _explode_no_infer,
-        _shingles_from_words,
-        _split_words,
-        word_shingles,
-    )
-
-    words = F.transform(
-        F.sequence(F.lit(1), F.lit(words_n)),
-        lambda j: F.substring(
-            F.md5(F.concat((F.col("id") % 499).cast("string"), F.lit("_"), j.cast("string"))), 1, 6
-        ),
-    )
-    docs = (
-        spark.range(docs_n)
-        .select(F.col("id").alias("doc_id"), F.concat_ws(" ", words).alias("text"))
-        .repartition(16)
-    )
-    docs.cache().count()
-    corpus = docs.filter(F.col("doc_id") % 50 != 0)
-    bench = docs.filter(F.col("doc_id") % 50 == 0).select(
-        F.col("doc_id").alias("_bid"), "text"
-    )
-
-    def contamination(explode_shape) -> None:
-        valid = F.filter(
-            F.array_distinct(_shingles_from_words(F.col("_w"), 3)),
-            lambda sh: F.length(sh) > 0,
-        )
-        d_sh = (
-            corpus.select(F.col("doc_id"), _split_words(F.col("text")).alias("_w"))
-            .select(F.col("doc_id"), valid.alias("_sh"))
-            .select(
-                F.col("doc_id"),
-                F.size("_sh").alias("doc_shingles"),
-                explode_shape(F.col("_sh")).alias("shingle"),
-            )
-        )
-        b_sh = F.broadcast(word_shingles(bench, "_bid", "text", 3))
-        out = (
-            d_sh.join(b_sh, "shingle")
-            .groupBy("doc_id", "_bid")
-            .agg(F.count("*").alias("n_shared"))
-            .filter(F.col("n_shared") >= 3)
-        )
-        materialize(out.agg(F.count("*").alias("n")))
-
-    try:
-        run_ab(
-            "infer_filter_pushdown", spark,
-            {
-                "attr_explode": lambda: contamination(F.explode),
-                "no_infer_explode": lambda: contamination(_explode_no_infer),
-            },
-            reps,
-            {"docs": docs_n, "words_per_doc": words_n,
-             "note": "benchmark_contamination shape, identical output both arms; "
-                     "attr_explode lets InferFiltersFromGenerate re-inline the shingle "
-                     "build into the scan Filter, no_infer_explode suppresses it"},
-        )
-    finally:
-        docs.unpersist()
-
-
-def ab_profile_cse(spark, docs_n: int, reps: int, words_n: int = 120) -> None:
-    """r5 text-profile rewrite: codegen subexpression elimination does
-    not dedupe higher-order-function subtrees, so the naive composition
-    of stopword_ratio + quality_score + language_id + token_count over
-    one text column re-tokenizes the document once per metric (~50
-    regexp/split plan nodes). profile_documents materializes tokens()
-    in one inner projection. Both arms produce the identical rows
-    (pinned by test_text_profile_materializes_tokens_once)."""
-    import pyspark.sql.functions as F
-
-    from odibel_spark.functions import text as X
-
-    words = F.transform(
-        F.sequence(F.lit(1), F.lit(words_n)),
-        lambda j: F.substring(
-            F.md5(F.concat(F.col("id").cast("string"), F.lit("_"), j.cast("string"))), 1, 6
-        ),
-    )
-    docs = (
-        spark.range(docs_n)
-        .select(F.col("id").cast("string").alias("doc_id"), F.concat_ws(" ", words).alias("text"))
-        .repartition(16)
-    )
-    docs.cache().count()
-
-    def run_naive() -> None:
-        materialize(
-            docs.select(
-                "doc_id",
-                X.token_count(F.col("text")).alias("n_tokens"),
-                X.bpe_ish_token_count(F.col("text")).alias("n_bpe_tokens"),
-                F.length("text").alias("n_chars_actual"),
-                X.punct_ratio(F.col("text")).alias("punct_ratio"),
-                X.stopword_ratio(F.col("text")).alias("stopword_ratio"),
-                X.quality_score(F.col("text")).alias("quality"),
-                X.language_id(F.col("text")).alias("lang_pred"),
-                X.document_fingerprint(F.col("text")).alias("fp"),
-            )
-        )
-
-    def run_materialized() -> None:
-        materialize(X.profile_documents(docs, "doc_id", "text"))
-
-    try:
-        run_ab(
-            "profile_cse", spark,
-            {"naive_composition": run_naive, "materialized_tokens": run_materialized},
-            reps,
-            {"docs": docs_n, "words_per_doc": words_n,
-             "note": "full text-analysis profile, identical output both arms; "
-                     "naive re-derives the tokens() HOF subtree per metric (codegen "
-                     "CSE skips lambda-bearing subtrees), materialized projects the "
-                     "token array once and derives every metric from the attribute"},
-        )
-    finally:
-        docs.unpersist()
-
-
 def ab_stream_dedup(spark, events: int, reps: int) -> None:
     """Informational: the cost of the in-stream watermarked dedup
     stage inside the criterion pipeline. The LSN-fenced MERGE already
@@ -659,122 +466,6 @@ def ab_stream_dedup(spark, events: int, reps: int) -> None:
         assert len(set(counts.values())) == 1, f"arms diverged: {counts}"
     finally:
         shutil.rmtree(base, ignore_errors=True)
-
-
-def ab_kmeans_divide(spark, vecs_n: int, reps: int, k: int = 64, dim: int = 64) -> None:
-    """r5 k-means assignment rewrite: the divided vector materialized
-    once as its own column vs the pre-r5 inline shape whose HOF divide
-    transform re-evaluated once per CENTER per row (k x O(dim)
-    interpreted work). Assignments are bit-equal (pinned by
-    test_kmeans_assign_broadcast_matches_literal and the equality
-    check inside this bench)."""
-    import pyspark.sql.functions as F
-
-    from odibel_spark.functions.kmeans import _quantize, kmeans_assign
-
-    emb = spark.range(vecs_n).select(
-        F.col("id").alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(dim)),
-            lambda j: ((F.col("id") * j) % 97).cast("double") / 7.0,
-        ).alias("embedding"),
-    )
-    emb.cache().count()
-    centers = [[float((i * j) % 13) for j in range(dim)] for i in range(k)]
-
-    def inline_divide():  # pre-r5 shape, reconstructed
-        dv = F.transform(_quantize(F.col("embedding"), 1000), lambda q: q / F.lit(1000.0))
-        cands = []
-        for j, cen in enumerate(centers):
-            lit_c = F.array(*[F.lit(float(c)) for c in cen])
-            d = F.aggregate(
-                F.zip_with(dv, lit_c, lambda x, c: (x - c) * (x - c)),
-                F.lit(0.0), lambda s, v: s + v,
-            )
-            cands.append(F.struct(d.alias("d"), F.lit(j).alias("j")))
-        return emb.withColumn("cluster", F.array_min(F.array(*cands))["j"])
-
-    def run_inline() -> None:
-        materialize(inline_divide())
-
-    def run_materialized() -> None:
-        materialize(kmeans_assign(emb, centers, "vec_id", "embedding", method="literal"))
-
-    # bit-equality of the two arms, asserted once before timing
-    a = inline_divide().select("vec_id", "cluster")
-    b = kmeans_assign(emb, centers, "vec_id", "embedding", method="literal").select("vec_id", "cluster")
-    if a.exceptAll(b).count() or b.exceptAll(a).count():
-        raise AssertionError("arms disagree — refusing to record a perf artifact")
-
-    try:
-        run_ab(
-            "kmeans_divide", spark,
-            {"inline_divide": run_inline, "materialized_divide": run_materialized},
-            reps,
-            {"vectors": vecs_n, "k": k, "dim": dim,
-             "note": "literal-path k-means assignment, bit-equal arms (checked in-run); "
-                     "inline_divide re-evaluates the quantize+divide HOF transform once "
-                     "per center per row (codegen CSE skips lambda subtrees), "
-                     "materialized_divide projects it once and folds distances over the "
-                     "attribute"},
-        )
-    finally:
-        emb.unpersist()
-
-
-def ab_triples_cache(spark, reps: int, sf_dir: str) -> None:
-    """Negative result, recorded on purpose: Spark-cache()ing the
-    derived triple table that q_sample_suite's three samplers (and
-    q_schema_graph_rollup's typing joins) each reference ~3x is a
-    PESSIMIZATION, not a win. The derivation is pure codegen column
-    arithmetic over a page-cached parquet scan — recomputing it per
-    branch is cheaper than materializing InMemoryRelation batches
-    inside the one timed action (cache build serializes the first
-    stage and pays the memory-copy tax). A naive sequential probe had
-    shown a 4x "win" that was entirely JIT/page-cache warmup order —
-    the exact confound BENCH/BASELINE.md's interleaved-only ground
-    rule exists for. Kept as the auditable reason the registry queries
-    stay uncached."""
-    import sys as _sys
-
-    _sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
-    import __spark_entry__ as E
-    from odibel_spark.functions.dedup import clear_dedup_caches, _cache_scoped
-    from odibel_spark.operators.sampling import (
-        sample_entities_all_types,
-        sample_entities_by_type_targets,
-        sample_entities_global,
-    )
-    from pyspark.sql import functions as F
-
-    def suite(t) -> None:
-        parts = [
-            ("global", sample_entities_global(t, sample_size=40, related_per_seed=3, seed=13)),
-            ("targets", sample_entities_by_type_targets(t, E._TYPE_TARGETS, related_per_seed=2, seed=7)),
-            ("all_types", sample_entities_all_types(t, target_per_type=4, related_per_seed=2, seed=5)),
-        ]
-        out = None
-        for mode, df in parts:
-            tagged = df.select(F.lit(mode).alias("mode"), "s", "p", "o", "isLiteral")
-            out = tagged if out is None else out.unionByName(tagged)
-        materialize(out)
-
-    def triples():
-        return E._events_triples(E._t(spark, sf_dir, "events"))
-
-    def run_cached() -> None:
-        suite(_cache_scoped(triples()))
-        clear_dedup_caches()  # each cell rebuilds the cache, like a cold query
-
-    run_ab(
-        "triples_cache", spark,
-        {"recompute_per_branch": lambda: suite(triples()), "cached_triples": run_cached},
-        reps,
-        {"sf_dir": sf_dir,
-         "note": "sample_suite body; cached arm clears its cache per cell so every "
-                 "cell pays the in-action cache build, matching the registry query's "
-                 "cold-run context"},
-    )
 
 
 def ab_cluster_layout(spark, rows_n: int, reps: int) -> None:
@@ -869,9 +560,11 @@ def ab_compact_cluster(spark, rows_n: int, reps: int) -> None:
     table (where files must stay one-bucket, so manifest-level file
     skipping can't narrow a hot-conv + LSN-slice probe — the win has
     to come from parquet ROW-GROUP stats). Same data compacted twice:
-    plain fold vs fold + cluster_by=("_lsn",). Both layouts are
-    conv-sorted (the bucket-column sort is unconditional), so the
-    delta isolates the _lsn clustering within each conv run. The
+    plain fold vs fold + cluster_by=("_lsn",). An unclustered rewrite
+    sorts on the int _bucket alone, so the fold_only arm is NOT
+    conv-sorted, while cluster_by=("_lsn",) sorts each bucket file on
+    (conv_id, _lsn): the delta measures the whole (conv_id, _lsn)
+    cluster layout, not the _lsn clustering alone. The
     deterministic metric is row groups whose footer stats overlap
     `conv_id = <hot> AND _lsn BETWEEN lo,hi` — exactly what Spark's
     pushed-down filter prunes at scan time; wall cells measure the
@@ -968,8 +661,10 @@ def ab_compact_cluster(spark, rows_n: int, reps: int) -> None:
              "row_groups": groups,
              "compact_wall_s": t_compact,
              "note": "row_groups is the noise-free metric: identical folded data, "
-                     "identical file count, only within-file row order differs; both "
-                     "arms are conv-sorted so the delta isolates cluster_by=('_lsn',)"},
+                     "identical file count, only within-file row order differs; the "
+                     "fold_only arm is sorted on _bucket alone (not conv-sorted), so the "
+                     "delta measures the whole (conv_id, _lsn) cluster layout that "
+                     "cluster_by=('_lsn',) writes, not _lsn clustering alone"},
         )
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -977,16 +672,13 @@ def ab_compact_cluster(spark, rows_n: int, reps: int) -> None:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("which", choices=["trigger_posture", "lsh_mass_dup", "lsh_clean_corpus", "shingle_tokenize", "infer_filter_pushdown", "profile_cse", "kmeans_divide", "stream_dedup", "state_store", "state_store_pressure", "triples_cache", "cluster_layout", "compact_cluster"])
+    ap.add_argument("which", choices=["trigger_posture", "lsh_mass_dup", "lsh_clean_corpus", "stream_dedup", "state_store", "state_store_pressure", "cluster_layout", "compact_cluster"])
     ap.add_argument("--events", type=int, default=1_000_000)
     ap.add_argument("--copies", type=int, default=20_000,
                     help="lsh_mass_dup: total documents (50 distinct contents)")
     ap.add_argument("--docs", type=int, default=20_000,
                     help="lsh_clean_corpus: all-distinct document count")
     ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--words", type=int, default=None,
-                    help="words per synthetic document (mode defaults: "
-                         "shingle_tokenize 50, infer_filter_pushdown 200, profile_cse 120)")
     ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     ap.add_argument("--heap", default="1g",
                     help="state_store_pressure: child-JVM heap (SPARK_GRAFT_DRIVER_MEM)")
@@ -1011,24 +703,14 @@ def main() -> int:
         ab_trigger_posture(spark, args.events, args.reps)
     elif args.which == "lsh_clean_corpus":
         ab_lsh_clean_corpus(spark, args.docs, args.reps)
-    elif args.which == "shingle_tokenize":
-        ab_shingle_tokenize(spark, args.docs, args.reps, args.words or 50)
     elif args.which == "stream_dedup":
         ab_stream_dedup(spark, args.events, args.reps)
-    elif args.which == "kmeans_divide":
-        ab_kmeans_divide(spark, args.docs, args.reps)
-    elif args.which == "profile_cse":
-        ab_profile_cse(spark, args.docs, args.reps, args.words or 120)
-    elif args.which == "infer_filter_pushdown":
-        ab_infer_filter_pushdown(spark, args.docs, args.reps, args.words or 200)
     elif args.which == "state_store":
         ab_state_store(spark, args.events, args.reps)
     elif args.which == "cluster_layout":
         ab_cluster_layout(spark, args.events, args.reps)
     elif args.which == "compact_cluster":
         ab_compact_cluster(spark, args.events, args.reps)
-    elif args.which == "triples_cache":
-        ab_triples_cache(spark, args.reps, os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     else:
         ab_lsh_mass_dup(spark, args.copies, args.reps)
     spark.stop()

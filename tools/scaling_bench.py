@@ -46,6 +46,31 @@ import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BASELINE_PATH = os.path.join(REPO, "BENCH", "BASELINE.md")
+#: BASELINE.md's criterion block is regenerated, but the file also
+#: carries hand-written trailing sections (artifact catalog, variance
+#: appendix, drift adjudications) that start at this heading
+PRESERVE_MARKER = "## Cross-round comparability artifacts"
+
+
+def preserved_tail(path: str) -> str:
+    """The hand-written sections of an existing BASELINE.md, from the
+    marker heading on, to re-append after the regenerated block. A
+    non-empty file without the marker is refused (non-zero exit)
+    rather than overwritten, which would drop its hand-written text."""
+    if not os.path.exists(path):
+        return ""
+    with open(path) as f:
+        prev = f.read()
+    if PRESERVE_MARKER in prev:
+        return "\n" + prev[prev.index(PRESERVE_MARKER):]
+    if prev.strip():
+        raise SystemExit(
+            f"refusing to overwrite {path}: it is non-empty but has no "
+            f"{PRESERVE_MARKER!r} heading, so its hand-written sections would "
+            "be lost; restore the heading or move the file aside"
+        )
+    return ""
 
 JOB = r"""
 import sys, os, time, json
@@ -139,6 +164,7 @@ def main():
     # bookkeeping (a few constant seconds) stays well under the
     # distributed compute being measured
     mft = int(sys.argv[5]) if len(sys.argv) > 5 else 16
+    preserved_tail(BASELINE_PATH)  # refuse before hours of runs, not after
 
     shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
     base = tempfile.mkdtemp(prefix="odibel-scaling-", dir=shm)
@@ -210,17 +236,8 @@ spark.stop()
 
         mor, cow = summary["mor"], summary["cow"]
         os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-        # the criterion block is regenerated, but the file also carries
-        # hand-written trailing sections (artifact catalog, variance
-        # appendix, drift adjudications) — preserve them across reruns
-        out_path = os.path.join(REPO, "BENCH", "BASELINE.md")
-        keep = ""
-        marker = "## Cross-round comparability artifacts"
-        if os.path.exists(out_path):
-            with open(out_path) as prev_f:
-                prev = prev_f.read()
-            if marker in prev:
-                keep = "\n" + prev[prev.index(marker):]
+        out_path = BASELINE_PATH
+        keep = preserved_tail(out_path)
         # tmp + rename: a crash mid-write must never destroy the
         # hand-written sections just read from the old file
         with open(out_path + ".tmp", "w") as f:
