@@ -1,4 +1,4 @@
-"""Benchmark harness — prints ONE JSON line.
+"""Benchmark harness — prints ONE compact JSON headline line.
 
 Headline metric: sustained change-events/sec of the CDC replay path
 (the BASELINE.json north rule), measured two ways:
@@ -10,6 +10,9 @@ Headline metric: sustained change-events/sec of the CDC replay path
 plus per-query wall times for the analytics headliners at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]``.
+
+The full record goes to ``bench_result.json`` next to this file; the
+line printed last is the compact (< 2 KB) headline naming it.
 
 Scaling-efficiency evidence (N vs 4N cores) is produced by
 ``tools/scaling_bench.py`` and recorded in BENCH/BASELINE.md.
@@ -24,7 +27,10 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+#: full result record (git-ignored); stdout carries only the headline
+RESULT_PATH = os.path.join(HERE, "bench_result.json")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -304,7 +310,11 @@ def main() -> None:
         "cpu_ref_miters_multicore": round(miters_mc, 1),
         "value_per_cpu_miter_multicore": round(N_EVENTS / pipe_mor_s / miters_mc, 1),
     }
-    print(json.dumps(out))
+    with open(RESULT_PATH, "w") as f:
+        json.dump(out, f, indent=1)
+    headline = ("metric", "value", "unit", "bench_total_wall_sec",
+                "value_per_cpu_miter_fixedwork", "value_per_cpu_miter_multicore")
+    print(json.dumps({**{k: out[k] for k in headline}, "full_record": RESULT_PATH}))
     spark.stop()
 
 

@@ -29,10 +29,10 @@ North-rule mechanics and where they live:
   footers; new payload columns promoted with ``table.add_columns``;
   legacy enum variants normalized by Arrow-typed pandas UDFs
   (cdc/evolution.py).
-- **skew** → MERGE repartitions by bucket of ``conv_id``; hot keys are
-  bounded by bucket granularity and AQE skew handling; the LWW fold is
-  a window over (conv_id, turn_idx) whose cardinality, not row skew,
-  drives partition sizes.
+- **skew** → MERGE repartitions by bucket of ``conv_id``; the LWW fold
+  is a map-side-partial ``max_by`` aggregation, no sort
+  (``lake.table.lww_fold`` on MoR, ``cdc.replay.last_writer_wins`` on
+  CoW), and ``write_salt="auto"`` splits a dominant bucket's write.
 """
 
 from __future__ import annotations
@@ -205,8 +205,9 @@ class TranscriptCdcPipeline:
     # --------------------------------------------------------- the sink
     def _apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         t0 = time.time()
-        table = LakeTable.load(self.spark, self.table_root)
-        if epoch_id <= table.watermark(self.cfg.stream_id):
+        table = LakeTable(self.spark, self.table_root)
+        head = table.manifest()
+        if epoch_id <= head["watermarks"].get(self.cfg.stream_id, -1):
             # crash happened after lake commit, before checkpoint commit:
             # the batch replays — skip it (exactly-once fence), but make
             # sure its side-table rows exist (they commit after the data).
@@ -219,7 +220,7 @@ class TranscriptCdcPipeline:
 
         from odibel_spark.cdc.replay import dead_letter_predicate
 
-        spec = table.bucket_spec()
+        spec = BucketSpec.from_json(head["bucket"])
         # One materialization of the micro-batch (pins the stream-dedup
         # output — every derived job below reuses the cache instead of
         # re-executing the source scan + state-store plan), and ONE
@@ -251,7 +252,7 @@ class TranscriptCdcPipeline:
             ]
 
             if n_dead:
-                dl = LakeTable.load(self.spark, self.dead_root)
+                dl = LakeTable(self.spark, self.dead_root)
                 dead = flagged.filter(F.col("_dead")).drop("_dead", "_b")
                 out = dead.select(
                     *[
@@ -332,7 +333,7 @@ class TranscriptCdcPipeline:
         import datetime as _dt
 
         now = _dt.datetime.now(_dt.timezone.utc)
-        lin = LakeTable.load(self.spark, self.lineage_root)
+        lin = LakeTable(self.spark, self.lineage_root)
         rows = [
             {
                 "stream_id": self.cfg.stream_id,
@@ -356,7 +357,7 @@ class TranscriptCdcPipeline:
             }
         ]
         lin.append_rows(rows, summary={"epoch": epoch_id})
-        met = LakeTable.load(self.spark, self.metrics_root)
+        met = LakeTable(self.spark, self.metrics_root)
         met.append_rows(
             [
                 {
@@ -379,7 +380,7 @@ class TranscriptCdcPipeline:
         The walk goes back from the head and stops at the epoch's
         commit (or an older epoch of this stream), so its cost does
         not grow with table history."""
-        lin = LakeTable.load(self.spark, self.lineage_root)
+        lin = LakeTable(self.spark, self.lineage_root)
         present = (
             lin.read()
             .filter((F.col("stream_id") == self.cfg.stream_id) & (F.col("epoch") == epoch_id))
@@ -388,7 +389,7 @@ class TranscriptCdcPipeline:
         )
         if present:
             return
-        table = LakeTable.load(self.spark, self.table_root)
+        table = LakeTable(self.spark, self.table_root)
         found: dict = {}
         for v in range(table.current_version(), 0, -1):
             s = table.manifest(v).get("summary", {})
@@ -530,10 +531,10 @@ class TranscriptCdcPipeline:
         return LakeTable.load(self.spark, self.table_root)
 
     def dead_letters(self) -> DataFrame:
-        return LakeTable.load(self.spark, self.dead_root).read()
+        return LakeTable(self.spark, self.dead_root).read()
 
     def lineage(self) -> DataFrame:
-        return LakeTable.load(self.spark, self.lineage_root).read()
+        return LakeTable(self.spark, self.lineage_root).read()
 
     def metrics(self) -> DataFrame:
-        return LakeTable.load(self.spark, self.metrics_root).read()
+        return LakeTable(self.spark, self.metrics_root).read()

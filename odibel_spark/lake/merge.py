@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from odibel_spark.lake.table import BucketSpec, CommitConflict, LakeTable, lww_fold
+from odibel_spark.lake.table import BucketSpec, CommitConflict, LakeTable, _schema_of, lww_fold
 
 LSN_FIELD = "_lsn"
 DELETED_FIELD = "_deleted"
@@ -122,6 +122,9 @@ def merge_upsert(
     ``tombstone_gc_below_lsn``: tombstones with ``_lsn`` below this
     (e.g. the stream's min unapplied LSN minus the out-of-order bound)
     are dropped during the rewrite — free compaction riding the merge.
+    Merge-on-read tables ignore it: GC happens at ``compact_buckets``.
+    ``touched_buckets`` spares copy-on-write the job that finds the
+    buckets to rewrite; on merge-on-read it only detects empty batches.
 
     ``fold=False`` skips the per-batch LWW pre-fold and is valid ONLY
     on merge-on-read tables, whose ``read()`` resolves duplicate keys
@@ -145,28 +148,29 @@ def merge_upsert(
     # this module (circular at package-init time)
     from odibel_spark.cdc.replay import last_writer_wins
 
-    if not fold and table.properties().get("merge_mode") != "mor":
+    man = table.manifest()
+    mor = man.get("properties", {}).get("merge_mode") == "mor"
+    if not fold and not mor:
         raise ValueError(
             "fold=False relies on read-time LWW folding, which only merge-on-read "
             "tables perform; a copy-on-write table would silently keep duplicate-key "
             "rows. Use fold=True (the default) or a merge_mode='mor' table."
         )
 
-    spec = table.bucket_spec()
+    spec = BucketSpec.from_json(man.get("bucket"))
     if spec is None:
         raise ValueError("merge_upsert requires a bucketed table")
-    schema = table.schema()
+    schema = _schema_of(man)
     names = schema.fieldNames()
     if LSN_FIELD not in names or DELETED_FIELD not in names:
         raise ValueError(f"CDC table needs {LSN_FIELD} and {DELETED_FIELD} columns")
     payload_cols = [n for n in names if n not in (*key_cols, *SYSTEM_FIELDS)]
 
+    empty_summary = LakeTable._tagged({**(summary or {}), "empty_batch": True}, "merge")
     if touched_buckets is not None and not touched_buckets:
-        return table.commit_metadata(
-            LakeTable._tagged({**(summary or {}), "empty_batch": True}, "merge"), watermarks_update
-        )
+        return table._next_commit(man, [], empty_summary, watermarks_update)
 
-    if table.properties().get("merge_mode") == "mor":
+    if mor:
         # merge-on-read: append the folded winners as delta rows —
         # O(batch) per commit, no target read, no bucket rewrite. The
         # key's LWW resolution happens in LakeTable.read's fold; the
@@ -201,9 +205,9 @@ def merge_upsert(
             summary=summary,
             watermarks_update=watermarks_update,
             op="merge-mor",
+            _base=man,
         )
 
-    base_version = table.current_version()
     winners = last_writer_wins(source, key_cols, lsn_col) if fold else source
     winners = winners.withColumn("_sb", spec.expr())
 
@@ -216,9 +220,7 @@ def merge_upsert(
         else {r[0] for r in winners.select("_sb").distinct().collect()}
     )
     if not touched:
-        return table.commit_metadata(
-            LakeTable._tagged({**(summary or {}), "empty_batch": True}, "merge"), watermarks_update
-        )
+        return table._next_commit(man, [], empty_summary, watermarks_update)
 
     src_cols = [F.col(c) for c in key_cols]
     src_cols.append(F.col(lsn_col).alias("_s_lsn"))
@@ -231,7 +233,7 @@ def merge_upsert(
             src_cols.append(F.lit(None).cast(field.dataType).alias(f"_s_{c}"))
     src = winners.select(*src_cols)
 
-    target = table.read(version=base_version, buckets=touched, include_tombstones=True)
+    target = table.read(version=man["version"], buckets=touched, include_tombstones=True)
 
     joined = target.join(src, on=key_cols, how="full_outer")
     apply = F.col("_s_lsn").isNotNull() & (
@@ -263,7 +265,7 @@ def merge_upsert(
         summary={"touched_buckets": sorted(touched), **(summary or {})},
         watermarks_update=watermarks_update,
         write_salt=write_salt,
-        base_version=base_version,
+        base_version=man["version"],
     )
 
 
@@ -291,17 +293,16 @@ def compact_buckets(
     idempotent, so the retry is free of side effects. Raises
     :class:`~odibel_spark.lake.table.CommitConflict` after ``retries``
     lost races (a busy stream; rerun between drains)."""
-    spec = table.bucket_spec()
+    base = table.manifest()
+    spec = BucketSpec.from_json(base.get("bucket"))
     if spec is None:
         raise ValueError("compact_buckets requires a bucketed table")
     target = set(buckets) if buckets is not None else set(range(spec.buckets))
-    props = table.properties()
-    keys = props.get("merge_keys")
+    keys = base.get("properties", {}).get("merge_keys")
     if not keys:
         raise ValueError("compact_buckets needs merge_keys table property (mor table)")
     for attempt in range(retries):
-        base_version = table.current_version()
-        raw = table.read(version=base_version, buckets=target, include_tombstones=True, fold=False)
+        raw = table.read(version=base["version"], buckets=target, include_tombstones=True, fold=False)
         folded = lww_fold(raw, keys, LSN_FIELD)
         if tombstone_gc_below_lsn is not None:
             folded = folded.filter(
@@ -310,9 +311,10 @@ def compact_buckets(
         try:
             return table.replace_buckets(
                 target, folded, summary=summary, op="compact",
-                base_version=base_version, cluster_by=cluster_by,
+                base_version=base["version"], cluster_by=cluster_by,
             )
         except CommitConflict:
             if attempt == retries - 1:
                 raise
+            base = table.manifest()
     raise CommitConflict("unreachable")

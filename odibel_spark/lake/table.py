@@ -27,6 +27,11 @@ Design (Iceberg-style, metadata tiny and O(#files)):
   ``FileExistsError`` if another writer committed version *n* first
   (optimistic concurrency). Data files written before a failed commit
   are unreferenced orphans, removable by ``vacuum``.
+* **Base-manifest commits**: every public operation reads the head
+  manifest once, works only from that dict, and commits first on
+  ``base.version + 1``. Versions are dense, so a commit made since the
+  base already holds that slot and the publish fails; only then is the
+  head re-read (Iceberg's "write against base, refresh on conflict").
 * **Bucketed layout**: rows are hash-bucketed on a key column
   (reference analog: ``repartition(parts, $"pid")`` replay layout,
   FlatPageRevisionPartitioner.scala:22-24). Every data file belongs to
@@ -96,6 +101,10 @@ def lww_fold(df: DataFrame, group_cols: list[str], order_col: str) -> DataFrame:
         .agg(winner)
         .select(*group_cols, *[F.col(f"_w.{c}").alias(c) for c in others])
     )
+
+
+def _schema_of(man: dict) -> T.StructType:
+    return T.StructType.fromJson(json.loads(man["schema"]))
 
 
 def _stats_encode(v):
@@ -274,15 +283,11 @@ class LakeTable:
         os.makedirs(t.meta_dir, exist_ok=True)
         if t.current_version() is not None:
             raise FileExistsError(f"table already exists at {root}")
-        t._commit(
-            version=1,
-            files=[],
-            schema=schema,
-            bucket=bucket,
-            summary={"op": "create"},
-            watermarks={},
-            properties=properties or {},
-        )
+        t._commit({
+            "format_version": 1, "version": 1, "parent": None, "schema": schema.json(),
+            "bucket": bucket.to_json() if bucket else None, "files": [],
+            "summary": {"op": "create"}, "watermarks": {}, "properties": properties or {},
+        })
         return t
 
     @classmethod
@@ -364,7 +369,7 @@ class LakeTable:
         return lo
 
     def schema(self, version: int | None = None) -> T.StructType:
-        return T.StructType.fromJson(json.loads(self.manifest(version)["schema"]))
+        return _schema_of(self.manifest(version))
 
     def bucket_spec(self, version: int | None = None) -> BucketSpec | None:
         return BucketSpec.from_json(self.manifest(version).get("bucket"))
@@ -377,29 +382,13 @@ class LakeTable:
         fence for exactly-once foreachBatch commits."""
         return int(self.manifest().get("watermarks", {}).get(stream_id, -1))
 
-    def _commit(
-        self,
-        version: int,
-        files: list[dict],
-        schema: T.StructType,
-        bucket: BucketSpec | None,
-        summary: dict,
-        watermarks: dict,
-        parent: int | None = None,
-        properties: dict | None = None,
-    ) -> dict:
+    def _commit(self, man: dict) -> dict:
+        """Publish ``man`` (stamped with commit time and row count)."""
+        version = man["version"]
         man = {
-            "format_version": 1,
-            "version": version,
-            "parent": parent,
+            **man,
             "committed_at_ms": int(time.time() * 1000),
-            "schema": schema.json(),
-            "bucket": bucket.to_json() if bucket else None,
-            "files": files,
-            "row_count": sum(f["rows"] for f in files),
-            "summary": summary,
-            "watermarks": watermarks,
-            "properties": properties or {},
+            "row_count": sum(f["rows"] for f in man["files"]),
         }
         os.makedirs(self.meta_dir, exist_ok=True)
         tmp = os.path.join(self.meta_dir, f".tmp-{uuid.uuid4().hex}.json")
@@ -420,15 +409,16 @@ class LakeTable:
     def _write_data_files(
         self,
         df: DataFrame,
-        version_hint: int,
-        bucket: BucketSpec | None,
+        base: dict,
         write_salt: int = 1,
         cluster_by: tuple[str, ...] = (),
         cluster_files: int | None = None,
     ) -> list[dict]:
         """Write df as immutable parquet files under data/, return file
-        descriptors. Bucketed tables cluster rows so each file belongs
-        to one bucket (partitionBy directory = bucket id).
+        descriptors; bucket spec, stats columns and version hint come
+        from ``base``, the manifest the caller commits on. Bucketed
+        tables cluster rows so each file belongs to one bucket
+        (partitionBy directory = bucket id).
 
         ``write_salt > 1`` splits each bucket's write across that many
         tasks (deterministic row-hash salt): a hot conversation that
@@ -464,7 +454,8 @@ class LakeTable:
             missing = [c for c in cluster_by if c not in df.columns]
             if missing:
                 raise ValueError(f"cluster_by columns not in data: {missing}")
-        commit_dir = os.path.join(self.root, DATA_DIR, f"c{version_hint}-{uuid.uuid4().hex[:8]}")
+        commit_dir = os.path.join(self.root, DATA_DIR, f"c{base['version'] + 1}-{uuid.uuid4().hex[:8]}")
+        bucket = BucketSpec.from_json(base.get("bucket"))
         if bucket:
             pre_bucketed = "_bucket" in df.columns
             out = df if pre_bucketed else df.withColumn("_bucket", bucket.expr())
@@ -509,9 +500,9 @@ class LakeTable:
         found: list[tuple[str, int | None]] = []
         for dirpath, _dirs, names in os.walk(commit_dir):
             b = None
-            base = os.path.basename(dirpath)
-            if base.startswith("_bucket="):
-                b = int(base.split("=", 1)[1])
+            leaf = os.path.basename(dirpath)
+            if leaf.startswith("_bucket="):
+                b = int(leaf.split("=", 1)[1])
             for n in sorted(names):
                 if n.endswith(".parquet"):
                     found.append((os.path.join(dirpath, n), b))
@@ -522,7 +513,7 @@ class LakeTable:
         # writer.
         from concurrent.futures import ThreadPoolExecutor
 
-        stats_cols = tuple(self.properties().get("stats_columns") or ())
+        stats_cols = tuple(base.get("properties", {}).get("stats_columns") or ())
         with ThreadPoolExecutor(max_workers=8) as ex:
             metas = list(ex.map(lambda fb: _file_meta(fb[0], stats_cols), found))
         return [
@@ -537,10 +528,7 @@ class LakeTable:
         ]
 
     def files(self, version: int | None = None, buckets: set[int] | None = None) -> list[dict]:
-        fs = self.manifest(version)["files"]
-        if buckets is not None:
-            fs = [f for f in fs if f.get("bucket") in buckets]
-        return fs
+        return [f for f in self.manifest(version)["files"] if buckets is None or f.get("bucket") in buckets]
 
     def changes(self, since_version: int, until_version: int | None = None) -> DataFrame:
         """Incremental changelog scan (Iceberg ``incremental read`` /
@@ -567,21 +555,21 @@ class LakeTable:
         raises ``FileNotFoundError`` naming the missing files rather
         than returning a silently incomplete changelog.
         """
-        if self.properties().get("merge_mode") != "mor":
-            raise ValueError(
-                "changes() requires a merge-on-read table; for copy-on-write "
-                "diff snapshot reads (operators/diff.py::snapshot_diff)"
-            )
         cur = self.current_version()
         until = until_version if until_version is not None else cur
-        if not (0 <= since_version <= until <= cur):
-            raise ValueError(f"need 0 <= since {since_version} <= until {until} <= current {cur}")
-        schema = self.schema(until)
+        if not (0 <= since_version <= until <= cur) or until < 1:
+            raise ValueError(f"need 0 <= since {since_version} <= until {until} <= current {cur}, 1 <= until")
         parts: list[tuple[int, list[str]]] = []
-        for v in range(since_version + 1, until + 1):
+        prev: set[str] = set()  # one parse per manifest: carry the previous file set forward
+        for v in range(max(since_version, 1), until + 1):
             man = self.manifest(v)
+            if man.get("properties", {}).get("merge_mode") != "mor":
+                raise ValueError(
+                    "changes() requires a merge-on-read table; for copy-on-write "
+                    "diff snapshot reads (operators/diff.py::snapshot_diff)"
+                )
             op = man.get("summary", {}).get("op", "")
-            if op == "rollback":
+            if v > since_version and op == "rollback":
                 # a rollback REMOVES state: emitting its re-referenced
                 # files as change rows would miss the implied deletes
                 # of everything committed after the target, silently
@@ -594,18 +582,18 @@ class LakeTable:
                     f"v{man['summary'].get('rollback_of')}); incremental "
                     "consumers must re-sync from a snapshot read"
                 )
-            if op == "compact":
-                continue  # physical rewrite, logical no-op
-            prev = (
-                {f["path"] for f in self.manifest(v - 1)["files"]} if v > 1 else set()
-            )
-            added = [
-                os.path.join(self.root, f["path"])
-                for f in man["files"]
-                if f["path"] not in prev and f["rows"] > 0
-            ]
-            if added:
-                parts.append((v, added))
+            # the cursor's own snapshot only seeds the baseline file
+            # set; a compaction is a physical rewrite, logical no-op
+            if v > since_version and op != "compact":
+                added = [
+                    os.path.join(self.root, f["path"])
+                    for f in man["files"]
+                    if f["path"] not in prev and f["rows"] > 0
+                ]
+                if added:
+                    parts.append((v, added))
+            prev = {f["path"] for f in man["files"]}
+        schema = _schema_of(man)
         missing = [p for _v, paths in parts for p in paths if not os.path.exists(p)]
         if missing:
             raise FileNotFoundError(
@@ -666,9 +654,10 @@ class LakeTable:
         tables do — see lake/merge.py), tombstoned rows are filtered
         and the column hidden unless ``include_tombstones``.
         """
-        schema = self.schema(version)
-        fs = self.files(version, buckets)
-        props = self.properties(version)
+        man = self.manifest(version)
+        schema = _schema_of(man)
+        fs = [f for f in man["files"] if buckets is None or f.get("bucket") in buckets]
+        props = man.get("properties", {})
         if fold is None:
             fold = props.get("merge_mode") == "mor"
         if where_ranges:
@@ -712,7 +701,7 @@ class LakeTable:
         if "_deleted" in schema.fieldNames() and not include_tombstones:
             df = df.filter(~F.coalesce(F.col("_deleted"), F.lit(False))).drop("_deleted")
         if with_bucket_col:
-            spec = self.bucket_spec(version)
+            spec = BucketSpec.from_json(man.get("bucket"))
             if spec is None:
                 raise ValueError("table is not bucketed")
             df = df.withColumn("_bucket", spec.expr())
@@ -721,44 +710,41 @@ class LakeTable:
     # ------------------------------------------------------- mutations
     def _next_commit(
         self,
+        base: dict,
         new_files: list[dict],
-        keep: list[dict] | "object",
         summary: dict,
         watermarks_update: dict | None = None,
+        keep=None,
         schema: T.StructType | None = None,
         retries: int = 5,
     ) -> dict:
-        """Optimistic commit with retry. ``keep`` is either a callable
-        ``keep_fn(fresh_manifest) -> list[file dict]`` or a plain list.
-
-        The callable form is the concurrency-correct one: it is
-        re-evaluated against the FRESH manifest on every attempt, so a
-        retry after a lost race carries over the *winner's* files
-        instead of resurrecting a stale snapshot (which silently
-        dropped concurrently-committed data). A ``keep_fn`` may raise
+        """Optimistic commit of the child of ``base``, the manifest the
+        caller computed from; only a lost race re-reads the head. The
+        child inherits ``base``'s schema (unless ``schema`` is given),
+        bucket spec and properties. ``keep(base) -> list[file dict]``
+        (default: all its files) is re-evaluated on every fresh head,
+        so a retry carries over the *winner's* files; it may raise
         :class:`CommitConflict` itself when the fresh state invalidates
-        the data the caller computed (see ``replace_buckets``)."""
-        keep_fn = keep if callable(keep) else (lambda _cur: keep)
+        the caller's data (see ``replace_buckets``)."""
+        keep_fn = keep or (lambda b: b["files"])
         for attempt in range(retries):
-            cur = self.manifest()
-            wm = dict(cur.get("watermarks", {}))
-            wm.update(watermarks_update or {})
-            keep_files = keep_fn(cur)
+            child = {
+                **base,
+                "version": base["version"] + 1,
+                "parent": base["version"],
+                "files": keep_fn(base) + new_files,
+                "summary": summary,
+                "watermarks": {**base.get("watermarks", {}), **(watermarks_update or {})},
+            }
+            if schema is not None:
+                child["schema"] = schema.json()
             try:
-                return self._commit(
-                    version=cur["version"] + 1,
-                    parent=cur["version"],
-                    files=keep_files + new_files,
-                    schema=schema or self.schema(),
-                    bucket=self.bucket_spec(),
-                    summary=summary,
-                    watermarks=wm,
-                    properties=cur.get("properties", {}),
-                )
+                return self._commit(child)
             except CommitConflict:
                 if attempt == retries - 1:
                     raise
                 time.sleep(0.05 * (attempt + 1))
+                base = self.manifest()
         raise CommitConflict("unreachable")
 
     @staticmethod
@@ -781,9 +767,10 @@ class LakeTable:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
+        base = self.manifest()
         if not rows:
-            return self.manifest()
-        schema = self.schema()
+            return base
+        schema = _schema_of(base)
         arrow_schema = pa.schema(
             [(f.name, _arrow_type(f.dataType)) for f in schema.fields]
         )
@@ -791,14 +778,11 @@ class LakeTable:
             f.name: [r.get(f.name) for r in rows] for f in schema.fields
         }
         tbl = pa.Table.from_pydict(cols, schema=arrow_schema)
-        cur = self.manifest()
-        commit_dir = os.path.join(
-            self.root, DATA_DIR, f"c{cur['version'] + 1}-{uuid.uuid4().hex[:8]}"
-        )
+        commit_dir = os.path.join(self.root, DATA_DIR, f"c{base['version'] + 1}-{uuid.uuid4().hex[:8]}")
         os.makedirs(commit_dir, exist_ok=True)
         path = os.path.join(commit_dir, "part-00000.parquet")
         pq.write_table(tbl, path, compression="snappy")
-        _, stats = _file_meta(path, tuple(self.properties().get("stats_columns") or ()))
+        _, stats = _file_meta(path, tuple(base.get("properties", {}).get("stats_columns") or ()))
         new = [
             {
                 "path": os.path.relpath(path, self.root),
@@ -808,7 +792,7 @@ class LakeTable:
                 **({"stats": stats} if stats else {}),
             }
         ]
-        return self._next_commit(new, lambda c: c["files"], self._tagged(summary, "append"))
+        return self._next_commit(base, new, self._tagged(summary, "append"))
 
     def append(
         self,
@@ -819,15 +803,16 @@ class LakeTable:
         op: str = "append",
         cluster_by: tuple[str, ...] = (),
         cluster_files: int | None = None,
+        *,
+        _base: dict | None = None,
     ) -> dict:
-        cur = self.manifest()
+        """Append ``df``. ``_base`` (lake-internal): a head manifest the
+        caller already read and built ``df`` from, committed on as is."""
+        base = _base or self.manifest()
         new = self._write_data_files(
-            df, cur["version"] + 1, self.bucket_spec(), write_salt,
-            cluster_by=cluster_by, cluster_files=cluster_files,
+            df, base, write_salt, cluster_by=cluster_by, cluster_files=cluster_files
         )
-        return self._next_commit(
-            new, lambda c: c["files"], self._tagged(summary, op), watermarks_update
-        )
+        return self._next_commit(base, new, self._tagged(summary, op), watermarks_update)
 
     def overwrite(
         self,
@@ -836,17 +821,16 @@ class LakeTable:
         cluster_by: tuple[str, ...] = (),
         cluster_files: int | None = None,
     ) -> dict:
-        cur = self.manifest()
-        new = self._write_data_files(
-            df, cur["version"] + 1, self.bucket_spec(),
-            cluster_by=cluster_by, cluster_files=cluster_files,
+        base = self.manifest()
+        new = self._write_data_files(df, base, cluster_by=cluster_by, cluster_files=cluster_files)
+        return self._next_commit(
+            base, new, self._tagged(summary, "overwrite"), keep=lambda _b: []
         )
-        return self._next_commit(new, [], self._tagged(summary, "overwrite"))
 
     def commit_metadata(self, summary: dict, watermarks_update: dict | None = None) -> dict:
         """Metadata-only commit (e.g. advance an epoch watermark for an
         empty batch)."""
-        return self._next_commit([], lambda c: c["files"], summary, watermarks_update)
+        return self._next_commit(self.manifest(), [], summary, watermarks_update)
 
     def add_columns(
         self, new_fields: list[T.StructField], summary: dict | None = None, retries: int = 5
@@ -858,24 +842,24 @@ class LakeTable:
         The retry loop recomputes the merged schema from the fresh
         manifest so a lost race against a concurrent ``add_columns``
         never drops the winner's columns."""
+        base = self.manifest()
         for attempt in range(retries):
-            cur_schema = self.schema()
-            existing = {f.name for f in cur_schema.fields}
-            added = [f for f in new_fields if f.name not in existing]
+            cur_schema = _schema_of(base)
+            added = [f for f in new_fields if f.name not in cur_schema.fieldNames()]
             if not added:
-                return self.manifest()
-            new_schema = T.StructType(cur_schema.fields + added)
+                return base
             try:
                 return self._next_commit(
-                    [], lambda c: c["files"],
+                    base, [],
                     {**(summary or {}), "op": "evolve-schema", "added": [f.name for f in added]},
-                    schema=new_schema,
+                    schema=T.StructType(cur_schema.fields + added),
                     retries=1,
                 )
             except CommitConflict:
                 if attempt == retries - 1:
                     raise
                 time.sleep(0.05 * (attempt + 1))
+                base = self.manifest()
         raise CommitConflict("unreachable")
 
     def replace_buckets(
@@ -893,25 +877,23 @@ class LakeTable:
         """Copy-on-write commit unit: atomically swap all files of the
         given buckets for the new data (which must only contain rows of
         those buckets). Files in other buckets are carried over from
-        the FRESH manifest at commit time, so a lost race against a
-        writer of *other* buckets retries cleanly.
+        the manifest the commit lands on (the base, or the fresh head
+        after a lost race), so a lost race against a writer of *other*
+        buckets retries cleanly.
 
         ``cluster_by`` sorts the replacement rows within each bucket
         file (see ``_write_data_files``) — compaction's OPTIMIZE hook.
 
-        ``base_version`` is the snapshot the replacement data was
-        computed from (callers that read the table first pass the
-        version they read). If a concurrent commit changed the *target*
+        ``base_version`` (default: the head) is the snapshot the
+        replacement data was computed from (callers that read the table
+        first pass the version they read); the first commit attempt
+        lands on it. If a concurrent commit changed the *target*
         buckets since then, the replacement would silently drop that
         writer's rows — the commit aborts with :class:`CommitConflict`
         instead; the caller must recompute from the fresh snapshot."""
-        base = base_version if base_version is not None else self.current_version()
-        base_target = sorted(
-            f["path"] for f in self.files(base) if f.get("bucket") in buckets
-        )
-        new = self._write_data_files(
-            df, base + 1, self.bucket_spec(), write_salt, cluster_by=cluster_by
-        )
+        base = self.manifest(base_version)
+        base_target = sorted(f["path"] for f in base["files"] if f.get("bucket") in buckets)
+        new = self._write_data_files(df, base, write_salt, cluster_by=cluster_by)
         stray = [f for f in new if f.get("bucket") not in buckets and f["rows"] > 0]
         if stray:
             raise ValueError(f"replacement data contains rows outside target buckets: {stray}")
@@ -923,13 +905,13 @@ class LakeTable:
             if fresh_target != base_target:
                 raise CommitConflict(
                     f"target buckets {sorted(buckets)} changed concurrently "
-                    f"(computed from v{base}, now v{fresh['version']}) — recompute "
+                    f"(computed from v{base['version']}, now v{fresh['version']}) — recompute "
                     "the replacement from the fresh snapshot"
                 )
             return [f for f in fresh["files"] if f.get("bucket") not in buckets]
 
         return self._next_commit(
-            new, keep_fn, self._tagged(summary, op), watermarks_update, schema=schema
+            base, new, self._tagged(summary, op), watermarks_update, keep=keep_fn, schema=schema
         )
 
     def rollback(
@@ -978,9 +960,8 @@ class LakeTable:
         incremental scans likewise support only append-style
         snapshots).
         """
-        cur = self.current_version()
-        if cur is None:
-            raise FileNotFoundError(f"no table at {self.root}")
+        base = self.manifest()
+        cur = base["version"]
         if not (1 <= version < cur):
             raise ValueError(
                 f"rollback target must satisfy 1 <= version < current ({cur}); got {version}"
@@ -1000,16 +981,14 @@ class LakeTable:
         wm_update = None
         if restore_watermarks:
             tgt_wm = target.get("watermarks", {})
-            cur_wm = self.manifest().get("watermarks", {})
-            wm_update = {k: tgt_wm.get(k, -1) for k in set(cur_wm) | set(tgt_wm)}
+            wm_update = {k: tgt_wm.get(k, -1) for k in set(base.get("watermarks", {})) | set(tgt_wm)}
         return self._next_commit(
+            base,
             [],
-            lambda _fresh: list(target["files"]),
-            self._tagged(
-                {**(summary or {}), "rollback_of": version}, "rollback"
-            ),
+            self._tagged({**(summary or {}), "rollback_of": version}, "rollback"),
             watermarks_update=wm_update,
-            schema=T.StructType.fromJson(json.loads(target["schema"])),
+            keep=lambda _fresh: list(target["files"]),
+            schema=_schema_of(target),
         )
 
     # ------------------------------------------------------ maintenance

@@ -183,3 +183,56 @@ def test_discover_schema_exotic_type_falls_back(spark, tmpdir_path):
     schema = discover_wal_schema(spark, [d])
     assert "amount" in schema.fieldNames()
     assert isinstance(schema["amount"].dataType, T.DecimalType)
+
+
+def _race_after_first_head_read(t: LakeTable, race) -> None:
+    """Run ``race`` (a commit through another handle) once, right after
+    ``t``'s first head-manifest read — a deterministic interleaving of a
+    concurrent writer, no threads."""
+    read = t.manifest
+    fired = []
+
+    def manifest(version=None):
+        man = read(version)
+        if version is None and not fired:
+            fired.append(True)
+            race()
+        return man
+
+    t.manifest = manifest
+
+
+def test_add_columns_race_keeps_both_columns(spark, tmpdir_path):
+    """Two writers evolving the schema at once: the loser must retry on
+    the winner's schema, never commit its own stale one over it."""
+    root = os.path.join(tmpdir_path, "evolve")
+    t = LakeTable.create(spark, root, T.StructType([T.StructField("k", T.StringType())]))
+    other = LakeTable.load(spark, root)
+    _race_after_first_head_read(
+        t, lambda: other.add_columns([T.StructField("y", T.StringType())])
+    )
+    t.add_columns([T.StructField("x", T.StringType())])
+    assert set(LakeTable.load(spark, root).schema().fieldNames()) == {"k", "x", "y"}
+
+
+def test_read_is_one_snapshot_under_concurrent_evolution(spark, tmpdir_path):
+    """A read racing an ``add_columns`` + ``append`` returns exactly one
+    version's schema AND rows, never one's schema over another's files."""
+    root = os.path.join(tmpdir_path, "snap")
+    t = LakeTable.create(
+        spark, root, T.StructType([T.StructField("k", T.StringType()), T.StructField("v", T.LongType())])
+    )
+    t.append(spark.createDataFrame([("a", 1)], "k string, v long"))
+    other = LakeTable.load(spark, root)
+
+    def race():
+        other.add_columns([T.StructField("z", T.StringType())])
+        other.append(spark.createDataFrame([("b", 2, "zz")], "k string, v long, z string"))
+
+    _race_after_first_head_read(t, race)
+    df = t.read()
+    got = (df.columns, sorted(tuple(r) for r in df.collect()))
+    assert got in (
+        (["k", "v"], [("a", 1)]),
+        (["k", "v", "z"], [("a", 1, None), ("b", 2, "zz")]),
+    )

@@ -56,8 +56,7 @@ def test_commit_conflict(spark, tmpdir_path):
     t = make_table(spark, os.path.join(tmpdir_path, "t2"))
     man = t.manifest()
     with pytest.raises(CommitConflict):
-        t._commit(version=man["version"], files=[], schema=t.schema(), bucket=t.bucket_spec(),
-                  summary={}, watermarks={})
+        t._commit(man)
 
 
 def test_merge_fold_false_rejected_on_cow(spark, tmpdir_path):
@@ -790,3 +789,70 @@ def test_nan_stats_never_fold_to_a_finite_bound(spark, tmpdir_path):
     got, want = pruned.collect(), plain.collect()
     assert [r["k"] for r in got] == [r["k"] for r in want] == ["k0500!"]
     assert math.isnan(got[0]["score"])
+
+
+def test_one_head_read_per_lake_operation(spark, tmpdir_path, monkeypatch):
+    """Each public lake operation lists ``_meta/`` (``current_version``)
+    once, then works from that one manifest — schema, files, bucket
+    spec and properties never come from separate head reads, and the
+    commit's first attempt lands on the manifest read."""
+    ev_schema = "lsn long, op string, conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    batch = spark.createDataFrame(
+        [(1, "insert", "c1", 0, "user", "a", None, None), (2, "insert", "c2", 0, "user", "b", None, None)],
+        ev_schema,
+    )
+    mor = create_cdc_table(
+        spark, os.path.join(tmpdir_path, "hr_mor"), TRANSCRIPT_FIELDS,
+        BucketSpec("conv_id", 4), key_cols=KEYS, merge_mode="mor",
+    )
+    cow = make_table(spark, os.path.join(tmpdir_path, "hr_cow"), buckets=4)
+    rows = spark.createDataFrame(_mk_rows([3], conv="c3"), TRANSCRIPT_SCHEMA)
+
+    from odibel_spark.lake.merge import compact_buckets
+
+    calls: list[str] = []
+    listing = LakeTable.current_version
+
+    def counting(self):
+        calls.append(self.root)
+        return listing(self)
+
+    monkeypatch.setattr(LakeTable, "current_version", counting)
+    ops = {
+        "merge_upsert mor": lambda: merge_upsert(mor, batch, KEYS),
+        "merge_upsert cow": lambda: merge_upsert(cow, batch, KEYS),
+        "append": lambda: mor.append(rows),
+        "read": lambda: mor.read(with_bucket_col=True),
+        "read where_ranges": lambda: mor.read(where_ranges={"conv_id": ("c1", "c1")}),
+        "changes": lambda: mor.changes(0),
+        "compact_buckets": lambda: compact_buckets(mor),
+    }
+    counts = {}
+    for name, op in ops.items():
+        calls.clear()
+        op()
+        counts[name] = len(calls)
+    assert counts == dict.fromkeys(ops, 1)
+
+
+def test_unclustered_bucketed_commit_keeps_input_order(spark, tmpdir_path):
+    """A plain bucketed append sorts only on ``_bucket`` (what the
+    partitioned writer requires), so within each bucket file rows keep
+    their input order. Sorting on the bucket column too would tax
+    every micro-batch commit for a row-group layout nobody asked for."""
+    import pyarrow.parquet as pq
+
+    t = LakeTable.create(
+        spark, os.path.join(tmpdir_path, "order"),
+        T.StructType([T.StructField("k", T.StringType()), T.StructField("seq", T.IntegerType())]),
+        BucketSpec("k", 4),
+    )
+    # keys descend while seq (the input position) ascends
+    rows = [(f"k{999 - i:03d}", i) for i in range(400)]
+    t.append(spark.createDataFrame(rows, "k string, seq int").coalesce(1))
+    fs = [f for f in t.files() if f["rows"]]
+    assert len(fs) > 1
+    for f in fs:
+        got = pq.read_table(os.path.join(t.root, f["path"])).to_pydict()
+        assert got["seq"] == sorted(got["seq"]), f["path"]
+        assert got["k"] != sorted(got["k"])
