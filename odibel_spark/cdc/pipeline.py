@@ -29,10 +29,10 @@ North-rule mechanics and where they live:
   footers; new payload columns promoted with ``table.add_columns``;
   legacy enum variants normalized by Arrow-typed pandas UDFs
   (cdc/evolution.py).
-- **skew** → MERGE repartitions by bucket of ``conv_id``; the LWW fold
-  is a map-side-partial ``max_by`` aggregation, no sort
-  (``lake.table.lww_fold`` on MoR, ``cdc.replay.last_writer_wins`` on
-  CoW), and ``write_salt="auto"`` splits a dominant bucket's write.
+- **skew** → MERGE repartitions by bucket of ``conv_id``, and the LWW
+  fold (``lake.table.lww_fold``, a ``max_by`` sort aggregate) runs on
+  that one exchange in both merge modes; ``write_salt="auto"`` splits
+  a dominant bucket's write by key hash.
 """
 
 from __future__ import annotations
@@ -506,16 +506,20 @@ class TranscriptCdcPipeline:
         the merge's rows — it retries from the fresh snapshot a few
         times first), and vacuum skips uncommitted commit dirs plus a
         mtime grace window so an in-flight writer's files survive."""
-        table = LakeTable.load(self.spark, self.table_root)
+        table = LakeTable(self.spark, self.table_root)
+        man = table.manifest()
         out: dict = {}
-        if compact and table.properties().get("merge_mode") == "mor":
+        if compact and man.get("properties", {}).get("merge_mode") == "mor":
             from odibel_spark.lake.merge import compact_buckets
 
+            # tombstone-GC high-water mark: the live files' _lsn upper
+            # bounds. A file without bounds could hold a higher LSN, so
+            # GC is skipped (a lower threshold, or none, is always safe).
             gc_below = None
-            if self.cfg.tombstone_gc_lsn_slack is not None:
-                lin = self.lineage().agg(F.max("max_lsn")).collect()[0][0]
-                if lin is not None:
-                    gc_below = max(int(lin) - self.cfg.tombstone_gc_lsn_slack, 0)
+            bounds = [(f.get("stats") or {}).get("_lsn") for f in man["files"]]
+            if self.cfg.tombstone_gc_lsn_slack is not None and bounds and all(bounds):
+                hwm = max(int(b[1]) for b in bounds)
+                gc_below = max(hwm - self.cfg.tombstone_gc_lsn_slack, 0)
             compact_buckets(
                 table, tombstone_gc_below_lsn=gc_below,
                 summary={"reason": "maintenance"},

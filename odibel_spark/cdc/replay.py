@@ -65,13 +65,14 @@ def last_writer_wins(
     live table apply ``current_state``; callers implementing MERGE need
     the delete rows to drive `WHEN MATCHED ... DELETE`.
 
-    Physical plan: ONE hash shuffle on the keys with map-side partial
-    aggregation (``max_by`` fold), no sort. The window-function spelling
-    (`row_number over (partition by key order by lsn desc)`) costs a
-    full sort-shuffle and ships every duplicate to the reducer;
+    Physical plan: ONE hash shuffle on the keys. Spark plans the
+    ``max_by`` fold as a sort aggregate: a local sort and a partial
+    aggregate before the exchange, a sort and the final aggregate after
+    it. The window-function spelling (`row_number over (partition by
+    key order by lsn desc)`) ships every duplicate to the reducer;
     ``max_by`` combines executor-side first, which at 10^10 events with
     a skewed feed is the difference between shuffling the WAL and
-    shuffling roughly one row per live key.
+    shuffling about one row per key per map task.
     """
     keys = key_cols or KEY_COLS
     others = [c for c in events.columns if c not in keys]

@@ -1,15 +1,15 @@
-"""MERGE INTO for LakeTable — bucket-pruned copy-on-write upsert with
-LSN fencing and delete tombstones.
+"""MERGE INTO for LakeTable — bucket-pruned upsert with LSN fencing
+and delete tombstones, as merge-on-read delta or copy-on-write rewrite.
 
 Semantic contract (the north rule's `WHEN MATCHED AND s.lsn >
 t.applied_lsn` merge):
 
-- the source batch is folded to one winner per key (highest LSN;
-  exact duplicates collapse first) — ``cdc.replay.last_writer_wins``;
-- a winner applies iff the target has no row for the key or the
-  target's applied ``_lsn`` is lower ⇒ re-applying any prefix or any
-  already-applied batch is a no-op (idempotent replay, the property
-  exactly-once recovery leans on);
+- per key, the row with the highest ``_lsn`` wins: the batch's rows
+  and the key's existing row go through one last-writer-wins fold
+  (``lake.table.lww_fold``; exact duplicates share an LSN and are
+  identical rows, so either copy is the same winner) ⇒ re-applying
+  any prefix or any already-applied batch is a no-op (idempotent
+  replay, the property exactly-once recovery leans on);
 - a ``delete`` winner leaves a **tombstone** (``_deleted = true``,
   payload NULL, ``_lsn`` = delete LSN). Without tombstones, a stale
   out-of-order update arriving in a *later* batch would resurrect the
@@ -21,13 +21,18 @@ t.applied_lsn` merge):
   (reference policy: failures never become deletes,
   DBpediaTKGExtraction.scala:174-195).
 
-Physical plan at scale: one shuffle to fold the batch by key, one
-full-outer join against ONLY the target buckets the batch touches
-(reference's full-outer-diff idiom, eval/SnapshotEval.scala:132-160),
-one bucket-clustered write. Untouched buckets are carried over in the
-manifest — zero data movement for them. At 10^10 rows in the table and
-a few-million-row batch, the rewrite cost is proportional to the
-touched buckets, not the table.
+The merge modes differ only in *when* the fold meets the target:
+merge-on-read appends the folded batch delta (readers and
+``compact_buckets`` fold it later); copy-on-write is that compaction
+run at write time, over the touched buckets' rows ∪ the delta.
+
+Physical plan at scale: ONE exchange per write, hash on ``_bucket``
+(plus a key salt for hot buckets). Both are functions of the fold's
+group keys, so it serves the fold and the bucket-clustered write; the
+``max_by`` sort aggregate runs wholly after it, so it carries every
+batch (and touched target) row. Untouched buckets are carried over in
+the manifest — the rewrite cost is proportional to the touched
+buckets, not the table.
 """
 
 from __future__ import annotations
@@ -97,6 +102,76 @@ def create_cdc_table(
     return LakeTable.create(spark, root, cdc_table_schema(fields), bucket, properties=props)
 
 
+def _delta(
+    source: DataFrame, schema: T.StructType, spec: BucketSpec, key_cols: list[str],
+    lsn_col: str, is_del: F.Column,
+) -> DataFrame:
+    """The batch as table rows: ``_bucket``, keys, payload (cast to the
+    table type, NULL-filled when the source lacks it, NULLed on
+    delete), ``_lsn`` and ``_deleted``. The bucket hashes the
+    table-typed key, as ``read(with_bucket_col=True)`` does."""
+    cols = [F.col(k).cast(schema[k].dataType).alias(k) for k in key_cols]
+    for f in schema.fields:
+        if f.name not in (*key_cols, *SYSTEM_FIELDS):
+            sc = F.col(f.name) if f.name in source.columns else F.lit(None)
+            cols.append(F.when(is_del, F.lit(None)).otherwise(sc).cast(f.dataType).alias(f.name))
+    cols += [F.col(lsn_col).cast("long").alias(LSN_FIELD), is_del.alias(DELETED_FIELD)]
+    rows = source.select(*cols)
+    return rows.select(spec.expr().alias("_bucket"), *rows.columns)
+
+
+def _fold_by_bucket(
+    df: DataFrame, buckets: int, key_cols: list[str], salt: int, fold: bool = True
+) -> DataFrame:
+    """ONE exchange for the fold and the file layout: hash on
+    ``_bucket`` plus, when ``salt > 1``, a key-hash ``_salt`` splitting
+    each bucket that many ways. Both are functions of the group keys,
+    so Catalyst reuses that partitioning for the ``lww_fold`` grouped on
+    ``(_bucket[, _salt], *keys)``, and the writer adds no repartition to
+    a frame that carries ``_bucket``."""
+    part_cols = ["_bucket"]
+    if salt > 1:
+        df = df.withColumn("_salt", F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(salt)))
+        part_cols.append("_salt")
+    out = df.repartition(buckets * salt, *part_cols)
+    if fold:
+        out = lww_fold(out, [*part_cols, *key_cols], LSN_FIELD)
+    return out.drop("_salt")
+
+
+def _rewrite_buckets(
+    table: LakeTable, base: dict, buckets: set[int], key_cols: list[str],
+    delta: DataFrame | None = None, salt: int = 1,
+    tombstone_gc_below_lsn: int | None = None, retries: int = 1, **commit_kw,
+) -> dict:
+    """Rewrite ``buckets`` as the fold of their raw rows at ``base``
+    (plus ``delta``, the copy-on-write batch), minus tombstones below
+    ``tombstone_gc_below_lsn``, committed on ``base``. A lost race
+    (``CommitConflict``: the target buckets changed since ``base``)
+    recomputes from the fresh head, up to ``retries`` attempts in all."""
+    spec = BucketSpec.from_json(base.get("bucket"))
+    for attempt in range(retries):
+        rows = table.read(
+            version=base["version"], buckets=buckets, with_bucket_col=True,
+            include_tombstones=True, fold=False,
+        ).withColumn(DELETED_FIELD, F.coalesce(F.col(DELETED_FIELD), F.lit(False)))
+        if delta is not None:
+            rows = rows.unionByName(delta)
+        folded = _fold_by_bucket(rows, spec.buckets, key_cols, salt)
+        if tombstone_gc_below_lsn is not None:
+            folded = folded.filter(
+                ~(F.coalesce(F.col(DELETED_FIELD), F.lit(False))
+                  & (F.col(LSN_FIELD) < F.lit(tombstone_gc_below_lsn)))
+            )
+        try:
+            return table.replace_buckets(buckets, folded, base_version=base["version"], **commit_kw)
+        except CommitConflict:
+            if attempt == retries - 1:
+                raise
+            base = table.manifest()
+    raise CommitConflict("unreachable")
+
+
 def merge_upsert(
     table: LakeTable,
     source: DataFrame,
@@ -125,13 +200,15 @@ def merge_upsert(
     Merge-on-read tables ignore it: GC happens at ``compact_buckets``.
     ``touched_buckets`` spares copy-on-write the job that finds the
     buckets to rewrite; on merge-on-read it only detects empty batches.
+    ``write_salt > 1`` splits each bucket's write across that many
+    tasks by key hash (a hot conversation otherwise serializes the
+    commit behind one straggler); files still land in one bucket each.
 
     ``fold=False`` skips the per-batch LWW pre-fold and is valid ONLY
     on merge-on-read tables, whose ``read()`` resolves duplicate keys
-    at scan time. On a copy-on-write table the unfolded full-outer
-    merge would emit one row per SOURCE row and duplicate-key rows
-    would persist in the table silently (a property test demonstrated
-    the corruption), so that combination raises instead.
+    at scan time. A copy-on-write table would keep duplicate-key rows
+    silently (a property test demonstrated the corruption), so that
+    combination raises instead.
 
     The MoR trade, measured (interleaved, 1M events, 3.4x key
     duplication, 32 cores): raw append commits ~1.15x faster than the
@@ -144,10 +221,6 @@ def merge_upsert(
     after. Convergence under either posture, any batching/order, is
     property-proven (test_merge_converges_for_any_batching_and_order).
     """
-    # deferred: odibel_spark.cdc re-exports the pipeline, which imports
-    # this module (circular at package-init time)
-    from odibel_spark.cdc.replay import last_writer_wins
-
     man = table.manifest()
     mor = man.get("properties", {}).get("merge_mode") == "mor"
     if not fold and not mor:
@@ -164,108 +237,40 @@ def merge_upsert(
     names = schema.fieldNames()
     if LSN_FIELD not in names or DELETED_FIELD not in names:
         raise ValueError(f"CDC table needs {LSN_FIELD} and {DELETED_FIELD} columns")
-    payload_cols = [n for n in names if n not in (*key_cols, *SYSTEM_FIELDS)]
 
     empty_summary = LakeTable._tagged({**(summary or {}), "empty_batch": True}, "merge")
     if touched_buckets is not None and not touched_buckets:
         return table._next_commit(man, [], empty_summary, watermarks_update)
 
+    delta = _delta(source, schema, spec, key_cols, lsn_col, F.col(op_col) == delete_op)
     if mor:
         # merge-on-read: append the folded winners as delta rows —
         # O(batch) per commit, no target read, no bucket rewrite. The
         # key's LWW resolution happens in LakeTable.read's fold; the
         # epoch fence (watermarks) commits atomically with the delta.
-        #
-        # ONE exchange serves both the fold and the file layout: rows
-        # are hash-repartitioned on the bucket (plus a key-salt when
-        # hot buckets need splitting), and because the bucket/salt are
-        # functions of the group keys, Catalyst accepts that
-        # partitioning for the groupBy — no second shuffle before the
-        # bucket-clustered write.
-        src = source.withColumn("_bucket", spec.expr())
-        part_cols = ["_bucket"]
-        if write_salt > 1:
-            src = src.withColumn(
-                "_salt", F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(write_salt))
-            )
-            part_cols.append("_salt")
-        winners = src.repartition(spec.buckets * write_salt, *part_cols)
-        if fold:
-            winners = lww_fold(winners, [*part_cols, *key_cols], lsn_col)
-        out_cols = [F.col("_bucket"), *[F.col(c) for c in key_cols]]
-        is_del = F.col(op_col) == delete_op
-        for c in payload_cols:
-            dt = schema[c].dataType
-            sc = F.col(c).cast(dt) if c in winners.columns else F.lit(None).cast(dt)
-            out_cols.append(F.when(is_del, F.lit(None).cast(dt)).otherwise(sc).alias(c))
-        out_cols.append(F.col(lsn_col).cast("long").alias(LSN_FIELD))
-        out_cols.append(is_del.alias(DELETED_FIELD))
         return table.append(
-            winners.select(*out_cols),
+            _fold_by_bucket(delta, spec.buckets, key_cols, write_salt, fold=fold),
             summary=summary,
             watermarks_update=watermarks_update,
             op="merge-mor",
             _base=man,
         )
 
-    winners = last_writer_wins(source, key_cols, lsn_col) if fold else source
-    winners = winners.withColumn("_sb", spec.expr())
-
-    # Which copy-on-write units does this batch touch? (≤ n_buckets
-    # ints; callers that already computed batch statistics pass them
-    # in to save the extra job)
+    # copy-on-write: compaction of (target ∪ delta) over the buckets
+    # the batch touches (≤ n_buckets ints; callers that already
+    # computed batch statistics pass them in to save the extra job)
     touched = (
         set(touched_buckets)
         if touched_buckets is not None
-        else {r[0] for r in winners.select("_sb").distinct().collect()}
+        else {r[0] for r in delta.select("_bucket").distinct().collect()}
     )
     if not touched:
         return table._next_commit(man, [], empty_summary, watermarks_update)
-
-    src_cols = [F.col(c) for c in key_cols]
-    src_cols.append(F.col(lsn_col).alias("_s_lsn"))
-    src_cols.append((F.col(op_col) == delete_op).alias("_s_del"))
-    for c in payload_cols:
-        field = schema[c]
-        if c in winners.columns:
-            src_cols.append(F.col(c).cast(field.dataType).alias(f"_s_{c}"))
-        else:
-            src_cols.append(F.lit(None).cast(field.dataType).alias(f"_s_{c}"))
-    src = winners.select(*src_cols)
-
-    target = table.read(version=man["version"], buckets=touched, include_tombstones=True)
-
-    joined = target.join(src, on=key_cols, how="full_outer")
-    apply = F.col("_s_lsn").isNotNull() & (
-        F.col(LSN_FIELD).isNull() | (F.col("_s_lsn") > F.col(LSN_FIELD))
-    )
-    out_cols = [F.col(c) for c in key_cols]
-    for c in payload_cols:
-        out_cols.append(
-            F.when(apply & F.col("_s_del"), F.lit(None).cast(schema[c].dataType))
-            .when(apply, F.col(f"_s_{c}"))
-            .otherwise(F.col(c))
-            .alias(c)
-        )
-    out_cols.append(F.when(apply, F.col("_s_lsn")).otherwise(F.col(LSN_FIELD)).alias(LSN_FIELD))
-    out_cols.append(
-        F.when(apply, F.col("_s_del"))
-        .otherwise(F.coalesce(F.col(DELETED_FIELD), F.lit(False)))
-        .alias(DELETED_FIELD)
-    )
-    result = joined.select(*out_cols)
-    if tombstone_gc_below_lsn is not None:
-        result = result.filter(
-            ~(F.col(DELETED_FIELD) & (F.col(LSN_FIELD) < F.lit(tombstone_gc_below_lsn)))
-        )
-
-    return table.replace_buckets(
-        touched,
-        result,
+    return _rewrite_buckets(
+        table, man, touched, key_cols, delta=delta, salt=write_salt,
+        tombstone_gc_below_lsn=tombstone_gc_below_lsn,
         summary={"touched_buckets": sorted(touched), **(summary or {})},
         watermarks_update=watermarks_update,
-        write_salt=write_salt,
-        base_version=man["version"],
     )
 
 
@@ -297,24 +302,11 @@ def compact_buckets(
     spec = BucketSpec.from_json(base.get("bucket"))
     if spec is None:
         raise ValueError("compact_buckets requires a bucketed table")
-    target = set(buckets) if buckets is not None else set(range(spec.buckets))
     keys = base.get("properties", {}).get("merge_keys")
     if not keys:
         raise ValueError("compact_buckets needs merge_keys table property (mor table)")
-    for attempt in range(retries):
-        raw = table.read(version=base["version"], buckets=target, include_tombstones=True, fold=False)
-        folded = lww_fold(raw, keys, LSN_FIELD)
-        if tombstone_gc_below_lsn is not None:
-            folded = folded.filter(
-                ~(F.coalesce(F.col(DELETED_FIELD), F.lit(False)) & (F.col(LSN_FIELD) < F.lit(tombstone_gc_below_lsn)))
-            )
-        try:
-            return table.replace_buckets(
-                target, folded, summary=summary, op="compact",
-                base_version=base["version"], cluster_by=cluster_by,
-            )
-        except CommitConflict:
-            if attempt == retries - 1:
-                raise
-            base = table.manifest()
-    raise CommitConflict("unreachable")
+    return _rewrite_buckets(
+        table, base, set(buckets) if buckets is not None else set(range(spec.buckets)), keys,
+        tombstone_gc_below_lsn=tombstone_gc_below_lsn, retries=retries,
+        summary=summary, op="compact", cluster_by=cluster_by,
+    )

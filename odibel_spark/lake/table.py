@@ -89,11 +89,13 @@ class BucketSpec:
 
 def lww_fold(df: DataFrame, group_cols: list[str], order_col: str) -> DataFrame:
     """Last-writer-wins fold: one row per ``group_cols`` group, carrying
-    the other columns of the row with the highest ``order_col``. One
-    hash aggregation with map-side partial ``max_by``, no sort. The
-    lake's single LWW fold: the MoR merge pre-fold (grouped on
-    ``_bucket[, _salt]`` + keys, so the layout exchange also serves the
-    aggregation), compaction and the read-time fold all call it."""
+    the other columns of the row with the highest ``order_col``. Spark
+    plans ``max_by(struct, …)`` as a sort aggregate: on a fresh input,
+    a sort and a partial aggregate before the exchange and a sort and
+    the final aggregate after it. The lake's single LWW fold: the
+    merge and compaction (grouped on ``_bucket[, _salt]`` + keys, so
+    the bucket layout exchange also serves the aggregation, and both
+    aggregate steps run after it) and the read-time fold all call it."""
     others = [c for c in df.columns if c not in group_cols]
     winner = F.max_by(F.struct(*[F.col(c) for c in others]), F.col(order_col)).alias("_w")
     return (
@@ -410,7 +412,6 @@ class LakeTable:
         self,
         df: DataFrame,
         base: dict,
-        write_salt: int = 1,
         cluster_by: tuple[str, ...] = (),
         cluster_files: int | None = None,
     ) -> list[dict]:
@@ -420,15 +421,10 @@ class LakeTable:
         tables cluster rows so each file belongs to one bucket
         (partitionBy directory = bucket id).
 
-        ``write_salt > 1`` splits each bucket's write across that many
-        tasks (deterministic row-hash salt): a hot conversation that
-        dominates one bucket otherwise serializes the whole commit
-        behind a single straggler task. Files still land in exactly one
-        bucket directory — read-side pruning is unaffected.
-
         A caller that already clustered the rows by a ``_bucket``
-        column (e.g. the MoR merge, which reuses its fold shuffle for
-        the layout) skips the extra repartition exchange entirely.
+        column (the merge and compaction, which reuse their fold
+        shuffle for the layout and may split a hot bucket over several
+        tasks by key hash) skips the extra repartition exchange.
 
         ``cluster_by`` is the table's sort-order lever (Iceberg sort
         orders / Delta ``OPTIMIZE ZORDER`` in spirit): on an unbucketed
@@ -457,20 +453,9 @@ class LakeTable:
         commit_dir = os.path.join(self.root, DATA_DIR, f"c{base['version'] + 1}-{uuid.uuid4().hex[:8]}")
         bucket = BucketSpec.from_json(base.get("bucket"))
         if bucket:
-            pre_bucketed = "_bucket" in df.columns
-            out = df if pre_bucketed else df.withColumn("_bucket", bucket.expr())
-            if not pre_bucketed:
-                if write_salt > 1:
-                    salt = F.pmod(
-                        F.xxhash64(F.struct(*[F.col(c) for c in df.columns])), F.lit(write_salt)
-                    )
-                    out = (
-                        out.withColumn("_salt", salt)
-                        .repartition(bucket.buckets * write_salt, "_bucket", "_salt")
-                        .drop("_salt")
-                    )
-                else:
-                    out = out.repartition(bucket.buckets, "_bucket")
+            out = df
+            if "_bucket" not in df.columns:
+                out = df.withColumn("_bucket", bucket.expr()).repartition(bucket.buckets, "_bucket")
             # lead with _bucket: the partitionBy writer REQUIRES tasks
             # ordered by the partition column and silently inserts its
             # own (unstable) sort when they aren't — which would clobber
@@ -799,7 +784,6 @@ class LakeTable:
         df: DataFrame,
         summary: dict | None = None,
         watermarks_update: dict | None = None,
-        write_salt: int = 1,
         op: str = "append",
         cluster_by: tuple[str, ...] = (),
         cluster_files: int | None = None,
@@ -809,9 +793,7 @@ class LakeTable:
         """Append ``df``. ``_base`` (lake-internal): a head manifest the
         caller already read and built ``df`` from, committed on as is."""
         base = _base or self.manifest()
-        new = self._write_data_files(
-            df, base, write_salt, cluster_by=cluster_by, cluster_files=cluster_files
-        )
+        new = self._write_data_files(df, base, cluster_by=cluster_by, cluster_files=cluster_files)
         return self._next_commit(base, new, self._tagged(summary, op), watermarks_update)
 
     def overwrite(
@@ -869,7 +851,6 @@ class LakeTable:
         summary: dict | None = None,
         watermarks_update: dict | None = None,
         schema: T.StructType | None = None,
-        write_salt: int = 1,
         base_version: int | None = None,
         op: str = "merge",
         cluster_by: tuple[str, ...] = (),
@@ -893,7 +874,7 @@ class LakeTable:
         instead; the caller must recompute from the fresh snapshot."""
         base = self.manifest(base_version)
         base_target = sorted(f["path"] for f in base["files"] if f.get("bucket") in buckets)
-        new = self._write_data_files(df, base, write_salt, cluster_by=cluster_by)
+        new = self._write_data_files(df, base, cluster_by=cluster_by)
         stray = [f for f in new if f.get("bucket") not in buckets and f["rows"] > 0]
         if stray:
             raise ValueError(f"replacement data contains rows outside target buckets: {stray}")

@@ -143,6 +143,58 @@ def test_tombstone_fences_stale_update_and_compaction(spark, tmpdir_path):
     assert t.read(include_tombstones=True).count() == 0
 
 
+def test_cow_merge_equals_compacted_mor_including_tombstones(spark, tmpdir_path):
+    """Copy-on-write is merge-on-read compacted at write time: applied
+    batch by batch, the CoW table's raw rows (tombstones, ``_lsn`` and
+    ``_deleted`` included) equal the MoR table's after compaction —
+    across a stale update below a tombstone's fence, a schema change
+    between batches and equal-LSN ties from a re-applied batch."""
+    from odibel_spark.lake.merge import compact_buckets
+
+    cow = make_table(spark, os.path.join(tmpdir_path, "eq_cow"), buckets=4)
+    mor = create_cdc_table(
+        spark, os.path.join(tmpdir_path, "eq_mor"), TRANSCRIPT_FIELDS,
+        BucketSpec("conv_id", 4), key_cols=KEYS, merge_mode="mor",
+    )
+    base = "lsn long, op string, conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    b1 = [
+        (1, "insert", "c1", 0, "user", "a", None, None),
+        (2, "insert", "c2", 0, "user", "b", None, None),
+        (2, "insert", "c2", 0, "user", "b", None, None),  # exact duplicate
+        (3, "insert", "c3", 0, "user", "c", "t1", None),
+        (4, "insert", "c1", 1, "assistant", "d", None, None),
+    ]
+    b2 = [
+        (10, "update", "c1", 0, "user", "a2", None, None),
+        (20, "delete", "c2", 0, None, None, None, None),
+    ]
+    b3 = [
+        (15, "update", "c2", 0, "user", "ZOMBIE", None, None, "z"),  # stale: below the tombstone
+        (30, "insert", "c4", 0, "user", "e", None, None, "m"),
+        (31, "update", "c3", 0, "user", "c2", None, None, "m2"),
+    ]
+    batches = [(b1, base), (b2, base), (b3, base + ", meta string"), (b2, base)]  # b2 re-applied
+    for i, (rows, schema) in enumerate(batches):
+        if i == 2:
+            for t in (cow, mor):
+                t.add_columns([T.StructField("meta", T.StringType(), True)])
+        for t in (cow, mor):
+            merge_upsert(t, spark.createDataFrame(rows, schema), KEYS)
+    compact_buckets(mor)
+
+    def raw(t):
+        return sorted(tuple(sorted(r.asDict().items())) for r in t.read(include_tombstones=True).collect())
+
+    got = raw(cow)
+    assert got == raw(mor)
+    by_key = {(d["conv_id"], d["turn_idx"]): d for d in map(dict, got)}
+    assert len(by_key) == len(got) == 5
+    assert (by_key[("c2", 0)]["_deleted"], by_key[("c2", 0)]["_lsn"], by_key[("c2", 0)]["text"]) == (True, 20, None)
+    assert (by_key[("c1", 0)]["text"], by_key[("c1", 0)]["_lsn"], by_key[("c1", 0)]["meta"]) == ("a2", 10, None)
+    assert (by_key[("c3", 0)]["text"], by_key[("c3", 0)]["tool"], by_key[("c3", 0)]["meta"]) == ("c2", None, "m2")
+    assert not any(d["_deleted"] for k, d in by_key.items() if k != ("c2", 0))
+
+
 def test_merge_bucket_pruning(spark, tmpdir_path):
     """A batch touching one key must carry over every untouched bucket's
     files unchanged (copy-on-write unit = bucket)."""

@@ -261,15 +261,26 @@ def test_normalizer_promotes_legacy_variants(spark):
 def test_maintenance_compacts_and_vacuums(spark, wal_dir, tmpdir_path):
     base = os.path.join(tmpdir_path, "maint")
     os.makedirs(base)
+    slack = 5_000
     p = run_pipeline(
         spark, wal_dir, base, max_files_per_trigger=2,
-        merge_mode="mor", compact_every_epochs=None,
+        merge_mode="mor", compact_every_epochs=None, tombstone_gc_lsn_slack=slack,
     )
     exp = oracle_state(spark, CFG)
     n_files_before = len(p.table().files())
     v_before_maint = p.table().current_version()
+
+    def tombstones():
+        rows = p.table().read(include_tombstones=True).filter("_deleted").select("conv_id", "turn_idx", "_lsn")
+        return {tuple(r) for r in rows.collect()}
+
+    # GC threshold: the highest applied LSN minus the slack
+    threshold = p.table().read(fold=False, include_tombstones=True).agg(F.max("_lsn")).collect()[0][0] - slack
+    before = tombstones()
+    assert {r[2] < threshold for r in before} == {True, False}, "fixture needs tombstones on both sides"
     out = p.maintenance(keep_versions=1, vacuum_grace_seconds=0)
     assert out["compacted"] and out["vacuumed_files"] > 0
+    assert tombstones() == {r for r in before if r[2] >= threshold}
     # compaction bounds files to one set per bucket; data unchanged
     assert len(p.table().files()) <= n_files_before
     cols = PAYLOAD_COLS

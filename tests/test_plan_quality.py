@@ -3,8 +3,8 @@
 Correctness tests prove the operators compute the right rows; these
 prove they compute them the way a 1000-executor deployment needs:
 filters reach the parquet scan, projections prune columns, dimension
-joins broadcast, top-k avoids global sorts, the LWW fold is a hash
-aggregation (not a sort window), and the MoR merge's fold + bucket
+joins broadcast, top-k avoids global sorts, the LWW fold is an
+aggregation (not a window), and every lake write's fold + bucket
 layout share ONE exchange. A regression here is invisible at sf0.01
 and fatal at 100 TB, which is exactly why it is pinned by tests.
 """
@@ -62,21 +62,62 @@ def test_lww_fold_single_shuffle_with_partial_agg(spark, sf_dir):
 
 def test_mor_merge_single_exchange(spark, tmpdir_path):
     """The fused MoR claim: fold + bucket layout share one exchange.
-    The plan is built with the merge's own fold helper over the same
-    bucket repartition, grouped on (_bucket, *keys) as the merge does."""
-    from odibel_spark.lake.table import BucketSpec, lww_fold
+    The plan is built with the merge's own fold-by-bucket helper, with
+    and without the key salt that splits hot buckets."""
+    from odibel_spark.lake.merge import _fold_by_bucket
+    from odibel_spark.lake.table import BucketSpec
 
     src = spark.createDataFrame(
-        [(1, "insert", "c1", 0, "user", "hi", None, None)],
-        "lsn long, op string, conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+        [(1, "c1", 0, "user", "hi", None, None, False)],
+        "_lsn long, conv_id string, turn_idx int, role string, text string, tool string, ts timestamp, _deleted boolean",
     )
-    spec = BucketSpec("conv_id", 8)
-    pre = src.withColumn("_bucket", spec.expr()).repartition(8, "_bucket")
-    p = plan(lww_fold(pre, ["_bucket", "conv_id", "turn_idx"], "lsn"))
-    assert count_exchanges(p) == 1, (
-        "bucket repartition must satisfy the groupBy distribution — a second "
-        "exchange means Catalyst stopped accepting the bucket partitioning"
+    pre = src.withColumn("_bucket", BucketSpec("conv_id", 8).expr())
+    for salt in (1, 2):
+        p = plan(_fold_by_bucket(pre, 8, ["conv_id", "turn_idx"], salt))
+        assert count_exchanges(p) == 1, (
+            "bucket repartition must satisfy the groupBy distribution — a second "
+            "exchange means Catalyst stopped accepting the bucket partitioning"
+        )
+
+
+def test_cow_merge_and_compaction_write_one_exchange(spark, tmpdir_path, monkeypatch):
+    """A copy-on-write MERGE and a compaction are one bucket rewrite:
+    the frame handed to the writer already carries ``_bucket`` (so the
+    writer adds no repartition of its own) and holds exactly ONE
+    exchange, which serves the target ∪ delta fold and the layout."""
+    from pyspark.sql import types as T
+
+    from odibel_spark.lake import BucketSpec, LakeTable, create_cdc_table, merge_upsert
+    from odibel_spark.lake.merge import compact_buckets
+
+    handed = []
+    write = LakeTable._write_data_files
+
+    def spy(self, df, *args, **kwargs):
+        handed.append(df)
+        return write(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "_write_data_files", spy)
+    fields = [T.StructField("conv_id", T.StringType(), False),
+              T.StructField("turn_idx", T.IntegerType(), False),
+              T.StructField("text", T.StringType(), True)]
+    keys = ["conv_id", "turn_idx"]
+    batch = spark.createDataFrame(
+        [(1, "insert", "c1", 0, "a"), (2, "insert", "c2", 0, "b"), (3, "delete", "c1", 0, None)],
+        "lsn long, op string, conv_id string, turn_idx int, text string",
     )
+    cow = create_cdc_table(spark, os.path.join(tmpdir_path, "cow"), fields, BucketSpec("conv_id", 4))
+    mor = create_cdc_table(
+        spark, os.path.join(tmpdir_path, "mor"), fields, BucketSpec("conv_id", 4),
+        key_cols=keys, merge_mode="mor",
+    )
+    for t in (cow, mor):
+        merge_upsert(t, batch, keys)
+        merge_upsert(t, batch.withColumn("lsn", F.col("lsn") + 10), keys)
+    handed.clear()
+    merge_upsert(cow, batch.withColumn("lsn", F.col("lsn") + 20), keys)
+    compact_buckets(mor)
+    assert [("_bucket" in df.columns, count_exchanges(plan(df))) for df in handed] == [(True, 1)] * 2
 
 
 def test_ivf_probe_prunes_scan(spark, sf_dir):
