@@ -12,16 +12,20 @@ North-rule mechanics and where they live:
   (bounded keyed state) plus the exact fold inside MERGE (belt and
   braces: the in-stream dedup bounds state, the in-merge fold is the
   correctness guarantee).
-- **exactly-once commits** → epoch fencing: the micro-batch id is
-  stamped into the lake commit's ``watermarks`` map atomically with
-  the data; a replayed batch (crash after commit, before checkpoint)
-  sees ``epoch <= watermark`` and is skipped. Reference gap this
-  fixes: blind ``overwrite`` sink (DBpediaTKGExtractionSpark.scala:44).
+- **exactly-once commits** → one epoch fence for every table the sink
+  writes (data, dead letters, lineage, metrics): each write stamps the
+  micro-batch id into that table's ``watermarks`` map atomically with
+  its rows, and a table whose watermark already reaches the epoch is
+  skipped. A batch replayed after a crash (anywhere between two of
+  those commits, or before the checkpoint) redoes only the writes that
+  had not landed. Reference gap this fixes: blind ``overwrite`` sink
+  (DBpediaTKGExtractionSpark.scala:44).
 - **resumable lineage** → per-epoch, per-bucket applied-LSN high-water
-  marks, stamped into the data commit's summary and appended to a
-  lineage LakeTable; throughput metrics rows per batch (reference
-  ThroughputMonitor/HeartbeatMonitor semantics,
-  utils/ThrougputMonitor.scala:5-23, log/HeartbeatMonitor.scala:11-71).
+  marks and the epoch's event/dead-letter counts, stamped into the data
+  commit's summary; the lineage and throughput-metrics side tables are
+  built from that one record (reference ThroughputMonitor/
+  HeartbeatMonitor semantics, utils/ThrougputMonitor.scala:5-23,
+  log/HeartbeatMonitor.scala:11-71).
 - **failures never become deletes** → corrupt events split to a
   dead-letter LakeTable before MERGE
   (DBpediaTKGExtraction.scala:174-195 policy).
@@ -48,7 +52,7 @@ from pyspark.sql import types as T
 from odibel_spark.cdc.evolution import diff_new_fields, discover_wal_schema, normalize_batch
 from odibel_spark.cdc.replay import EVENT_ID_COLS, KEY_COLS, split_dead_letters
 from odibel_spark.lake.merge import SYSTEM_FIELDS, merge_upsert
-from odibel_spark.lake.table import BucketSpec, LakeTable
+from odibel_spark.lake.table import BucketSpec, LakeTable, _schema_of
 
 #: WAL bookkeeping columns that never become table payload
 WAL_META_COLS = ("lsn", "op", "wal_chunk")
@@ -203,19 +207,25 @@ class TranscriptCdcPipeline:
         return table, wal_schema
 
     # --------------------------------------------------------- the sink
+    def _behind(self, man: dict, epoch_id: int) -> bool:
+        """The epoch fence, one rule for every table the sink writes: a
+        table whose ``watermarks[stream_id]`` already reaches the epoch
+        holds this epoch's write, so the sink skips it."""
+        return man.get("watermarks", {}).get(self.cfg.stream_id, -1) < epoch_id
+
     def _apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         t0 = time.time()
+        fence = {self.cfg.stream_id: epoch_id}
         table = LakeTable(self.spark, self.table_root)
         head = table.manifest()
-        if epoch_id <= head["watermarks"].get(self.cfg.stream_id, -1):
-            # crash happened after lake commit, before checkpoint commit:
-            # the batch replays — skip it (exactly-once fence), but make
-            # sure its side-table rows exist (they commit after the data).
-            # Drain the batch through the noop sink: Spark 4 validates
-            # that foreachBatch consumed every partition (the upstream
-            # dedup state stores must commit).
+        if not self._behind(head, epoch_id):
+            # crash happened after the data commit, before the checkpoint
+            # commit: the batch replays. Drain it through the noop sink
+            # (Spark 4 validates that foreachBatch consumed every
+            # partition — the upstream dedup state stores must commit),
+            # then finish whichever side table the crash left behind.
             batch_df.write.format("noop").mode("overwrite").save()
-            self._ensure_side_rows(epoch_id)
+            self._append_side_rows(epoch_id, self._epoch_summary(table, head, epoch_id), 0.0)
             return
 
         from odibel_spark.cdc.replay import dead_letter_predicate
@@ -253,17 +263,22 @@ class TranscriptCdcPipeline:
 
             if n_dead:
                 dl = LakeTable(self.spark, self.dead_root)
-                dead = flagged.filter(F.col("_dead")).drop("_dead", "_b")
-                out = dead.select(
-                    *[
-                        (F.col(f.name) if f.name in dead.columns else F.lit(None).cast(f.dataType)).alias(f.name)
-                        for f in dl.schema().fields
-                    ]
-                )
-                # dead letters are a trickle — one output file keeps the
-                # commit (and its footer bookkeeping) off the batch's
-                # critical path
-                dl.append(out.coalesce(1), summary={"stream_id": self.cfg.stream_id, "epoch": epoch_id})
+                dl_head = dl.manifest()
+                if self._behind(dl_head, epoch_id):
+                    dead = flagged.filter(F.col("_dead")).drop("_dead", "_b")
+                    out = dead.select(
+                        *[
+                            (F.col(f.name) if f.name in dead.columns else F.lit(None).cast(f.dataType)).alias(f.name)
+                            for f in _schema_of(dl_head).fields
+                        ]
+                    )
+                    # dead letters are a trickle — one output file keeps
+                    # the commit (and its footer bookkeeping) off the
+                    # batch's critical path
+                    dl.append(
+                        out.coalesce(1), summary={"stream_id": self.cfg.stream_id, "epoch": epoch_id},
+                        watermarks_update=fence, _base=dl_head,
+                    )
 
             gc_below = None
             if self.cfg.tombstone_gc_lsn_slack is not None and lineage_rows:
@@ -287,12 +302,12 @@ class TranscriptCdcPipeline:
                     hot = max(ok_counts)
                     if mean > 0 and hot >= 4 * mean and hot >= _MIN_SALT_HOT:
                         write_salt = min(8, max(2, round(hot / (2 * mean))))
-            merge_upsert(
+            man = merge_upsert(
                 table,
                 flagged.filter(~F.col("_dead")).drop("_dead", "_b"),
                 KEY_COLS,
-                # the epoch's bookkeeping rides the data commit, so a
-                # fenced replay can re-emit it exactly (_ensure_side_rows)
+                # the epoch's record: the side rows are built from it,
+                # on a fenced replay too (_epoch_summary)
                 summary={
                     "stream_id": self.cfg.stream_id,
                     "epoch": epoch_id,
@@ -300,10 +315,11 @@ class TranscriptCdcPipeline:
                     "n_dead": n_dead,
                     "lineage": lineage_rows,
                 },
-                watermarks_update={self.cfg.stream_id: epoch_id},
+                watermarks_update=fence,
                 touched_buckets=touched,
                 tombstone_gc_below_lsn=gc_below,
                 write_salt=write_salt,
+                _base=head,
             )
             if (
                 self.cfg.merge_mode == "mor"
@@ -322,86 +338,46 @@ class TranscriptCdcPipeline:
             if self.cfg.fail_after_commit_epoch == epoch_id:
                 raise RuntimeError(f"fault-injection: crash after commit of epoch {epoch_id}")
 
-            self._append_side_rows(epoch_id, lineage_rows, n_ok, n_dead, time.time() - t0)
+            self._append_side_rows(epoch_id, man["summary"], time.time() - t0)
         finally:
             flagged.unpersist()
 
-    def _append_side_rows(self, epoch_id, lineage_rows, n_ok, n_dead, secs) -> None:
-        # driver-side pyarrow appends: per-batch bookkeeping is a few
-        # rows — a distributed write job here would be pure scheduling
-        # overhead at every micro-batch
+    def _append_side_rows(self, epoch_id: int, summary: dict, secs: float) -> None:
+        """Lineage and metrics rows from the epoch's data-commit record
+        (``summary``: ``lineage``, ``n_events``, ``n_dead``), appended
+        to each side table the fence shows behind. Driver-side pyarrow
+        appends: per-batch bookkeeping is a few rows — a distributed
+        write job here would be pure scheduling overhead."""
         import datetime as _dt
 
-        now = _dt.datetime.now(_dt.timezone.utc)
-        lin = LakeTable(self.spark, self.lineage_root)
-        rows = [
-            {
-                "stream_id": self.cfg.stream_id,
-                "epoch": epoch_id,
-                "bucket": r["bucket"],
-                "n_events": r["n_events"],
-                "min_lsn": r["min_lsn"],
-                "max_lsn": r["max_lsn"],
-                "committed_at": now,
-            }
-            for r in lineage_rows
-        ] or [
-            {
-                "stream_id": self.cfg.stream_id,
-                "epoch": epoch_id,
-                "bucket": None,
-                "n_events": 0,
-                "min_lsn": None,
-                "max_lsn": None,
-                "committed_at": now,
-            }
-        ]
-        lin.append_rows(rows, summary={"epoch": epoch_id})
-        met = LakeTable(self.spark, self.metrics_root)
-        met.append_rows(
-            [
-                {
-                    "stream_id": self.cfg.stream_id,
-                    "epoch": epoch_id,
-                    "n_events": n_ok,
-                    "n_dead": n_dead,
-                    "batch_seconds": secs,
-                    "events_per_sec": (n_ok / secs) if secs > 0 else None,
-                    "committed_at": now,
-                }
-            ],
-            summary={"epoch": epoch_id},
-        )
+        key = {"stream_id": self.cfg.stream_id, "epoch": epoch_id,
+               "committed_at": _dt.datetime.now(_dt.timezone.utc)}
+        n_ok = summary.get("n_events", 0)
+        lineage = [{**key, **r} for r in summary.get("lineage", [])] or [{**key, "bucket": None, "n_events": 0}]
+        metrics = [{
+            **key, "n_events": n_ok, "n_dead": summary.get("n_dead", 0), "batch_seconds": secs,
+            "events_per_sec": (n_ok / secs) if secs > 0 else None,
+        }]
+        for root, rows in ((self.lineage_root, lineage), (self.metrics_root, metrics)):
+            side = LakeTable(self.spark, root)
+            side_head = side.manifest()
+            if self._behind(side_head, epoch_id):
+                side.append_rows(
+                    rows, summary={"epoch": epoch_id},
+                    watermarks_update={self.cfg.stream_id: epoch_id}, _base=side_head,
+                )
 
-    def _ensure_side_rows(self, epoch_id: int) -> None:
-        """Idempotent catch-up when a batch replay was fenced: if the
-        crash hit between lake commit and side-table append, re-emit
-        the epoch's lineage and counts from its data commit's summary.
-        The walk goes back from the head and stops at the epoch's
-        commit (or an older epoch of this stream), so its cost does
-        not grow with table history."""
-        lin = LakeTable(self.spark, self.lineage_root)
-        present = (
-            lin.read()
-            .filter((F.col("stream_id") == self.cfg.stream_id) & (F.col("epoch") == epoch_id))
-            .limit(1)
-            .count()
-        )
-        if present:
-            return
-        table = LakeTable(self.spark, self.table_root)
-        found: dict = {}
-        for v in range(table.current_version(), 0, -1):
+    def _epoch_summary(self, table: LakeTable, head: dict, epoch_id: int) -> dict:
+        """A fenced epoch's data-commit summary. The walk goes back from
+        the head and stops at the epoch's commit (or an older epoch of
+        this stream), so its cost does not grow with table history."""
+        for v in range(head["version"], 0, -1):
             s = table.manifest(v).get("summary", {})
             if s.get("stream_id") != self.cfg.stream_id or "epoch" not in s:
                 continue  # other writers, schema evolution, compaction
-            if s["epoch"] == epoch_id:
-                found = s
             if s["epoch"] <= epoch_id:
-                break
-        self._append_side_rows(
-            epoch_id, found.get("lineage", []), found.get("n_events", 0), found.get("n_dead", 0), 0.0
-        )
+                return s if s["epoch"] == epoch_id else {}
+        return {}
 
     # ---------------------------------------------------------- running
     def _stream_reader(self, wal_schema: T.StructType) -> DataFrame:

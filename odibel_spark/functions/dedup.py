@@ -99,16 +99,6 @@ def _cache_scoped(df: DataFrame) -> DataFrame:
     return df
 
 
-def _collapse_from_probe(n: int, d: int) -> bool:
-    """The ``"auto"`` decision given a probe's (row count, distinct
-    fingerprint count): collapse unless the sample is essentially
-    clean. Shared by ``_resolve_collapse`` and the fused dim+dup probe
-    in ``embedding_lsh_candidates`` so the threshold lives once."""
-    if n == 0:
-        return False  # empty input: both arms are trivially identical
-    return (d / n) < COLLAPSE_AUTO_MIN_DISTINCT
-
-
 def _resolve_collapse(
     docs: DataFrame,
     fingerprint: F.Column,
@@ -142,29 +132,8 @@ def _resolve_collapse(
         .agg(F.count("*").alias("n"), F.count_distinct("_fp").alias("d"))
         .first()
     )
-    return _collapse_from_probe(row["n"] or 0, row["d"] or 0)
-
-
-def _vector_dim_hint(emb: DataFrame, vec_col: str) -> int | None:
-    """Fixed embedding width from the column's schema METADATA, when a
-    producer recorded one under the key ``"dim"`` — e.g.
-    ``df.select(F.col("v").alias("v", metadata={"dim": 768}))``.
-    Spark array types carry no length, so this is an opt-in hint that
-    lets ``embedding_lsh_candidates`` stay fully lazy without the
-    caller passing ``dim``; absent or malformed metadata returns None
-    and the probe remains the last resort. ONLY the exact documented
-    key is honored: generic keys like ``size``/``length`` routinely
-    mean something other than vector width, and a wrong width here is
-    silent poison — ``zip_with`` null-pads the mismatch, the dot
-    product folds to NULL, and every signature collapses to 0."""
-    try:
-        meta = emb.schema[vec_col].metadata or {}
-    except Exception:
-        return None
-    v = meta.get("dim")
-    if isinstance(v, int) and not isinstance(v, bool) and v > 0:
-        return v
-    return None
+    n, d = row["n"] or 0, row["d"] or 0
+    return n > 0 and (d / n) < COLLAPSE_AUTO_MIN_DISTINCT  # empty input: both arms identical
 
 
 def _str_hash(col) -> F.Column:
@@ -828,7 +797,8 @@ def embedding_lsh_candidates(
     n_planes: int = 16,
     bands: int = 4,
     seed: int = 42,
-    dim: int | None = None,
+    *,
+    dim: int,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
     observation=None,
     collapse: bool | str = "auto",
@@ -839,12 +809,9 @@ def embedding_lsh_candidates(
     bucket equi-join — the 10^9-vector path; verify survivors with the
     exact cosine afterwards.
 
-    Pass ``dim`` (the embedding width — the caller's schema knows it)
-    and an explicit ``collapse`` boolean to keep plan construction
-    fully lazy. When ``dim`` is omitted (and no ``{"dim": n}`` column
-    metadata hint is present) AND ``collapse="auto"``, both unknowns
-    are resolved by ONE fused bounded probe (width + duplicate rate in
-    a single ≤``COLLAPSE_PROBE_ROWS``-row job), not two.
+    ``dim`` is the embedding width (the caller's schema knows it;
+    Spark array types carry no length). With an explicit ``collapse``
+    boolean, plan construction stays fully lazy.
 
     Skew guard mirrors the MinHash path: byte-identical vectors are
     collapsed to one representative per value fingerprint before
@@ -856,10 +823,6 @@ def embedding_lsh_candidates(
     (``"auto"``, the default, probes the sampled duplicate rate; False
     skips the fingerprint shuffle; the cap then counts vectors,
     not distinct values — safe only post-exact-dedup)."""
-    if dim is None:
-        # fixed-width hint first (attach via .alias(metadata={"dim": n})
-        # or any writer that records it); else the bounded probe below
-        dim = _vector_dim_hint(emb, vec_col)
     clear_dedup_caches()
     # xxhash64 over (null-sentineled values, null mask) — NOT md5 of a
     # string concat: serializing every vector element to text twice per
@@ -874,32 +837,6 @@ def embedding_lsh_candidates(
         F.transform(F.col(vec_col), lambda x: F.coalesce(x, F.lit(float("nan")))),
         F.transform(F.col(vec_col), lambda x: x.isNull()),
     )
-    if dim is None and collapse == "auto":
-        # fused probe: vector width AND duplicate rate from one bounded
-        # job instead of two driver round-trips over the same prefix
-        row = (
-            emb.select(vec_fp.alias("_fp"), F.size(F.col(vec_col)).alias("_w"))
-            .limit(COLLAPSE_PROBE_ROWS)
-            .agg(
-                F.count("*").alias("n"),
-                F.count_distinct("_fp").alias("d"),
-                F.first("_w").alias("w"),
-            )
-            .first()
-        )
-        if not row["n"]:
-            raise ValueError(
-                f"cannot infer embedding width from empty input; pass dim= to {vec_col!r}'s LSH"
-            )
-        dim = int(row["w"])
-        collapse = _collapse_from_probe(row["n"], row["d"] or 0)
-    elif dim is None:  # fallback probe — an eager job; prefer passing dim
-        head = emb.select(F.size(F.col(vec_col)).alias("d")).first()
-        if head is None:
-            raise ValueError(
-                f"cannot infer embedding width from empty input; pass dim= to {vec_col!r}'s LSH"
-            )
-        dim = int(head["d"])
     collapse = _resolve_collapse(emb, vec_fp, collapse)
     if not collapse:
         planes = random_hyperplanes(dim, n_planes, seed)

@@ -185,8 +185,12 @@ def merge_upsert(
     tombstone_gc_below_lsn: int | None = None,
     touched_buckets: set[int] | None = None,
     write_salt: int = 1,
+    *,
+    _base: dict | None = None,
 ) -> dict:
     """Apply a CDC batch to the table; returns the committed manifest.
+    ``_base`` (lake-internal): a head manifest the caller already read,
+    merged and committed on as is.
 
     The table schema must contain ``key_cols`` + payload columns +
     ``_lsn``/``_deleted`` (see ``cdc_table_schema``). Source columns
@@ -221,7 +225,7 @@ def merge_upsert(
     after. Convergence under either posture, any batching/order, is
     property-proven (test_merge_converges_for_any_batching_and_order).
     """
-    man = table.manifest()
+    man = _base or table.manifest()
     mor = man.get("properties", {}).get("merge_mode") == "mor"
     if not fold and not mor:
         raise ValueError(

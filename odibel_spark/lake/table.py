@@ -743,16 +743,20 @@ class LakeTable:
         change rows. Any ``op`` key in ``summary`` is dropped."""
         return {**{k: v for k, v in (summary or {}).items() if k != "op"}, "op": op}
 
-    def append_rows(self, rows: list[dict], summary: dict | None = None) -> dict:
+    def append_rows(
+        self, rows: list[dict], summary: dict | None = None,
+        watermarks_update: dict | None = None, *, _base: dict | None = None,
+    ) -> dict:
         """Driver-side append of a handful of rows (lineage/metrics
         bookkeeping): writes one parquet file via pyarrow, no Spark job.
         A streaming sink that launched a distributed job to persist a
         three-row metrics record would spend more on scheduling than on
-        data — this is the per-micro-batch fast path."""
+        data — this is the per-micro-batch fast path. ``_base`` as in
+        ``append``."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        base = self.manifest()
+        base = _base or self.manifest()
         if not rows:
             return base
         schema = _schema_of(base)
@@ -777,7 +781,7 @@ class LakeTable:
                 **({"stats": stats} if stats else {}),
             }
         ]
-        return self._next_commit(base, new, self._tagged(summary, "append"))
+        return self._next_commit(base, new, self._tagged(summary, "append"), watermarks_update)
 
     def append(
         self,

@@ -530,23 +530,15 @@ def test_kmeans_assign_broadcast_survives_centers_column_collision(spark):
     ]
 
 
-def test_vector_dim_hint_honors_only_documented_key(spark):
-    """Only the documented ``{"dim": n}`` metadata key sets the width:
-    generic ``size``/``length`` keys routinely mean something else, and
-    a wrong width silently zeroes every LSH signature (zip_with
-    null-pads, the dot product folds to NULL)."""
-    from odibel_spark.functions.dedup import _vector_dim_hint
+def test_embedding_lsh_candidates_requires_dim(spark):
+    """The embedding width is a required keyword: Spark array types
+    carry no length, and inferring it cost an eager probe job at plan
+    construction."""
+    from odibel_spark.functions import dedup as D
 
-    import pyspark.sql.functions as SF
-
-    base = spark.range(3).select(
-        SF.transform(SF.sequence(SF.lit(1), SF.lit(6)), lambda j: j.cast("double")).alias("v")
-    )
-    hinted = base.select(SF.col("v").alias("v", metadata={"dim": 6}))
-    assert _vector_dim_hint(hinted, "v") == 6
-    for bad in ({"size": 512}, {"length": 512}, {"dim": -1}, {"dim": True}, {}):
-        df = base.select(SF.col("v").alias("v", metadata=bad))
-        assert _vector_dim_hint(df, "v") is None, bad
+    emb = spark.createDataFrame([(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id long, embedding array<double>")
+    with pytest.raises(TypeError, match="dim"):
+        D.embedding_lsh_candidates(emb, "vec_id", "embedding", n_planes=8, bands=4)
 
 
 def test_ivf_recall_floor_on_clustered_vectors(spark, sf_dir):

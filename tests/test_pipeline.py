@@ -81,7 +81,7 @@ def test_stream_end_to_end(spark, wal_dir, tmpdir_path):
     assert met.agg(F.sum("n_events")).collect()[0][0] > 0
 
 
-def test_exactly_once_under_crash_restart(spark, wal_dir, tmpdir_path):
+def test_exactly_once_under_crash_restart(spark, wal_dir, tmpdir_path, monkeypatch):
     # phase 1: crash right AFTER the lake commit of epoch 1 (worst case:
     # lake state advanced, checkpoint not yet — batch will replay)
     with pytest.raises(Exception):  # Spark wraps the injected RuntimeError
@@ -94,8 +94,19 @@ def test_exactly_once_under_crash_restart(spark, wal_dir, tmpdir_path):
     t = LakeTable.load(spark, os.path.join(tmpdir_path, "transcripts"))
     assert t.watermark("wal") == 1
 
-    # phase 2: restart without fault — replayed epoch must be fenced
+    # phase 2: restart without fault — replayed epoch must be fenced,
+    # and finishing its side rows must not probe the lineage table
+    read_roots = []
+    real_read = LakeTable.read
+
+    def spy_read(self, *args, **kwargs):
+        read_roots.append(self.root)
+        return real_read(self, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "read", spy_read)
     p = run_pipeline(spark, wal_dir, tmpdir_path, max_files_per_trigger=2)
+    monkeypatch.undo()
+    assert p.lineage_root not in read_roots
 
     exp = oracle_state(spark, CFG)
     got = p.table().read()
@@ -118,6 +129,122 @@ def test_exactly_once_under_crash_restart(spark, wal_dir, tmpdir_path):
     assert [b for b, *_ in lin_rows] == e1["touched_buckets"] and lin_rows == sorted(
         (r["bucket"], r["n_events"], r["min_lsn"], r["max_lsn"]) for r in e1.get("lineage", [])
     ), f"fenced epoch lineage {lin_rows} != data commit {e1.get('lineage')}"
+
+
+def test_dead_letters_exactly_once_when_crash_precedes_data_commit(
+    spark, wal_dir, tmpdir_path, monkeypatch
+):
+    """A crash between the dead-letter commit and the data commit: the
+    replayed epoch finds the dead-letter table's fence already at that
+    epoch and skips the write, so the dead letters equal a clean run's
+    row for row."""
+    import odibel_spark.cdc.pipeline as pipeline_mod
+
+    real_merge = pipeline_mod.merge_upsert
+    crashed = []
+
+    def merge_crashing_once(*args, **kwargs):
+        if not crashed and kwargs["summary"]["n_dead"]:
+            crashed.append(kwargs["summary"]["epoch"])
+            raise RuntimeError("fault-injection: crash before the data commit")
+        return real_merge(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline_mod, "merge_upsert", merge_crashing_once)
+    crash_base = os.path.join(tmpdir_path, "crash")
+    with pytest.raises(Exception):  # Spark wraps the injected RuntimeError
+        run_pipeline(spark, wal_dir, crash_base, max_files_per_trigger=2)
+    monkeypatch.undo()
+    assert crashed
+    p = run_pipeline(spark, wal_dir, crash_base, max_files_per_trigger=2)
+    clean = run_pipeline(spark, wal_dir, os.path.join(tmpdir_path, "clean"), max_files_per_trigger=2)
+
+    def rows(df):
+        return df.orderBy(*df.columns).collect()
+
+    got, want = rows(p.dead_letters()), rows(clean.dead_letters())
+    assert (len(got), got) == (len(want), want)
+
+
+def test_side_rows_exact_when_metrics_append_crashes(spark, wal_dir, tmpdir_path, monkeypatch):
+    """A crash between the lineage and the metrics append: the replay is
+    fenced on the data table, and the side table left behind is
+    finished from the data commit's record — one metrics row, lineage
+    equal to the commit's per-bucket ``lineage``."""
+    from odibel_spark.lake import LakeTable
+
+    real_append_rows = LakeTable.append_rows
+
+    def crashing_append_rows(self, rows, summary=None, *args, **kwargs):
+        if self.root.endswith("_metrics") and (summary or {}).get("epoch") == 1:
+            raise RuntimeError("fault-injection: crash before the metrics append")
+        return real_append_rows(self, rows, summary, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "append_rows", crashing_append_rows)
+    with pytest.raises(Exception):  # Spark wraps the injected RuntimeError
+        run_pipeline(spark, wal_dir, tmpdir_path, max_files_per_trigger=2)
+    monkeypatch.undo()
+    p = run_pipeline(spark, wal_dir, tmpdir_path, max_files_per_trigger=2)
+
+    (e1,) = [m["summary"] for m in p.table().history() if m["summary"].get("epoch") == 1]
+    met = p.metrics().filter(F.col("epoch") == 1).collect()
+    assert [(r.n_events, r.n_dead, r.batch_seconds) for r in met] == [(e1["n_events"], e1["n_dead"], 0.0)]
+    lin = p.lineage().filter(F.col("epoch") == 1).collect()
+    assert sorted((r.bucket, r.n_events, r.min_lsn, r.max_lsn) for r in lin) == sorted(
+        (r["bucket"], r["n_events"], r["min_lsn"], r["max_lsn"]) for r in e1["lineage"]
+    )
+
+
+def test_meta_listings_per_epoch_do_not_grow_with_history(spark, wal_dir, tmpdir_path, monkeypatch):
+    """``_meta/`` listings (``current_version``) per data epoch are a
+    constant: equal on a fresh table and on one aged by 50 metadata
+    commits, and at most one per table an epoch writes (data, dead
+    letters, lineage, metrics) when it has dead letters and does not
+    compact."""
+    from odibel_spark.lake import LakeTable
+
+    listing, apply_batch = LakeTable.current_version, TranscriptCdcPipeline._apply_batch
+    calls: dict = {}
+    active: list = []
+
+    def counting_listing(self):
+        if active:
+            calls[active[-1]] = calls.get(active[-1], 0) + 1
+        return listing(self)
+
+    def tracked_apply(self, batch_df, epoch_id):
+        active.append((self.table_root, epoch_id))
+        try:
+            return apply_batch(self, batch_df, epoch_id)
+        finally:
+            active.pop()
+
+    monkeypatch.setattr(LakeTable, "current_version", counting_listing)
+    monkeypatch.setattr(TranscriptCdcPipeline, "_apply_batch", tracked_apply)
+    runs = {}
+    for label in ("fresh", "aged"):
+        cfg = PipelineConfig(
+            wal_dirs=[wal_dir],
+            table_root=os.path.join(tmpdir_path, label, "transcripts"),
+            checkpoint_dir=os.path.join(tmpdir_path, label, "ckpt"),
+            buckets=8,
+            max_files_per_trigger=5,
+        )
+        p = TranscriptCdcPipeline(spark, cfg)
+        if label == "aged":
+            t, _ = p.ensure_tables()
+            for i in range(50):
+                t.commit_metadata({"op": "aging", "i": i})
+        p.run_available()
+        runs[label] = p
+    monkeypatch.undo()
+
+    data_epochs = {r.epoch: r.n_dead for r in runs["fresh"].metrics().collect() if r.n_events}
+    assert data_epochs and any(data_epochs.values()), "fixture needs an epoch with dead letters"
+    per_epoch = {
+        label: {e: calls[(p.table_root, e)] for e in data_epochs} for label, p in runs.items()
+    }
+    assert per_epoch["fresh"] == per_epoch["aged"]
+    assert all(per_epoch["fresh"][e] <= 4 for e, n_dead in data_epochs.items() if n_dead), per_epoch
 
 
 def test_mid_stream_schema_evolution_restart(spark, tmpdir_path):

@@ -118,28 +118,6 @@ spark.stop()
 """
 
 
-def _burn(_):
-    t0 = time.time()
-    x = 0
-    while time.time() - t0 < 4:
-        x += 1
-    return x
-
-
-def cpu_microbench(levels: tuple[int, ...], reps: int = 3) -> dict[int, float]:
-    """Raw CPU-burn total throughput per process count — the hardware
-    ceiling any software scaling is bounded by (best of reps)."""
-    import multiprocessing as mp
-
-    out: dict[int, float] = {}
-    for _ in range(reps):
-        for n in levels:
-            with mp.Pool(n) as pool:
-                tot = sum(pool.map(_burn, range(n))) / 1e6
-            out[n] = max(out.get(n, 0.0), tot)
-    return out
-
-
 def run_once(cpus: int, wal: str, base: str, mode: str, rep: int, mft: int) -> dict:
     job = JOB.format(repo=REPO)
     cores = ",".join(str(i) for i in range(cpus))
@@ -228,8 +206,11 @@ spark.stop()
                 "setup_overhead_4N_s": round(big["wall_s"] - big["data_s"], 2),
                 "table_rows": small["table_rows"],
             }
-        micro = cpu_microbench(tuple(sorted({n_small, n_big, 32})))
-        summary["cpu_microbench_Miters"] = {str(k): round(v, 1) for k, v in micro.items()}
+        sys.path.insert(0, REPO)
+        from bench import cpu_reference_miters_multicore
+
+        micro = {n: max(cpu_reference_miters_multicore(n) for _ in range(3)) for n in sorted({n_small, n_big, 32})}
+        summary["cpu_ref_miters_multicore"] = {str(k): round(v, 1) for k, v in micro.items()}
         ceiling = micro[n_big] / micro[n_small] / ratio
         summary["hardware_ceiling_efficiency"] = round(ceiling, 3)
         print(json.dumps(summary))
@@ -262,8 +243,9 @@ Protocol details (why the miniature is faithful to a real cluster):
 
 ## Hardware ceiling
 
-Raw CPU-burn microbenchmark (total Miters across n pinned processes,
-4 s, best of 3): {json.dumps(summary["cpu_microbench_Miters"])}
+Fixed-work CPU kernel (`bench.cpu_reference_miters_multicore`:
+aggregate Miters/s across n concurrent processes, 1 s each, best of
+3): {json.dumps(summary["cpu_ref_miters_multicore"])}
 At {n_small}->{n_big} processes the raw hardware ceiling is
 {micro[n_big] / micro[n_small]:.2f}x (efficiency {ceiling:.2f}); the virtualized 32-vCPU
 host tops out well below 32x, so pairs above ~8 big-side cores measure
