@@ -158,6 +158,14 @@ class PipelineConfig:
     state_store: str = "hdfs"
 
 
+def _head(table: LakeTable) -> dict | None:
+    """The table's head manifest, or None if it was never created."""
+    try:
+        return table.manifest()
+    except FileNotFoundError:
+        return None
+
+
 class TranscriptCdcPipeline:
     """One CDC stream → one transcript LakeTable (+ side tables)."""
 
@@ -175,36 +183,70 @@ class TranscriptCdcPipeline:
 
     def ensure_tables(self) -> tuple[LakeTable, T.StructType]:
         """Create/evolve the target + side tables from the current
-        unified WAL schema. Returns (table, wal_read_schema)."""
+        unified WAL schema. Returns (table, wal_read_schema). An
+        existing table costs one head read (one ``_meta/`` listing)
+        unless its schema evolves."""
         wal_schema = discover_wal_schema(self.spark, self.cfg.wal_dirs)
-        payload = self._payload_fields(wal_schema)
-        if not LakeTable.exists(self.spark, self.table_root):
+        table = LakeTable(self.spark, self.table_root)
+        head = _head(table)
+        if head is None:
             from odibel_spark.lake.merge import create_cdc_table
 
             create_cdc_table(
                 self.spark,
                 self.table_root,
-                payload,
+                self._payload_fields(wal_schema),
                 BucketSpec("conv_id", self.cfg.buckets),
                 key_cols=KEY_COLS,
                 merge_mode=self.cfg.merge_mode,
             )
-        table = LakeTable.load(self.spark, self.table_root)
-        new = diff_new_fields(table.schema(), wal_schema, ignore=(*WAL_META_COLS, *SYSTEM_FIELDS))
+            head = table.manifest()
+        new = diff_new_fields(_schema_of(head), wal_schema, ignore=(*WAL_META_COLS, *SYSTEM_FIELDS))
         if new:
             table.add_columns(new, summary={"source": "wal-schema-discovery"})
-        if not LakeTable.exists(self.spark, self.dead_root):
-            LakeTable.create(self.spark, self.dead_root, wal_schema)
-        else:
-            d = LakeTable.load(self.spark, self.dead_root)
-            dn = diff_new_fields(d.schema(), wal_schema)
-            if dn:
-                d.add_columns(dn)
-        if not LakeTable.exists(self.spark, self.lineage_root):
-            LakeTable.create(self.spark, self.lineage_root, LINEAGE_SCHEMA)
-        if not LakeTable.exists(self.spark, self.metrics_root):
-            LakeTable.create(self.spark, self.metrics_root, METRICS_SCHEMA)
+        applied = head.get("watermarks", {}).get(self.cfg.stream_id)
+        for root, schema in (
+            (self.dead_root, wal_schema),
+            (self.lineage_root, LINEAGE_SCHEMA),
+            (self.metrics_root, METRICS_SCHEMA),
+        ):
+            side = LakeTable(self.spark, root)
+            side_head = _head(side)
+            if side_head is None:
+                LakeTable.create(self.spark, root, schema)
+                continue
+            added = diff_new_fields(_schema_of(side_head), schema)
+            if added:
+                side_head = side.add_columns(added)
+            if root == self.dead_root or applied is not None:
+                self._stamp_fence(side, side_head)
         return table, wal_schema
+
+    def _stamp_fence(self, side: LakeTable, head: dict) -> None:
+        """Fence a side table written before side tables carried one.
+        Such a table holds no ``watermarks`` at all, and a replayed
+        epoch would append its rows a second time. Its commits are
+        serial per epoch, so the newest one whose ``summary`` names an
+        epoch of this stream is exactly its fence; the walk passes
+        schema-evolution commits. One metadata commit, no Spark job.
+        Dead-letter appends record ``stream_id`` and ``epoch``; lineage
+        and metrics appends record ``epoch`` only, so ``ensure_tables``
+        stamps those only when the data table holds this stream's fence
+        (they are written after the data commit): a stream that never
+        wrote, such as a fresh ``stream_id`` after a rollback, owns
+        none of their rows."""
+        if head.get("watermarks"):
+            return
+        sid = self.cfg.stream_id
+        for v in range(head["version"], 0, -1):
+            s = (head if v == head["version"] else side.manifest(v)).get("summary", {})
+            if "epoch" in s and s.get("stream_id", sid) == sid:
+                side.commit_metadata(
+                    {"op": "stamp-fence", "stream_id": sid, "fence_from_version": v},
+                    {sid: s["epoch"]},
+                    _base=head,
+                )
+                return
 
     # --------------------------------------------------------- the sink
     def _behind(self, man: dict, epoch_id: int) -> bool:

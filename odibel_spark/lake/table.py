@@ -51,6 +51,7 @@ the same primitive).
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
@@ -85,6 +86,50 @@ class BucketSpec:
     @staticmethod
     def from_json(d: dict | None) -> "BucketSpec | None":
         return BucketSpec(d["column"], d["buckets"]) if d else None
+
+
+#: Spark's ``xxhash64`` seed (the ``XxHash64`` expression's default)
+_XXHASH64_SEED = 42
+_INT_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32, T.LongType: 64}
+
+
+@functools.lru_cache(maxsize=1)
+def _hash_classes(jvm):
+    """Catalyst's ``XXH64`` and ``UTF8String`` classes, resolved once
+    per gateway: a py4j class lookup makes JVM round trips that cost
+    several times the hash call itself."""
+    return (
+        jvm.org.apache.spark.sql.catalyst.expressions.XXH64,
+        jvm.org.apache.spark.unsafe.types.UTF8String,
+    )
+
+
+def _bucket_of(spark: SparkSession, column_type: T.DataType, value, n_buckets: int) -> int | None:
+    """The bucket ``BucketSpec.expr`` gives a row whose bucket column
+    equals ``value``: ``pmod(xxhash64(value), n_buckets)``, computed on
+    the driver by Catalyst's own ``XXH64`` over py4j, with no Spark job.
+    Strings hash as UTF-8 bytes; byte/short/int columns hash the value
+    as a 4-byte int and long columns as an 8-byte long. ``None`` (no
+    pruning) for any other column type, a string column under a
+    non-default collation (its hash is collation-aware), or a value
+    whose Python type is not exactly the column's (a ``bool`` or
+    ``float`` against an int column, an out-of-range int)."""
+    xxh, utf8 = _hash_classes(spark._jvm)
+    if isinstance(column_type, T.StringType):
+        if type(value) is not str or column_type.collation != "UTF8_BINARY":
+            return None
+        h = xxh.hashUTF8String(utf8.fromString(value), _XXHASH64_SEED)
+    elif type(value) is int and type(column_type) in _INT_BITS:
+        half = 1 << (_INT_BITS[type(column_type)] - 1)
+        if not -half <= value < half:
+            return None
+        # instance methods: the static hashInt(int, long) overload does
+        # not resolve over py4j
+        hasher = xxh(_XXHASH64_SEED)
+        h = hasher.hashLong(value) if isinstance(column_type, T.LongType) else hasher.hashInt(value)
+    else:
+        return None
+    return h % n_buckets  # Python's % is pmod's non-negative remainder
 
 
 def lww_fold(df: DataFrame, group_cols: list[str], order_col: str) -> DataFrame:
@@ -299,11 +344,6 @@ class LakeTable:
             raise FileNotFoundError(f"no table at {root}")
         return t
 
-    @classmethod
-    def exists(cls, spark: SparkSession, root: str) -> bool:
-        t = cls(spark, root)
-        return t.current_version() is not None
-
     # ----------------------------------------------------- manifest IO
     def _manifest_path(self, version: int) -> str:
         return os.path.join(self.meta_dir, f"v{version:020d}.json")
@@ -372,12 +412,6 @@ class LakeTable:
 
     def schema(self, version: int | None = None) -> T.StructType:
         return _schema_of(self.manifest(version))
-
-    def bucket_spec(self, version: int | None = None) -> BucketSpec | None:
-        return BucketSpec.from_json(self.manifest(version).get("bucket"))
-
-    def properties(self, version: int | None = None) -> dict:
-        return self.manifest(version).get("properties", {})
 
     def watermark(self, stream_id: str) -> int:
         """Last epoch applied for a stream (−1 if never). The epoch
@@ -455,7 +489,14 @@ class LakeTable:
         if bucket:
             out = df
             if "_bucket" not in df.columns:
-                out = df.withColumn("_bucket", bucket.expr()).repartition(bucket.buckets, "_bucket")
+                # hashed as its table-schema type: the type a key
+                # lookup hashes its value as (read's bucket pruning)
+                key = F.col(bucket.column).cast(_schema_of(base)[bucket.column].dataType)
+                out = (
+                    df.withColumn(bucket.column, key)
+                    .withColumn("_bucket", bucket.expr())
+                    .repartition(bucket.buckets, "_bucket")
+                )
             # lead with _bucket: the partitionBy writer REQUIRES tasks
             # ordered by the partition column and silently inserts its
             # own (unstable) sort when they aren't — which would clobber
@@ -629,11 +670,24 @@ class LakeTable:
         a payload value could drop the file holding a key's latest
         version and silently fold to stale state — such calls raise.
 
+        Bucket-transform pruning (Iceberg's ``bucket[N]``): an equality
+        range (``lo == hi``, not ``None``) on the bucket column can only
+        match rows of one bucket, ``pmod(xxhash64(lo), N)``, so the read
+        narrows ``buckets`` to it (intersected with a given
+        ``buckets``). The bucket id is computed on the driver
+        (``_bucket_of``); a column type or value type it does not cover
+        prunes nothing.
+
         Merge-on-read tables (``properties.merge_mode == "mor"``) carry
         multiple versions of a key across delta files; the read applies
         the last-writer-wins fold (one hash agg on the merge keys) so
         every reader sees exactly the merged state. ``fold=False``
-        returns the raw delta rows (compaction/debugging).
+        returns the raw delta rows (compaction/debugging). A fold whose
+        files all belong to one bucket and together fit one scan split
+        (``spark.sql.files.maxPartitionBytes``) — a key lookup — reads
+        them as one partition, so the aggregate needs no exchange: one
+        stage instead of a shuffle. Multi-bucket reads keep the
+        exchange.
 
         If the table carries a ``_deleted`` tombstone column (CDC
         tables do — see lake/merge.py), tombstoned rows are filtered
@@ -641,7 +695,7 @@ class LakeTable:
         """
         man = self.manifest(version)
         schema = _schema_of(man)
-        fs = [f for f in man["files"] if buckets is None or f.get("bucket") in buckets]
+        spec = BucketSpec.from_json(man.get("bucket"))
         props = man.get("properties", {})
         if fold is None:
             fold = props.get("merge_mode") == "mor"
@@ -663,6 +717,15 @@ class LakeTable:
                         "older versions survive, silently folding to stale state. "
                         "Range merge keys here, or filter the folded DataFrame."
                     )
+            if spec and spec.column in where_ranges:
+                lo, hi = where_ranges[spec.column]
+                b = None
+                if lo is not None and lo == hi:
+                    b = _bucket_of(self.spark, schema[spec.column].dataType, lo, spec.buckets)
+                if b is not None:
+                    buckets = {b} if buckets is None else set(buckets) & {b}
+        fs = [f for f in man["files"] if buckets is None or f.get("bucket") in buckets]
+        if where_ranges:
             fs = [f for f in fs if _file_in_ranges(f, where_ranges)]
         if not fs:
             df = self.spark.createDataFrame([], schema)
@@ -682,15 +745,29 @@ class LakeTable:
             keys = props.get("merge_keys")
             if not keys:
                 raise ValueError("mor fold requested but table has no merge_keys property")
+            if (
+                fs
+                and len({f.get("bucket") for f in fs}) == 1
+                and fs[0].get("bucket") is not None
+                and sum(f.get("bytes", math.inf) for f in fs) <= self._max_split_bytes()
+            ):
+                # one partition (Coalesce 1 reports SinglePartition), so
+                # the fold's partial and final aggregates run back to
+                # back with no exchange; the scan task reads one split
+                df = df.coalesce(1)
             df = lww_fold(df, keys, "_lsn")
         if "_deleted" in schema.fieldNames() and not include_tombstones:
             df = df.filter(~F.coalesce(F.col("_deleted"), F.lit(False))).drop("_deleted")
         if with_bucket_col:
-            spec = BucketSpec.from_json(man.get("bucket"))
             if spec is None:
                 raise ValueError("table is not bucketed")
             df = df.withColumn("_bucket", spec.expr())
         return df
+
+    def _max_split_bytes(self) -> int:
+        """``spark.sql.files.maxPartitionBytes``, the session's scan
+        split size, as Spark parses it."""
+        return self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
 
     # ------------------------------------------------------- mutations
     def _next_commit(
@@ -757,6 +834,9 @@ class LakeTable:
         import pyarrow.parquet as pq
 
         base = _base or self.manifest()
+        if base.get("bucket"):
+            # its one file has no bucket, which bucket-pruned reads skip
+            raise ValueError("append_rows writes unbucketed files; use append on a bucketed table")
         if not rows:
             return base
         schema = _schema_of(base)
@@ -813,10 +893,12 @@ class LakeTable:
             base, new, self._tagged(summary, "overwrite"), keep=lambda _b: []
         )
 
-    def commit_metadata(self, summary: dict, watermarks_update: dict | None = None) -> dict:
+    def commit_metadata(
+        self, summary: dict, watermarks_update: dict | None = None, *, _base: dict | None = None
+    ) -> dict:
         """Metadata-only commit (e.g. advance an epoch watermark for an
-        empty batch)."""
-        return self._next_commit(self.manifest(), [], summary, watermarks_update)
+        empty batch). ``_base`` as in ``append``."""
+        return self._next_commit(_base or self.manifest(), [], summary, watermarks_update)
 
     def add_columns(
         self, new_fields: list[T.StructField], summary: dict | None = None, retries: int = 5

@@ -587,6 +587,24 @@ def test_where_ranges_mor_fold_guard(spark, tmpdir_path):
         t.read(where_ranges={"nope": (1, 2)})
 
 
+def test_key_lookup_finds_rows_appended_as_a_narrower_type(spark, tmpdir_path):
+    """Bucket-transform pruning hashes a lookup value as the bucket
+    column's table-schema type, so writers must hash it as that type
+    too: an ``int`` frame appended to a ``long``-keyed table lands in
+    the buckets a lookup computes (xxhash64 of an int and of the same
+    long differ). ``append_rows`` writes bucket-less files, which a
+    pruned read never plans, so it refuses bucketed tables."""
+    fields = [T.StructField("k", T.LongType()), T.StructField("v", T.StringType())]
+    t = create_cdc_table(spark, os.path.join(tmpdir_path, "lk"), fields, BucketSpec("k", 8))
+    t.append(spark.createDataFrame(
+        [(i, f"v{i}", i, False) for i in range(40)], "k int, v string, _lsn long, _deleted boolean"
+    ))
+    for k in range(40):
+        assert [tuple(r) for r in t.read(where_ranges={"k": (k, k)}).collect()] == [(k, f"v{k}", k)]
+    with pytest.raises(ValueError, match="bucketed"):
+        t.append_rows([{"k": 1, "v": "x", "_lsn": 99, "_deleted": False}])
+
+
 def test_file_in_ranges_unknown_bounds_keep():
     """Unknown never prunes: legacy descriptors without stats, columns
     without collected bounds, and half-open ranges all keep the file;

@@ -247,6 +247,109 @@ def test_meta_listings_per_epoch_do_not_grow_with_history(spark, wal_dir, tmpdir
     assert all(per_epoch["fresh"][e] <= 4 for e, n_dead in data_epochs.items() if n_dead), per_epoch
 
 
+def test_stream_start_reads_each_table_head_once(spark, wal_dir, tmpdir_path, monkeypatch):
+    """``ensure_tables`` against existing tables lists ``_meta/`` once
+    per table (data, dead letters, lineage, metrics): no ``exists`` /
+    ``load`` / ``schema()`` re-reads of the same head."""
+    from odibel_spark.lake import LakeTable
+
+    p = TranscriptCdcPipeline(
+        spark,
+        PipelineConfig(
+            wal_dirs=[wal_dir],
+            table_root=os.path.join(tmpdir_path, "transcripts"),
+            checkpoint_dir=os.path.join(tmpdir_path, "ckpt"),
+            buckets=8,
+        ),
+    )
+    p.ensure_tables()  # the first start creates the four tables
+    listing = LakeTable.current_version
+    calls: list = []
+
+    def counting_listing(self):
+        calls.append(self.root)
+        return listing(self)
+
+    monkeypatch.setattr(LakeTable, "current_version", counting_listing)
+    p.ensure_tables()
+    monkeypatch.undo()
+    assert sorted(calls) == sorted([p.table_root, p.dead_root, p.lineage_root, p.metrics_root])
+
+
+def _strip_fences(root):
+    """Rewrite a table's manifests as a writer that kept no epoch fence
+    on it left them: no ``watermarks``."""
+    import json
+
+    meta = os.path.join(root, "_meta")
+    for n in os.listdir(meta):
+        path = os.path.join(meta, n)
+        with open(path) as f:
+            man = json.load(f)
+        man["watermarks"] = {}
+        with open(path, "w") as f:
+            json.dump(man, f)
+
+
+def test_replay_across_fence_upgrade_adds_no_duplicate_rows(spark, wal_dir, tmpdir_path, monkeypatch):
+    """Side tables written before they carried an epoch fence (their
+    manifests hold no ``watermarks``) get one stamped at stream start
+    from their commit summaries, so a replay across the upgrade appends
+    nothing twice. Two crashes of such a writer, each followed by
+    stripping the side tables' fences: (1) dead letters committed, the
+    data commit not — the replayed epoch would re-append its dead
+    letters; (2) after the whole epoch, before the checkpoint — the
+    fenced replay would re-append its lineage and metrics rows. Every
+    side table then equals a clean run's."""
+    import odibel_spark.cdc.pipeline as pipeline_mod
+
+    base = os.path.join(tmpdir_path, "upgrade")
+    sides = [os.path.join(base, "transcripts" + s) for s in ("_deadletter", "_lineage", "_metrics")]
+    real_merge = pipeline_mod.merge_upsert
+    crashed = []
+
+    def merge_crashing_once(*args, **kwargs):
+        if not crashed and kwargs["summary"]["n_dead"]:
+            crashed.append(kwargs["summary"]["epoch"])
+            raise RuntimeError("fault-injection: crash before the data commit")
+        return real_merge(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline_mod, "merge_upsert", merge_crashing_once)
+    with pytest.raises(Exception):  # Spark wraps the injected RuntimeError
+        run_pipeline(spark, wal_dir, base, max_files_per_trigger=2)
+    monkeypatch.undo()
+    assert crashed
+    for root in sides:
+        _strip_fences(root)
+
+    real_apply = TranscriptCdcPipeline._apply_batch
+
+    def apply_then_crash(self, batch_df, epoch_id):
+        real_apply(self, batch_df, epoch_id)
+        if epoch_id == crashed[0]:
+            raise RuntimeError("fault-injection: crash before the checkpoint commit")
+
+    monkeypatch.setattr(TranscriptCdcPipeline, "_apply_batch", apply_then_crash)
+    with pytest.raises(Exception):
+        run_pipeline(spark, wal_dir, base, max_files_per_trigger=2)
+    monkeypatch.undo()
+    for root in sides:
+        _strip_fences(root)
+
+    p = run_pipeline(spark, wal_dir, base, max_files_per_trigger=2)
+    clean = run_pipeline(spark, wal_dir, os.path.join(tmpdir_path, "clean"), max_files_per_trigger=2)
+
+    def rows(df, cols):
+        return sorted((tuple(r) for r in df.select(*cols).collect()), key=repr)
+
+    dead_cols = clean.dead_letters().columns
+    assert rows(p.dead_letters(), dead_cols) == rows(clean.dead_letters(), dead_cols)
+    lin_cols = ["stream_id", "epoch", "bucket", "n_events", "min_lsn", "max_lsn"]
+    assert rows(p.lineage(), lin_cols) == rows(clean.lineage(), lin_cols)
+    met_cols = ["stream_id", "epoch", "n_events", "n_dead"]
+    assert rows(p.metrics(), met_cols) == rows(clean.metrics(), met_cols)
+
+
 def test_mid_stream_schema_evolution_restart(spark, tmpdir_path):
     """Start on v1-only WAL (no meta), then v2 files appear; a restart
     discovers and promotes the new column; old rows read as NULL."""

@@ -393,3 +393,42 @@ def test_lake_range_read_pushes_residual_filter_to_scan(spark, tmp_path):
             [("c", i, l, False) for i, l in enumerate(lsns)], schema))
     p = plan(t.read(where_ranges={"_lsn": (40, None)}))
     assert "PushedFilters: [IsNotNull(_lsn), GreaterThanOrEqual(_lsn,40)" in p
+
+
+def test_one_bucket_fold_read_needs_no_exchange(spark, tmp_path):
+    """A merge-on-read key lookup reads one bucket (bucket-transform
+    pruning); when that bucket's files fit one scan split the fold runs
+    on a single partition: partial and final aggregates back to back,
+    no Exchange. A two-bucket fold read, or a one-bucket read larger
+    than ``spark.sql.files.maxPartitionBytes``, keeps the shuffle."""
+    from odibel_spark.lake.merge import create_cdc_table, merge_upsert
+    from odibel_spark.lake.table import BucketSpec
+    from pyspark.sql import types as T
+
+    t = create_cdc_table(
+        spark, str(tmp_path / "t"),
+        [T.StructField("conv_id", T.StringType()), T.StructField("turn_idx", T.IntegerType()),
+         T.StructField("text", T.StringType())],
+        BucketSpec("conv_id", 4), key_cols=["conv_id", "turn_idx"], merge_mode="mor",
+    )
+    for i in range(3):
+        src = spark.createDataFrame(
+            [(f"c{j}", j % 3, f"t{i}", i * 100 + j, "insert") for j in range(20)],
+            "conv_id string, turn_idx int, text string, lsn long, op string",
+        )
+        merge_upsert(t, src, ["conv_id", "turn_idx"])
+
+    lookup = t.read(where_ranges={"conv_id": ("c3", "c3")})
+    p = plan(lookup)
+    assert count_exchanges(p) == 0 and "Coalesce (" in p and "partial_max_by" in p
+    assert len({f.split("/_bucket=")[1].split("/")[0] for f in lookup.inputFiles()}) == 1
+    assert [tuple(r) for r in lookup.collect()] == [("c3", 0, "t2", 203)]
+
+    two = sorted({f["bucket"] for f in t.files()})[:2]
+    assert count_exchanges(plan(t.read(buckets=set(two)))) == 1
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
+    try:
+        assert count_exchanges(plan(t.read(where_ranges={"conv_id": ("c3", "c3")}))) == 1
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)

@@ -2327,3 +2327,103 @@ def test_changelog_prefix_folds_match_lww_oracle_at_every_version(
             assert sorted(pieces) == sorted(whole)
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+# -------- P41: bucket-transform pruned key lookup == filtered full read
+
+#: bucket-column values per column type: the data draws from the first
+#: six, the seventh is never written (an absent key). The int and long
+#: pools hold the types' extremes; the long pool also holds values past
+#: the int range and small ones that py4j passes to the JVM as ints.
+_BUCKET_KEY_POOLS = {
+    "string": ["a", "b", "conv-7", "ü日", "", "conv-70", "absent"],
+    "int": [-3, 0, 1, 7, 2**31 - 1, -(2**31), 12345],
+    "long": [-3, 0, 5, 2**31, -(2**40), 2**63 - 1, 2**62],
+}
+
+
+@settings(**{**PROP_SETTINGS, "max_examples": 12})
+@given(
+    kind=st.sampled_from(sorted(_BUCKET_KEY_POOLS)),
+    mode=st.sampled_from(["cow", "mor"]),
+    n_buckets=st.integers(min_value=1, max_value=5),
+    batches=st.lists(
+        st.lists(
+            st.tuples(
+                st.one_of(st.none(), st.integers(min_value=0, max_value=5)),
+                st.integers(min_value=0, max_value=2),
+                st.booleans(),
+            ),
+            max_size=8,
+        ),
+        min_size=1,
+        max_size=3,
+    ),
+    probe=st.integers(min_value=0, max_value=6),
+    as_float=st.booleans(),
+)
+def test_bucket_pruned_lookup_equals_filtered_read(
+    spark, kind, mode, n_buckets, batches, probe, as_float
+):
+    """``read(where_ranges={k: (v, v)})`` on the bucket column reads
+    only bucket ``pmod(xxhash64(v), N)`` — computed on the driver, not
+    by Spark — and must still equal ``read().filter(k == v)`` for any
+    commit layout: present and absent keys, null bucket-column values
+    (hashed to a bucket of their own, never equal to ``v``), string /
+    int / long columns, copy-on-write (raw rows) and merge-on-read
+    (folded, tombstones hidden) tables. The planned files are checked
+    against the bucket Spark's own ``xxhash64`` gives ``v``, and the
+    driver-side bucket of every pool value against Spark's, so a wrong
+    hash fails even where the lookup's answer cannot show it (a wrong
+    bucket holding no files of an absent key). A float probe on an
+    integer column is not the column's type: it prunes nothing and the
+    residual filter alone still answers exactly."""
+    import shutil
+    import tempfile
+
+    from pyspark.sql import types as T
+
+    from odibel_spark.lake.merge import create_cdc_table
+    from odibel_spark.lake.table import BucketSpec, _bucket_of
+
+    dtype = {"string": T.StringType(), "int": T.IntegerType(), "long": T.LongType()}[kind]
+    pool = _BUCKET_KEY_POOLS[kind]
+    spark_buckets = [
+        r[0]
+        for r in spark.createDataFrame([(v,) for v in pool], f"k {dtype.simpleString()}")
+        .select(F.pmod(F.xxhash64("k"), F.lit(n_buckets)))
+        .collect()
+    ]
+    assert [_bucket_of(spark, dtype, v, n_buckets) for v in pool] == spark_buckets
+    value = pool[probe]
+    if as_float and kind != "string":
+        value = float(value)
+    root = tempfile.mkdtemp(prefix="odibel-prop-bucketprune-")
+    try:
+        t = create_cdc_table(
+            spark, root,
+            [T.StructField("k", dtype), T.StructField("turn_idx", T.IntegerType()),
+             T.StructField("v", T.StringType())],
+            BucketSpec("k", n_buckets), key_cols=["k", "turn_idx"], merge_mode=mode,
+        )
+        schema = f"k {dtype.simpleString()}, turn_idx int, v string, _lsn long, _deleted boolean"
+        lsn = 0
+        for batch in batches:
+            rows = []
+            for key, turn, deleted in batch:
+                lsn += 1
+                rows.append((None if key is None else pool[key], turn, f"v{lsn}", lsn, deleted))
+            t.append(spark.createDataFrame(rows, schema))
+
+        def collected(df):
+            return sorted((tuple(r) for r in df.collect()), key=repr)
+
+        pruned = t.read(where_ranges={"k": (value, value)})
+        assert collected(pruned) == collected(t.read().filter(F.col("k") == F.lit(value)))
+        if not isinstance(value, float):
+            want = spark.range(1).select(
+                F.pmod(F.xxhash64(F.lit(value).cast(dtype)), F.lit(n_buckets))
+            ).first()[0]
+            assert all(f"/_bucket={want}/" in p for p in pruned.inputFiles())
+    finally:
+        shutil.rmtree(root, ignore_errors=True)

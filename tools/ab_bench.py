@@ -23,6 +23,8 @@ Usage:
         to OOM; the recorded artifact's invocation is the line above)
     python tools/ab_bench.py cluster_layout [--events 2000000] [--reps 3]   (--events = row count)
     python tools/ab_bench.py compact_cluster [--events 4000000] [--reps 3]  (--events = row count)
+    python tools/ab_bench.py point_lookup [--events 100000] [--reps 72] [--cpus 4]
+        (--reps = lookups per arm; p50 headline, see ab_point_lookup)
 
 Modes whose decision is closed are retired from the tool; their
 recorded artifacts stay under BENCH/ as the record
@@ -670,9 +672,168 @@ def ab_compact_cluster(spark, rows_n: int, reps: int) -> None:
         shutil.rmtree(base, ignore_errors=True)
 
 
+def ab_point_lookup(spark, events: int, lookups: int) -> None:
+    """Key lookups on a merge-on-read table of the benchmark's
+    history_reads shape: an un-compacted ingest of 15 WAL segments at 6
+    per trigger into 8 buckets, aged by 1,000 metadata commits, then
+    ``read(where_ranges={"conv_id": (c, c)}).collect()`` for Zipf-drawn
+    conversations. Three arms of ``LakeTable.read``:
+
+    - ``unpruned``: the read before bucket pruning — every bucket's
+      files planned, two-stage fold (the driver-side bucket hash
+      patched to prune nothing and the one-split rule to never fire);
+    - ``pruning_only``: bucket-transform pruning, fold still shuffled;
+    - ``pruning_no_shuffle``: the shipped read — one bucket, and the
+      fold runs on one partition with no exchange.
+
+    A lookup's latency is its DataFrame build plus ``collect``. Arms
+    interleave per key in rotated order; every lookup is checked
+    against the ``current_state`` oracle's rows. The p50 is the
+    headline (a point read's cost is its typical call, not its best).
+    ``build_breakdown`` splits the build: the head manifest read, an
+    unfolded read (scan planning) and the folded read (+ fold
+    analysis), on the pruned path and on every-bucket scans."""
+    import random
+    import statistics
+
+    from pyspark.sql import functions as F
+
+    import odibel_spark.lake.table as lake_table
+    from odibel_spark.cdc import (
+        PipelineConfig, TranscriptCdcPipeline, WalConfig, current_state, write_wal_files,
+    )
+    from odibel_spark.cdc.evolution import discover_wal_schema
+
+    # the benchmark session's shuffle width (one partition per core)
+    spark.conf.set("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
+    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "meta", "_lsn"]
+    base = tempfile.mkdtemp(prefix="ab-point-lookup-")
+    real_bucket_of, real_split = lake_table._bucket_of, lake_table.LakeTable._max_split_bytes
+    arms = {
+        "unpruned": (lambda *_a: None, lambda _self: -1),
+        "pruning_only": (real_bucket_of, lambda _self: -1),
+        "pruning_no_shuffle": (real_bucket_of, real_split),
+    }
+
+    def use(arm: str) -> None:
+        lake_table._bucket_of, lake_table.LakeTable._max_split_bytes = arms[arm]
+
+    try:
+        cfg = WalConfig(n_events=events, n_convs=events // 50, seed=1)
+        wal = write_wal_files(spark, cfg, os.path.join(base, "wal"), n_files=15)
+        p = TranscriptCdcPipeline(
+            spark,
+            PipelineConfig(
+                wal_dirs=[wal], table_root=os.path.join(base, "t"),
+                checkpoint_dir=os.path.join(base, "ckpt"), buckets=8, merge_mode="mor",
+                max_files_per_trigger=6, compact_every_epochs=None,
+            ),
+        )
+        p.run_available()
+        t = p.table()
+        epoch = t.watermark("wal")
+        for _ in range(1000):
+            epoch += 1
+            t.commit_metadata({"stream_id": "wal", "epoch": epoch, "op": "merge"}, {"wal": epoch})
+
+        rng = random.Random(1)
+        keys = [f"conv-{int(cfg.n_convs * rng.random() ** cfg.skew)}" for _ in range(lookups)]
+        ev = spark.read.schema(discover_wal_schema(spark, [wal])).option(
+            "recursiveFileLookup", "true").parquet(wal)
+        oracle = current_state(ev).join(
+            ev.select("lsn", "meta").dropDuplicates(["lsn"]), F.col("_lsn") == F.col("lsn"), "left"
+        ).drop("lsn")
+        want: dict = {k: [] for k in keys}
+        for r in oracle.filter(F.col("conv_id").isin(sorted(want))).collect():
+            want[r["conv_id"]].append(tuple(r[c] for c in cols))
+
+        def lookup(arm: str, key: str) -> dict:
+            use(arm)
+            t0 = time.perf_counter()
+            df = t.read(where_ranges={"conv_id": (key, key)})
+            t1 = time.perf_counter()
+            rows = df.collect()
+            t2 = time.perf_counter()
+            got = sorted((tuple(r[c] for c in cols) for r in rows), key=repr)
+            if got != sorted(want[key], key=repr):
+                raise AssertionError(f"{arm} lookup {key}: {len(got)} rows != oracle {len(want[key])}")
+            return {"arm": arm, "build_ms": round((t1 - t0) * 1e3, 2),
+                    "collect_ms": round((t2 - t1) * 1e3, 2), "ms": round((t2 - t0) * 1e3, 2),
+                    "files": len(df.inputFiles())}
+
+        labels = list(arms)
+        for arm in labels:  # warmup: codegen and JIT paid outside the cells
+            for key in keys[:4]:
+                lookup(arm, key)
+        cells = []
+        for i, key in enumerate(keys):
+            for arm in labels[i % 3:] + labels[: i % 3]:
+                cells.append(lookup(arm, key))
+
+        def p50(arm: str, field: str) -> float:
+            return round(statistics.median(c[field] for c in cells if c["arm"] == arm), 1)
+
+        def build_ms(make) -> float:
+            samples = []
+            for key in keys[:24]:
+                t0 = time.perf_counter()
+                make(key)
+                samples.append((time.perf_counter() - t0) * 1e3)
+            return round(statistics.median(samples), 1)
+
+        use("pruning_no_shuffle")
+        q = lambda k: {"conv_id": (k, k)}  # noqa: E731
+        breakdown = {"manifest_ms": build_ms(lambda _k: t.manifest())}
+        for arm in ("unpruned", "pruning_no_shuffle"):
+            use(arm)
+            breakdown[arm] = {
+                "read_unfolded_ms": build_ms(lambda k: t.read(where_ranges=q(k), fold=False)),
+                "read_folded_ms": build_ms(lambda k: t.read(where_ranges=q(k))),
+            }
+        use("pruning_no_shuffle")
+
+        from bench import cpu_reference_miters_fixedwork
+
+        summary = {
+            arm: {
+                "p50_ms": p50(arm, "ms"),
+                "p50_build_ms": p50(arm, "build_ms"),
+                "p50_collect_ms": p50(arm, "collect_ms"),
+                "mean_files": round(statistics.mean(c["files"] for c in cells if c["arm"] == arm), 2),
+            }
+            for arm in labels
+        }
+        artifact = {
+            "name": "point_lookup",
+            "protocol": f"interleaved same-JVM, 4 warmup lookups/arm, {lookups} lookups/arm "
+                        "in rotated arm order, every lookup oracle-checked",
+            "arms": labels,
+            "p50": summary,
+            "p50_speedup_vs_unpruned": {
+                arm: round(summary["unpruned"]["p50_ms"] / summary[arm]["p50_ms"], 3) for arm in labels[1:]
+            },
+            "build_breakdown_p50_ms": breakdown,
+            # every lookup's build + collect ms, in run order per arm
+            "ms_samples": {arm: [c["ms"] for c in cells if c["arm"] == arm] for arm in labels},
+            "table": {"events": events, "segments": 15, "files_per_trigger": 6, "buckets": 8,
+                      "aging_commits": 1000, "files": len(t.files()),
+                      "cpus": spark.sparkContext.defaultParallelism},
+            "cpu_ref_miters_fixedwork": round(cpu_reference_miters_fixedwork(), 1),
+        }
+        os.makedirs(OUT_DIR, exist_ok=True)
+        path = os.path.join(OUT_DIR, "ab_point_lookup.json")
+        with open(path, "w") as f:
+            json.dump(artifact, f, indent=1)
+        print(json.dumps({k: v for k, v in artifact.items() if k != "ms_samples"}))
+        print(f"wrote {os.path.normpath(path)}")
+    finally:
+        use("pruning_no_shuffle")
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("which", choices=["trigger_posture", "lsh_mass_dup", "lsh_clean_corpus", "stream_dedup", "state_store", "state_store_pressure", "cluster_layout", "compact_cluster"])
+    ap.add_argument("which", choices=["trigger_posture", "lsh_mass_dup", "lsh_clean_corpus", "stream_dedup", "state_store", "state_store_pressure", "cluster_layout", "compact_cluster", "point_lookup"])
     ap.add_argument("--events", type=int, default=1_000_000)
     ap.add_argument("--copies", type=int, default=20_000,
                     help="lsh_mass_dup: total documents (50 distinct contents)")
@@ -711,6 +872,8 @@ def main() -> int:
         ab_cluster_layout(spark, args.events, args.reps)
     elif args.which == "compact_cluster":
         ab_compact_cluster(spark, args.events, args.reps)
+    elif args.which == "point_lookup":
+        ab_point_lookup(spark, args.events, args.reps)
     else:
         ab_lsh_mass_dup(spark, args.copies, args.reps)
     spark.stop()
