@@ -41,6 +41,8 @@ North-rule mechanics and where they live:
 
 from __future__ import annotations
 
+import functools
+import json
 import threading
 import time
 from dataclasses import dataclass
@@ -50,9 +52,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from odibel_spark.cdc.evolution import diff_new_fields, discover_wal_schema, normalize_batch
-from odibel_spark.cdc.replay import EVENT_ID_COLS, KEY_COLS, split_dead_letters
+from odibel_spark.cdc.replay import EVENT_ID_COLS, KEY_COLS, dead_letter_predicate
 from odibel_spark.lake.merge import SYSTEM_FIELDS, merge_upsert
-from odibel_spark.lake.table import BucketSpec, LakeTable, _schema_of
+from odibel_spark.lake.table import BucketSpec, LakeTable, _jvm, _schema_of
 
 #: WAL bookkeeping columns that never become table payload
 WAL_META_COLS = ("lsn", "op", "wal_chunk")
@@ -166,6 +168,27 @@ def _head(table: LakeTable) -> dict | None:
         return None
 
 
+@functools.lru_cache(maxsize=16)
+def _dead_letter_exprs(jvm, schema_json: str, batch_cols: tuple[str, ...]) -> tuple[F.Column, ...]:
+    """The dead-letter table's row projection of a flagged batch: each
+    column of its schema (``schema_json``), NULL where the batch lacks
+    it. Keyed as ``lake.table._jvm`` describes."""
+    return tuple(
+        (F.col(f.name) if f.name in batch_cols else F.lit(None).cast(f.dataType)).alias(f.name)
+        for f in T.StructType.fromJson(json.loads(schema_json)).fields
+    )
+
+
+@functools.lru_cache(maxsize=8)
+def _batch_exprs(jvm) -> tuple:
+    """The sink's fixed trees over a flagged batch: the dead and live
+    filters, and the stats pass's group keys and aggregates."""
+    dead = F.col("_dead")
+    return dead, ~dead, (dead, F.col("_b")), (
+        F.count("*").alias("n"), F.min("lsn").alias("min_lsn"), F.max("lsn").alias("max_lsn"),
+    )
+
+
 class TranscriptCdcPipeline:
     """One CDC stream → one transcript LakeTable (+ side tables)."""
 
@@ -186,6 +209,12 @@ class TranscriptCdcPipeline:
         unified WAL schema. Returns (table, wal_read_schema). An
         existing table costs one head read (one ``_meta/`` listing)
         unless its schema evolves."""
+        table, wal_schema, _spec = self._ensure_tables()
+        return table, wal_schema
+
+    def _ensure_tables(self) -> tuple[LakeTable, T.StructType, BucketSpec]:
+        """``ensure_tables``, plus the table's bucket spec from the head
+        it read."""
         wal_schema = discover_wal_schema(self.spark, self.cfg.wal_dirs)
         table = LakeTable(self.spark, self.table_root)
         head = _head(table)
@@ -220,7 +249,7 @@ class TranscriptCdcPipeline:
                 side_head = side.add_columns(added)
             if root == self.dead_root or applied is not None:
                 self._stamp_fence(side, side_head)
-        return table, wal_schema
+        return table, wal_schema, BucketSpec.from_json(head["bucket"])
 
     def _stamp_fence(self, side: LakeTable, head: dict) -> None:
         """Fence a side table written before side tables carried one.
@@ -270,30 +299,17 @@ class TranscriptCdcPipeline:
             self._append_side_rows(epoch_id, self._epoch_summary(table, head, epoch_id), 0.0)
             return
 
-        from odibel_spark.cdc.replay import dead_letter_predicate
-
-        spec = BucketSpec.from_json(head["bucket"])
         # One materialization of the micro-batch (pins the stream-dedup
         # output — every derived job below reuses the cache instead of
         # re-executing the source scan + state-store plan), and ONE
         # stats pass yielding dead-letter counts, per-bucket lineage,
-        # and the touched-bucket set for merge pruning.
-        flagged = (
-            normalize_batch(batch_df)
-            .withColumn("_dead", dead_letter_predicate())
-            .withColumn("_b", spec.expr())
-            .cache()
-        )
+        # and the touched-bucket set for merge pruning. The batch
+        # arrives normalized and flagged (``_dead``, ``_b``): the
+        # stream defines that stateless chain once per query.
+        flagged = batch_df.cache()
+        dead, live, stat_keys, stat_aggs = _batch_exprs(_jvm())
         try:
-            stats = (
-                flagged.groupBy("_dead", "_b")
-                .agg(
-                    F.count("*").alias("n"),
-                    F.min("lsn").alias("min_lsn"),
-                    F.max("lsn").alias("max_lsn"),
-                )
-                .collect()
-            )
+            stats = flagged.groupBy(*stat_keys).agg(*stat_aggs).collect()
             n_ok = sum(r["n"] for r in stats if not r["_dead"])
             n_dead = sum(r["n"] for r in stats if r["_dead"])
             touched = {r["_b"] for r in stats if not r["_dead"]}
@@ -307,12 +323,8 @@ class TranscriptCdcPipeline:
                 dl = LakeTable(self.spark, self.dead_root)
                 dl_head = dl.manifest()
                 if self._behind(dl_head, epoch_id):
-                    dead = flagged.filter(F.col("_dead")).drop("_dead", "_b")
-                    out = dead.select(
-                        *[
-                            (F.col(f.name) if f.name in dead.columns else F.lit(None).cast(f.dataType)).alias(f.name)
-                            for f in _schema_of(dl_head).fields
-                        ]
+                    out = flagged.filter(dead).select(
+                        *_dead_letter_exprs(_jvm(), dl_head["schema"], tuple(flagged.columns))
                     )
                     # dead letters are a trickle — one output file keeps
                     # the commit (and its footer bookkeeping) off the
@@ -346,7 +358,7 @@ class TranscriptCdcPipeline:
                         write_salt = min(8, max(2, round(hot / (2 * mean))))
             man = merge_upsert(
                 table,
-                flagged.filter(~F.col("_dead")).drop("_dead", "_b"),
+                flagged.filter(live),  # the flag columns are not table columns
                 KEY_COLS,
                 # the epoch's record: the side rows are built from it,
                 # on a fenced replay too (_epoch_summary)
@@ -422,7 +434,14 @@ class TranscriptCdcPipeline:
         return {}
 
     # ---------------------------------------------------------- running
-    def _stream_reader(self, wal_schema: T.StructType) -> DataFrame:
+    def _stream_reader(self, wal_schema: T.StructType, spec: BucketSpec) -> DataFrame:
+        """The WAL stream as the sink takes it: watermarked dedup, then
+        the stateless chain every epoch would otherwise rebuild —
+        ``normalize_batch``, the ``_dead`` flag and the ``_b`` bucket id
+        (``spec``: the table's bucket spec). Spark analyses it once per
+        query and re-plans it per batch in the JVM; it sits after the
+        stateful operator, so checkpoints of a stream without it
+        resume."""
         reader = (
             self.spark.readStream.schema(wal_schema)
             .option("recursiveFileLookup", "true")
@@ -438,7 +457,11 @@ class TranscriptCdcPipeline:
             stream = stream.withWatermark("ts", self.cfg.watermark_delay).dropDuplicatesWithinWatermark(
                 EVENT_ID_COLS
             )
-        return stream
+        return (
+            normalize_batch(stream)
+            .withColumn("_dead", dead_letter_predicate())
+            .withColumn("_b", spec.expr())
+        )
 
     def _state_store_conf(self):
         """Session confs for cfg.state_store, applied around query
@@ -474,8 +497,8 @@ class TranscriptCdcPipeline:
         does), so restore re-sets that default explicitly rather than
         unsetting — same effective value, and the unset branch only
         fires for keys with no registered default."""
-        table, wal_schema = self.ensure_tables()
-        stream = self._stream_reader(wal_schema)
+        _table, wal_schema, spec = self._ensure_tables()
+        stream = self._stream_reader(wal_schema, spec)
         writer = stream.writeStream.foreachBatch(self._apply_batch).option(
             "checkpointLocation", self.cfg.checkpoint_dir
         )

@@ -37,11 +37,16 @@ buckets, not the table.
 
 from __future__ import annotations
 
+import functools
+import json
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from odibel_spark.lake.table import BucketSpec, CommitConflict, LakeTable, _schema_of, lww_fold
+from odibel_spark.lake.table import (
+    BucketSpec, CommitConflict, LakeTable, _jvm, _schema_of, _tombstone_exprs, lww_fold,
+)
 
 LSN_FIELD = "_lsn"
 DELETED_FIELD = "_deleted"
@@ -103,21 +108,36 @@ def create_cdc_table(
 
 
 def _delta(
-    source: DataFrame, schema: T.StructType, spec: BucketSpec, key_cols: list[str],
-    lsn_col: str, is_del: F.Column,
+    source: DataFrame, schema_json: str, spec: BucketSpec, key_cols: list[str],
+    lsn_col: str, op_col: str, delete_op: str,
 ) -> DataFrame:
     """The batch as table rows: ``_bucket``, keys, payload (cast to the
     table type, NULL-filled when the source lacks it, NULLed on
     delete), ``_lsn`` and ``_deleted``. The bucket hashes the
     table-typed key, as ``read(with_bucket_col=True)`` does."""
+    rows, out = _delta_exprs(
+        _jvm(), schema_json, spec, tuple(key_cols), tuple(source.columns), lsn_col, op_col, delete_op
+    )
+    return source.select(*rows).select(*out)
+
+
+@functools.lru_cache(maxsize=64)
+def _delta_exprs(
+    jvm, schema_json: str, spec: BucketSpec, key_cols: tuple[str, ...],
+    source_cols: tuple[str, ...], lsn_col: str, op_col: str, delete_op: str,
+) -> tuple[tuple[F.Column, ...], tuple[F.Column, ...]]:
+    """``_delta``'s two projections: the table-typed rows, then the
+    bucket id in front of them."""
+    schema = T.StructType.fromJson(json.loads(schema_json))
+    payload = [f for f in schema.fields if f.name not in (*key_cols, *SYSTEM_FIELDS)]
+    is_del = F.col(op_col) == delete_op
     cols = [F.col(k).cast(schema[k].dataType).alias(k) for k in key_cols]
-    for f in schema.fields:
-        if f.name not in (*key_cols, *SYSTEM_FIELDS):
-            sc = F.col(f.name) if f.name in source.columns else F.lit(None)
-            cols.append(F.when(is_del, F.lit(None)).otherwise(sc).cast(f.dataType).alias(f.name))
+    for f in payload:
+        sc = F.col(f.name) if f.name in source_cols else F.lit(None)
+        cols.append(F.when(is_del, F.lit(None)).otherwise(sc).cast(f.dataType).alias(f.name))
     cols += [F.col(lsn_col).cast("long").alias(LSN_FIELD), is_del.alias(DELETED_FIELD)]
-    rows = source.select(*cols)
-    return rows.select(spec.expr().alias("_bucket"), *rows.columns)
+    names = [*key_cols, *(f.name for f in payload), LSN_FIELD, DELETED_FIELD]
+    return tuple(cols), (spec.expr().alias("_bucket"), *(F.col(n) for n in names))
 
 
 def _fold_by_bucket(
@@ -150,18 +170,18 @@ def _rewrite_buckets(
     (``CommitConflict``: the target buckets changed since ``base``)
     recomputes from the fresh head, up to ``retries`` attempts in all."""
     spec = BucketSpec.from_json(base.get("bucket"))
+    tombstone = _tombstone_exprs(_jvm())[0]
     for attempt in range(retries):
         rows = table.read(
             version=base["version"], buckets=buckets, with_bucket_col=True,
             include_tombstones=True, fold=False,
-        ).withColumn(DELETED_FIELD, F.coalesce(F.col(DELETED_FIELD), F.lit(False)))
+        ).withColumn(DELETED_FIELD, tombstone)
         if delta is not None:
             rows = rows.unionByName(delta)
         folded = _fold_by_bucket(rows, spec.buckets, key_cols, salt)
         if tombstone_gc_below_lsn is not None:
             folded = folded.filter(
-                ~(F.coalesce(F.col(DELETED_FIELD), F.lit(False))
-                  & (F.col(LSN_FIELD) < F.lit(tombstone_gc_below_lsn)))
+                ~(tombstone & (F.col(LSN_FIELD) < F.lit(tombstone_gc_below_lsn)))
             )
         try:
             return table.replace_buckets(buckets, folded, base_version=base["version"], **commit_kw)
@@ -246,7 +266,7 @@ def merge_upsert(
     if touched_buckets is not None and not touched_buckets:
         return table._next_commit(man, [], empty_summary, watermarks_update)
 
-    delta = _delta(source, schema, spec, key_cols, lsn_col, F.col(op_col) == delete_op)
+    delta = _delta(source, man["schema"], spec, key_cols, lsn_col, op_col, delete_op)
     if mor:
         # merge-on-read: append the folded winners as delta rows —
         # O(batch) per commit, no target read, no bucket rewrite. The

@@ -60,6 +60,7 @@ import time
 import uuid
 from dataclasses import dataclass
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -78,7 +79,7 @@ class BucketSpec:
     buckets: int = 16
 
     def expr(self) -> F.Column:
-        return F.pmod(F.xxhash64(F.col(self.column)), F.lit(self.buckets)).cast("int")
+        return _bucket_expr(_jvm(), self.column, self.buckets)
 
     def to_json(self) -> dict:
         return {"column": self.column, "buckets": self.buckets}
@@ -86,6 +87,33 @@ class BucketSpec:
     @staticmethod
     def from_json(d: dict | None) -> "BucketSpec | None":
         return BucketSpec(d["column"], d["buckets"]) if d else None
+
+
+def _jvm():
+    """The gateway's JVM view: the first key of every schema-keyed
+    expression builder (``_bucket_expr``, ``_lww_exprs``,
+    ``_tombstone_exprs``, ``lake.merge._delta_exprs``,
+    ``cdc.pipeline._dead_letter_exprs`` and ``_batch_exprs``). Building
+    a Column costs py4j round trips per node, and a streaming epoch's
+    trees depend only on its schemas, so each builder is a bounded
+    ``lru_cache`` on the JVM view plus hashable schema inputs (JSON
+    strings, name tuples): a new gateway is a new key, where an ``id()``
+    could be reused. Builders return only unbound trees
+    (``F.col``/``F.lit``/``F.*``), never a Column bound to a DataFrame."""
+    return SparkContext._jvm
+
+
+@functools.lru_cache(maxsize=64)
+def _bucket_expr(jvm, column: str, buckets: int) -> F.Column:
+    return F.pmod(F.xxhash64(F.col(column)), F.lit(buckets)).cast("int")
+
+
+@functools.lru_cache(maxsize=8)
+def _tombstone_exprs(jvm) -> tuple[F.Column, F.Column]:
+    """The tombstone flag (``_deleted``, NULL read as false) and its
+    negation, the live-row filter."""
+    tombstone = F.coalesce(F.col("_deleted"), F.lit(False))
+    return tombstone, ~tombstone
 
 
 #: Spark's ``xxhash64`` seed (the ``XxHash64`` expression's default)
@@ -141,13 +169,17 @@ def lww_fold(df: DataFrame, group_cols: list[str], order_col: str) -> DataFrame:
     merge and compaction (grouped on ``_bucket[, _salt]`` + keys, so
     the bucket layout exchange also serves the aggregation, and both
     aggregate steps run after it) and the read-time fold all call it."""
-    others = [c for c in df.columns if c not in group_cols]
+    others = tuple(c for c in df.columns if c not in group_cols)
+    keys, winner, unpack = _lww_exprs(_jvm(), tuple(group_cols), others, order_col)
+    return df.groupBy(*keys).agg(winner).select(*unpack)
+
+
+@functools.lru_cache(maxsize=64)
+def _lww_exprs(jvm, group_cols: tuple[str, ...], others: tuple[str, ...], order_col: str):
+    """``lww_fold``'s group keys, ``max_by(struct)`` winner and unpack."""
+    keys = tuple(F.col(c) for c in group_cols)
     winner = F.max_by(F.struct(*[F.col(c) for c in others]), F.col(order_col)).alias("_w")
-    return (
-        df.groupBy(*group_cols)
-        .agg(winner)
-        .select(*group_cols, *[F.col(f"_w.{c}").alias(c) for c in others])
-    )
+    return keys, winner, (*keys, *(F.col(f"_w.{c}").alias(c) for c in others))
 
 
 def _schema_of(man: dict) -> T.StructType:
@@ -262,6 +294,17 @@ def _file_meta(path: str, stats_cols: tuple[str, ...] = ()) -> tuple[int, dict]:
     return md.num_rows, stats
 
 
+def _lt(a, b) -> bool:
+    """``a < b`` as Spark's filter orders them: an int and a float
+    compare as floats (Spark widens the long to double, so ``2**63 - 1``
+    equals ``2.0**63`` there). Rounding to float is monotone, so a bound
+    compared this way stays sound."""
+    a, b = _cmp_key(a), _cmp_key(b)
+    if {type(a), type(b)} == {int, float}:
+        return float(a) < float(b)
+    return a < b
+
+
 def _file_in_ranges(fdesc: dict, ranges: dict) -> bool:
     """Keep-file decision for ``LakeTable.read(where_ranges=...)``:
     False only when the file's recorded bounds PROVE it disjoint from
@@ -274,9 +317,9 @@ def _file_in_ranges(fdesc: dict, ranges: dict) -> bool:
             continue
         fmin, fmax = _stats_decode(b[0]), _stats_decode(b[1])
         try:
-            if lo is not None and _cmp_key(fmax) < _cmp_key(lo):
+            if lo is not None and _lt(fmax, lo):
                 return False
-            if hi is not None and _cmp_key(fmin) > _cmp_key(hi):
+            if hi is not None and _lt(hi, fmin):
                 return False
         except TypeError:
             raise ValueError(
@@ -757,7 +800,7 @@ class LakeTable:
                 df = df.coalesce(1)
             df = lww_fold(df, keys, "_lsn")
         if "_deleted" in schema.fieldNames() and not include_tombstones:
-            df = df.filter(~F.coalesce(F.col("_deleted"), F.lit(False))).drop("_deleted")
+            df = df.filter(_tombstone_exprs(_jvm())[1]).drop("_deleted")
         if with_bucket_col:
             if spec is None:
                 raise ValueError("table is not bucketed")

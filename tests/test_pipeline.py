@@ -276,6 +276,100 @@ def test_stream_start_reads_each_table_head_once(spark, wal_dir, tmpdir_path, mo
     assert sorted(calls) == sorted([p.table_root, p.dead_root, p.lineage_root, p.metrics_root])
 
 
+#: py4j round trips on the sink thread in a data epoch past the first:
+#: measured on this fixture at 151 (merge-on-read) and 225-226
+#: (copy-on-write) with the sink's Column trees built once per query;
+#: building them in every epoch took 1,756 and 1,918-1,919
+SINK_ROUND_TRIPS_MAX = 250
+
+
+@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
+def test_sink_py4j_round_trips_per_epoch_are_bounded(spark, wal_dir, tmpdir_path, monkeypatch, merge_mode):
+    """py4j round trips made on the thread running ``_apply_batch`` stay
+    under a fixed bound in every data epoch past the first (whose
+    builds fill the schema-keyed expression caches): per-epoch driver
+    work does not rebuild the sink's Column trees."""
+    import threading
+
+    client = type(spark.sparkContext._gateway._gateway_client)
+    send, apply_batch = client.send_command, TranscriptCdcPipeline._apply_batch
+    sink: dict = {}
+    calls: dict = {}
+
+    def counting_send(self, *args, **kwargs):
+        epoch = sink.get(threading.get_ident())
+        if epoch is not None:
+            calls[epoch] = calls.get(epoch, 0) + 1
+        return send(self, *args, **kwargs)
+
+    def tracked_apply(self, batch_df, epoch_id):
+        sink[threading.get_ident()] = epoch_id
+        try:
+            return apply_batch(self, batch_df, epoch_id)
+        finally:
+            del sink[threading.get_ident()]
+
+    monkeypatch.setattr(client, "send_command", counting_send)
+    monkeypatch.setattr(TranscriptCdcPipeline, "_apply_batch", tracked_apply)
+    p = run_pipeline(
+        spark, wal_dir, tmpdir_path, max_files_per_trigger=2, merge_mode=merge_mode,
+        compact_every_epochs=None,
+    )
+    monkeypatch.undo()
+    data_epochs = sorted(r.epoch for r in p.metrics().collect() if r.n_events)
+    steady = {e: calls[e] for e in data_epochs[1:]}
+    assert len(steady) >= 3 and max(steady.values()) <= SINK_ROUND_TRIPS_MAX, steady
+
+
+def test_add_columns_between_epochs_of_a_running_query(spark, wal_dir, tmpdir_path, monkeypatch):
+    """A column added to the table between two epochs of one running
+    query reaches every later delta as NULL: the sink's cached
+    projections are keyed on the table schema, so the next epoch builds
+    them afresh. Every data file written after the change carries the
+    column, and the table equals the oracle."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    apply_batch = TranscriptCdcPipeline._apply_batch
+    evolved_at = []
+
+    def evolving_apply(self, batch_df, epoch_id):
+        if epoch_id == 2:
+            man = self.table().add_columns([T.StructField("extra", T.StringType())])
+            evolved_at.append(man["version"])
+        return apply_batch(self, batch_df, epoch_id)
+
+    monkeypatch.setattr(TranscriptCdcPipeline, "_apply_batch", evolving_apply)
+    p = run_pipeline(spark, wal_dir, tmpdir_path, max_files_per_trigger=2)
+    monkeypatch.undo()
+
+    t = p.table()
+    got = t.read()
+    assert evolved_at and got.filter(F.col("extra").isNotNull()).count() == 0
+    later = [f for f in t.files() if int(f["path"].split("/")[1][1:].split("-")[0]) > evolved_at[0]]
+    assert later and all(
+        "extra" in pq.read_schema(os.path.join(t.root, f["path"])).names for f in later
+    )
+    cols = PAYLOAD_COLS
+    assert checksum(got.select(*cols), cols) == checksum(oracle_state(spark, CFG).select(*cols), cols)
+
+
+def test_run_available_writes_no_stdout_and_leaves_no_thread(spark, wal_dir, tmpdir_path, capfd):
+    """A replay writes nothing to the process's stdout (a harness reads
+    its last stdout line as the result) and leaves no non-daemon thread
+    running that it started (one would write after the caller returned,
+    or keep the interpreter alive)."""
+    import threading
+
+    before = set(threading.enumerate())
+    capfd.readouterr()
+    run_pipeline(spark, wal_dir, tmpdir_path, max_files_per_trigger=5)
+    out = capfd.readouterr().out
+    left = [t for t in threading.enumerate() if t not in before and t.is_alive() and not t.daemon]
+    assert out == ""
+    assert not left, left
+
+
 def _strip_fences(root):
     """Rewrite a table's manifests as a writer that kept no epoch fence
     on it left them: no ``watermarks``."""

@@ -25,6 +25,8 @@ Usage:
     python tools/ab_bench.py compact_cluster [--events 4000000] [--reps 3]  (--events = row count)
     python tools/ab_bench.py point_lookup [--events 100000] [--reps 72] [--cpus 4]
         (--reps = lookups per arm; p50 headline, see ab_point_lookup)
+    python tools/ab_bench.py epoch_driver [--events 100000] [--reps 3] [--cpus 4]
+        (cadence replays; per-epoch sink, round-trip and job split, see ab_epoch_driver)
 
 Modes whose decision is closed are retired from the tool; their
 recorded artifacts stay under BENCH/ as the record
@@ -831,9 +833,191 @@ def ab_point_lookup(spark, events: int, lookups: int) -> None:
         shutil.rmtree(base, ignore_errors=True)
 
 
+def ab_epoch_driver(events: int, reps: int, cpus: int) -> None:
+    """Per-epoch driver cost of the streaming sink, with and without the
+    schema-keyed expression builders' caches. Cadence replays of the
+    benchmark's shape (a seeded WAL of 15 segments, one per trigger,
+    merge-on-read into 8 buckets, compaction every 8 epochs), two arms
+    in rotated order after one unrecorded warm-up replay each:
+
+    - ``rebuild_each_epoch``: every cached builder swapped for its
+      uncached ``__wrapped__``, so each epoch rebuilds its Column trees;
+    - ``shipped``: the builders as the engine ships them.
+
+    Per epoch: the sink's wall seconds, the py4j round trips made on the
+    thread running ``_apply_batch``, and the seconds of the Spark jobs
+    submitted inside the sink call (from an uncompressed event log in
+    the mode's temp dir; the UI is off). ``driver_s`` is the sink time
+    outside those jobs. Every replay's table is checked against the
+    ``current_state`` oracle. The headline is the per-arm median over
+    steady epochs: data epochs past the first, not compacting, with at
+    least 100 events. The summary is the last line on stdout."""
+    import glob
+    import statistics
+    import threading
+
+    from pyspark.sql import functions as F
+
+    import odibel_spark.cdc.pipeline as cdc_pipeline
+    import odibel_spark.lake.merge as lake_merge
+    import odibel_spark.lake.table as lake_table
+    from odibel_spark import get_spark
+    from odibel_spark.cdc import (
+        PipelineConfig, TranscriptCdcPipeline, WalConfig, current_state, write_wal_files,
+    )
+    from odibel_spark.cdc.evolution import discover_wal_schema
+
+    builders = {
+        (mod, name): getattr(mod, name)
+        for mod, name in (
+            (lake_table, "_bucket_expr"), (lake_table, "_tombstone_exprs"), (lake_table, "_lww_exprs"),
+            (lake_merge, "_delta_exprs"),
+            (cdc_pipeline, "_dead_letter_exprs"), (cdc_pipeline, "_batch_exprs"),
+        )
+    }
+
+    def use(arm: str) -> None:
+        for (mod, name), fn in builders.items():
+            setattr(mod, name, fn.__wrapped__ if arm == "rebuild_each_epoch" else fn)
+
+    base = tempfile.mkdtemp(prefix="ab-epoch-driver-")
+    log_dir = os.path.join(base, "eventlog")
+    os.makedirs(log_dir)
+    spark = get_spark("ab-epoch-driver", cpus=cpus, extra_conf={
+        "spark.eventLog.enabled": "true", "spark.eventLog.dir": log_dir,
+        "spark.eventLog.compress": "false", "spark.eventLog.rolling.enabled": "false",
+    })
+    client = type(spark.sparkContext._gateway._gateway_client)
+    send, apply_batch = client.send_command, TranscriptCdcPipeline._apply_batch
+    sink: dict = {}  # thread id -> the epoch's cell while it runs there
+    cells: list[dict] = []
+    run = {"arm": None, "rep": None}
+
+    def counting_send(self, *args, **kwargs):
+        cell = sink.get(threading.get_ident())
+        if cell is not None:
+            cell["round_trips"] += 1
+        return send(self, *args, **kwargs)
+
+    def timed_apply(self, batch_df, epoch_id):
+        cell = {**run, "epoch": epoch_id, "round_trips": 0, "t0_ms": time.time() * 1e3}
+        sink[threading.get_ident()] = cell
+        t0 = time.perf_counter()
+        try:
+            return apply_batch(self, batch_df, epoch_id)
+        finally:
+            cell["sink_s"] = time.perf_counter() - t0
+            cell["t1_ms"] = time.time() * 1e3
+            del sink[threading.get_ident()]
+            if run["rep"] is not None:
+                cells.append(cell)
+
+    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "meta", "_lsn"]
+
+    def checksum(df) -> tuple:
+        return tuple(df.select(*cols).agg(
+            F.count("*"), F.sum(F.pmod(F.xxhash64(*cols), F.lit(2**31)))).collect()[0])
+
+    arms = ["rebuild_each_epoch", "shipped"]
+    replays: list[dict] = []
+    try:
+        cfg = WalConfig(n_events=events, n_convs=events // 50, seed=1)
+        wal = write_wal_files(spark, cfg, os.path.join(base, "wal"), n_files=15)
+        ev = spark.read.schema(discover_wal_schema(spark, [wal])).option(
+            "recursiveFileLookup", "true").parquet(wal)
+        want = checksum(current_state(ev).join(
+            ev.select("lsn", "meta").dropDuplicates(["lsn"]), F.col("_lsn") == F.col("lsn"), "left"
+        ).drop("lsn"))
+        client.send_command = counting_send
+        TranscriptCdcPipeline._apply_batch = timed_apply
+        order = [(None, arm) for arm in arms]  # warm-up
+        order += [(rep, arm) for rep in range(reps) for arm in (arms if rep % 2 == 0 else arms[::-1])]
+        for i, (rep, arm) in enumerate(order):
+            use(arm)
+            run.update(arm=arm, rep=rep)
+            p = TranscriptCdcPipeline(spark, PipelineConfig(
+                wal_dirs=[wal], table_root=os.path.join(base, f"t{i}"),
+                checkpoint_dir=os.path.join(base, f"ckpt{i}"), buckets=8, merge_mode="mor",
+                max_files_per_trigger=1, compact_every_epochs=8,
+            ))
+            t0 = time.perf_counter()
+            p.run_available()
+            wall = time.perf_counter() - t0
+            use("shipped")
+            if checksum(p.table().read()) != want:
+                raise AssertionError(f"{arm} replay {i}: table differs from the oracle")
+            n_events = {r.epoch: r.n_events for r in p.metrics().collect()}
+            for c in cells:
+                if c["arm"] == arm and c["rep"] == rep:
+                    c["n_events"] = n_events.get(c["epoch"], 0)
+            if rep is not None:
+                replays.append({"arm": arm, "rep": rep, "wall_s": round(wall, 3)})
+    finally:
+        client.send_command, TranscriptCdcPipeline._apply_batch = send, apply_batch
+        use("shipped")
+        spark.stop()
+    try:
+        # job start/end times from the event log, flushed by stop()
+        starts, ends = {}, {}
+        for path in glob.glob(os.path.join(log_dir, "*")):
+            with open(path) as f:
+                for line in f:
+                    e = json.loads(line)
+                    if e["Event"] == "SparkListenerJobStart":
+                        starts[e["Job ID"]] = e["Submission Time"]
+                    elif e["Event"] == "SparkListenerJobEnd":
+                        ends[e["Job ID"]] = e["Completion Time"]
+        jobs = [(starts[j], ends[j]) for j in starts if j in ends]
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+    for c in cells:
+        inside = [(s, e) for s, e in jobs if c["t0_ms"] <= s <= c["t1_ms"]]
+        c["jobs"] = len(inside)
+        c["job_s"] = round(sum(e - s for s, e in inside) / 1e3, 3)
+        c["sink_s"] = round(c["sink_s"], 3)
+        c["driver_s"] = round(c["sink_s"] - c["job_s"], 3)
+        c["kind"] = (
+            "empty" if not c["n_events"] else "compaction" if c["epoch"] and c["epoch"] % 8 == 0
+            else "first" if c["epoch"] == 0 else "sliver" if c["n_events"] < 100 else "steady"
+        )
+        del c["t0_ms"], c["t1_ms"]
+
+    def median(arm: str, kind: str, field: str) -> float:
+        xs = [c[field] for c in cells if c["arm"] == arm and c["kind"] == kind]
+        return round(statistics.median(xs), 3) if xs else None
+
+    fields = ("sink_s", "driver_s", "job_s", "round_trips", "jobs")
+    from bench import cpu_reference_miters_fixedwork
+
+    artifact = {
+        "name": "epoch_driver",
+        "protocol": f"interleaved same-JVM cadence replays, 1 warm-up/arm, {reps} replays/arm "
+                    "in rotated order, every replay oracle-checked",
+        "arms": arms,
+        "median_steady": {arm: {f: median(arm, "steady", f) for f in fields} for arm in arms},
+        "median_by_kind": {
+            arm: {k: {f: median(arm, k, f) for f in fields}
+                  for k in ("first", "steady", "sliver", "compaction", "empty")}
+            for arm in arms
+        },
+        "replays": replays,
+        "wal": {"events": events, "segments": 15, "files_per_trigger": 1, "buckets": 8,
+                "merge_mode": "mor", "compact_every_epochs": 8, "seed": 1, "cpus": cpus},
+        "cpu_ref_miters_fixedwork": round(cpu_reference_miters_fixedwork(), 1),
+        "cells": cells,
+    }
+    os.makedirs(OUT_DIR, exist_ok=True)
+    path = os.path.join(OUT_DIR, "ab_epoch_driver.json")
+    with open(path, "w") as f:
+        json.dump(artifact, f, indent=1)
+    print(f"wrote {os.path.normpath(path)}", file=sys.stderr)
+    print(json.dumps({k: v for k, v in artifact.items() if k != "cells"}), flush=True)
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("which", choices=["trigger_posture", "lsh_mass_dup", "lsh_clean_corpus", "stream_dedup", "state_store", "state_store_pressure", "cluster_layout", "compact_cluster", "point_lookup"])
+    ap.add_argument("which", choices=["trigger_posture", "lsh_mass_dup", "lsh_clean_corpus", "stream_dedup", "state_store", "state_store_pressure", "cluster_layout", "compact_cluster", "point_lookup", "epoch_driver"])
     ap.add_argument("--events", type=int, default=1_000_000)
     ap.add_argument("--copies", type=int, default=20_000,
                     help="lsh_mass_dup: total documents (50 distinct contents)")
@@ -855,6 +1039,9 @@ def main() -> int:
         return 0
     if args.which == "state_store_pressure":
         ab_state_store_pressure(args.events, args.heap, args.cpus, args.timeout)
+        return 0
+    if args.which == "epoch_driver":  # its own session: the event log is a start-up conf
+        ab_epoch_driver(args.events, args.reps, args.cpus)
         return 0
 
     from odibel_spark import get_spark
