@@ -16,10 +16,10 @@ North-rule mechanics and where they live:
   writes (data, dead letters, lineage, metrics): each write stamps the
   micro-batch id into that table's ``watermarks`` map atomically with
   its rows, and a table whose watermark already reaches the epoch is
-  skipped. A batch replayed after a crash (anywhere between two of
-  those commits, or before the checkpoint) redoes only the writes that
-  had not landed. Reference gap this fixes: blind ``overwrite`` sink
-  (DBpediaTKGExtractionSpark.scala:44).
+  skipped. A batch replayed after a crash at any of its durable writes
+  (or before the checkpoint) redoes only the writes that had not
+  landed, a due compaction included. Reference gap this fixes: blind
+  ``overwrite`` sink (DBpediaTKGExtractionSpark.scala:44).
 - **resumable lineage** → per-epoch, per-bucket applied-LSN high-water
   marks and the epoch's event/dead-letter counts, stamped into the data
   commit's summary; the lineage and throughput-metrics side tables are
@@ -110,9 +110,6 @@ class PipelineConfig:
     watermark_delay: str = "300 seconds"
     max_files_per_trigger: int | None = None
     dedup_in_stream: bool = True
-    #: fault injection for crash tests: raise after the lake commit of
-    #: this epoch (exactly-once must survive it)
-    fail_after_commit_epoch: int | None = None
     #: LSN slack for riding tombstone GC: tombstones older than
     #: (stream max-applied LSN − slack) can no longer be contradicted
     #: by any in-flight out-of-order event, so the merge drops them
@@ -294,10 +291,9 @@ class TranscriptCdcPipeline:
             # commit: the batch replays. Drain it through the noop sink
             # (Spark 4 validates that foreachBatch consumed every
             # partition — the upstream dedup state stores must commit),
-            # then finish whichever side table the crash left behind.
+            # then finish whatever of the epoch the crash left undone.
             batch_df.write.format("noop").mode("overwrite").save()
-            self._append_side_rows(epoch_id, self._epoch_summary(table, head, epoch_id), 0.0)
-            return
+            return self._finish_epoch(table, head, epoch_id, None)
 
         # One materialization of the micro-batch (pins the stream-dedup
         # output — every derived job below reuses the cache instead of
@@ -310,14 +306,13 @@ class TranscriptCdcPipeline:
         dead, live, stat_keys, stat_aggs = _batch_exprs(_jvm())
         try:
             stats = flagged.groupBy(*stat_keys).agg(*stat_aggs).collect()
-            n_ok = sum(r["n"] for r in stats if not r["_dead"])
             n_dead = sum(r["n"] for r in stats if r["_dead"])
-            touched = {r["_b"] for r in stats if not r["_dead"]}
             lineage_rows = [
                 {"bucket": r["_b"], "n_events": r["n"], "min_lsn": r["min_lsn"], "max_lsn": r["max_lsn"]}
                 for r in stats
                 if not r["_dead"]
             ]
+            n_ok = sum(r["n_events"] for r in lineage_rows)
 
             if n_dead:
                 dl = LakeTable(self.spark, self.dead_root)
@@ -334,10 +329,6 @@ class TranscriptCdcPipeline:
                         watermarks_update=fence, _base=dl_head,
                     )
 
-            gc_below = None
-            if self.cfg.tombstone_gc_lsn_slack is not None and lineage_rows:
-                hwm = max(r["max_lsn"] for r in lineage_rows)
-                gc_below = max(hwm - self.cfg.tombstone_gc_lsn_slack, 0)
             write_salt = self.cfg.write_salt
             if write_salt == "auto":
                 # skew-adaptive: the stats pass already knows per-bucket
@@ -350,11 +341,10 @@ class TranscriptCdcPipeline:
                 # splitting a few-thousand-row task is pure delta-file
                 # overhead with no straggler to fix.
                 write_salt = 1
-                ok_counts = [r["n"] for r in stats if not r["_dead"] and r["n"]]
-                if ok_counts and n_ok:
-                    mean = n_ok / len(ok_counts)
-                    hot = max(ok_counts)
-                    if mean > 0 and hot >= 4 * mean and hot >= _MIN_SALT_HOT:
+                if n_ok:
+                    mean = n_ok / len(lineage_rows)
+                    hot = max(r["n_events"] for r in lineage_rows)
+                    if hot >= 4 * mean and hot >= _MIN_SALT_HOT:
                         write_salt = min(8, max(2, round(hot / (2 * mean))))
             man = merge_upsert(
                 table,
@@ -370,40 +360,50 @@ class TranscriptCdcPipeline:
                     "lineage": lineage_rows,
                 },
                 watermarks_update=fence,
-                touched_buckets=touched,
-                tombstone_gc_below_lsn=gc_below,
+                touched_buckets={r["bucket"] for r in lineage_rows},
+                tombstone_gc_below_lsn=self._gc_below(lineage_rows),
                 write_salt=write_salt,
                 _base=head,
             )
-            if (
-                self.cfg.merge_mode == "mor"
-                and self.cfg.compact_every_epochs
-                and epoch_id > 0
-                and epoch_id % self.cfg.compact_every_epochs == 0
-            ):
-                from odibel_spark.lake.merge import compact_buckets
-
-                compact_buckets(
-                    table,
-                    tombstone_gc_below_lsn=gc_below,
-                    summary={"stream_id": self.cfg.stream_id, "after_epoch": epoch_id},
-                    cluster_by=self.cfg.compact_cluster_by,
-                )
-            if self.cfg.fail_after_commit_epoch == epoch_id:
-                raise RuntimeError(f"fault-injection: crash after commit of epoch {epoch_id}")
-
-            self._append_side_rows(epoch_id, man["summary"], time.time() - t0)
+            self._finish_epoch(table, man, epoch_id, t0)
         finally:
             flagged.unpersist()
 
-    def _append_side_rows(self, epoch_id: int, summary: dict, secs: float) -> None:
-        """Lineage and metrics rows from the epoch's data-commit record
-        (``summary``: ``lineage``, ``n_events``, ``n_dead``), appended
-        to each side table the fence shows behind. Driver-side pyarrow
-        appends: per-batch bookkeeping is a few rows — a distributed
-        write job here would be pure scheduling overhead."""
+    def _gc_below(self, lineage: list[dict]) -> int | None:
+        """Tombstone-GC threshold: an epoch's highest applied LSN minus the slack."""
+        if self.cfg.tombstone_gc_lsn_slack is None or not lineage:
+            return None
+        return max(max(r["max_lsn"] for r in lineage) - self.cfg.tombstone_gc_lsn_slack, 0)
+
+    def _finish_epoch(self, table: LakeTable, newest: dict, epoch_id: int, t0: float | None) -> None:
+        """An epoch's tail after its data commit, one path for a first
+        run and a fenced replay (``t0`` None: ``batch_seconds`` 0).
+        ``newest`` is the table's newest commit (``merge_upsert``'s, or
+        the head on a replay). While it is still this epoch's data
+        commit, a due compaction runs: a crash before the compaction
+        commit leaves it to the replay. Then the side tables the fence
+        shows behind get their lineage/metrics rows from the data
+        commit's record, appended driver-side by pyarrow (a few rows)."""
         import datetime as _dt
 
+        summary = newest.get("summary", {})
+        if (summary.get("stream_id"), summary.get("epoch")) != (self.cfg.stream_id, epoch_id):
+            summary = self._epoch_summary(table, newest, epoch_id)
+        elif (
+            self.cfg.merge_mode == "mor"
+            and self.cfg.compact_every_epochs
+            and epoch_id > 0
+            and epoch_id % self.cfg.compact_every_epochs == 0
+        ):
+            from odibel_spark.lake.merge import compact_buckets
+
+            compact_buckets(
+                table,
+                tombstone_gc_below_lsn=self._gc_below(summary.get("lineage", [])),
+                summary={"stream_id": self.cfg.stream_id, "after_epoch": epoch_id},
+                cluster_by=self.cfg.compact_cluster_by,
+            )
+        secs = 0.0 if t0 is None else time.time() - t0
         key = {"stream_id": self.cfg.stream_id, "epoch": epoch_id,
                "committed_at": _dt.datetime.now(_dt.timezone.utc)}
         n_ok = summary.get("n_events", 0)

@@ -32,13 +32,14 @@ def dead_letter_predicate() -> F.Column:
     must produce *no state change* — in particular it must never be
     folded into a delete (DBpediaTKGExtraction.scala:174-195, "return
     None instead of empty String to not remove triples later").
-    Poison = unknown op, null key parts, or non-delete null payload."""
-    return (
+    Poison = unknown/NULL op, null key parts, or non-delete null payload."""
+    return F.coalesce(
         ~F.col("op").isin(*EVENT_OPS)
         | F.col("conv_id").isNull()
         | F.col("turn_idx").isNull()
         | F.col("lsn").isNull()
-        | ((F.col("op") != "delete") & F.col("text").isNull())
+        | ((F.col("op") != "delete") & F.col("text").isNull()),
+        F.lit(True),  # a NULL flag would pass neither filter
     )
 
 

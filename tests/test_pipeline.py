@@ -4,6 +4,7 @@ restart, mid-stream schema evolution, dead-letters, lineage/metrics."""
 from __future__ import annotations
 
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -81,54 +82,181 @@ def test_stream_end_to_end(spark, wal_dir, tmpdir_path):
     assert met.agg(F.sum("n_events")).collect()[0][0] > 0
 
 
-def test_exactly_once_under_crash_restart(spark, wal_dir, tmpdir_path, monkeypatch):
-    # phase 1: crash right AFTER the lake commit of epoch 1 (worst case:
-    # lake state advanced, checkpoint not yet — batch will replay)
-    with pytest.raises(Exception):  # Spark wraps the injected RuntimeError
-        run_pipeline(
-            spark, wal_dir, tmpdir_path, max_files_per_trigger=2, fail_after_commit_epoch=1
-        )
-    # the crash hit after the lake commit: watermark already at epoch 1
+def crash_hook(monkeypatch, epoch, before=None, after=None):
+    """Fault hook at the sink's durable writes: wraps
+    ``LakeTable._write_data_files`` (every Spark data-file write) and
+    ``LakeTable._commit`` (every manifest publish; ``append_rows``
+    writes its one file by pyarrow, then publishes here). Each call made
+    by ``_apply_batch`` of ``epoch`` is recorded, as (method, table
+    directory name), in the returned list. The hook raises before write
+    number ``before`` (0-based), or right after the first write equal to
+    ``after``. Calls on other threads or in other epochs pass through."""
     from odibel_spark.lake import LakeTable
 
-    t = LakeTable.load(spark, os.path.join(tmpdir_path, "transcripts"))
-    assert t.watermark("wal") == 1
+    writes: list = []
+    sink: dict = {}
+    apply_batch = TranscriptCdcPipeline._apply_batch
 
-    # phase 2: restart without fault — replayed epoch must be fenced,
-    # and finishing its side rows must not probe the lineage table
-    read_roots = []
-    real_read = LakeTable.read
+    def tracked_apply(self, batch_df, epoch_id):
+        sink[threading.get_ident()] = epoch_id
+        try:
+            return apply_batch(self, batch_df, epoch_id)
+        finally:
+            del sink[threading.get_ident()]
 
-    def spy_read(self, *args, **kwargs):
-        read_roots.append(self.root)
-        return real_read(self, *args, **kwargs)
+    def hooked(name):
+        real = getattr(LakeTable, name)
 
-    monkeypatch.setattr(LakeTable, "read", spy_read)
-    p = run_pipeline(spark, wal_dir, tmpdir_path, max_files_per_trigger=2)
-    monkeypatch.undo()
-    assert p.lineage_root not in read_roots
+        def write(self, *args, **kwargs):
+            if sink.get(threading.get_ident()) != epoch:
+                return real(self, *args, **kwargs)
+            point = (name, os.path.basename(self.root))
+            if len(writes) == before:
+                raise RuntimeError(f"fault-injection: crash before {point} of epoch {epoch}")
+            writes.append(point)
+            out = real(self, *args, **kwargs)
+            if point == after:
+                raise RuntimeError(f"fault-injection: crash after {point} of epoch {epoch}")
+            return out
 
-    exp = oracle_state(spark, CFG)
-    got = p.table().read()
+        return write
+
+    monkeypatch.setattr(TranscriptCdcPipeline, "_apply_batch", tracked_apply)
+    for name in ("_write_data_files", "_commit"):
+        monkeypatch.setattr(LakeTable, name, hooked(name))
+    return writes
+
+
+#: the data table's commit, as ``crash_hook`` names the write
+DATA_COMMIT = ("_commit", "transcripts")
+#: the harness's epoch: it writes dead letters and data, and with
+#: compaction every 2 epochs it compacts a merge-on-read table
+HARNESS_EPOCH = 2
+HARNESS_WRITES = {
+    "cow": [
+        ("_write_data_files", "transcripts_deadletter"), ("_commit", "transcripts_deadletter"),
+        ("_write_data_files", "transcripts"), DATA_COMMIT,
+        ("_commit", "transcripts_lineage"), ("_commit", "transcripts_metrics"),
+    ],
+}
+HARNESS_WRITES["mor"] = [
+    *HARNESS_WRITES["cow"][:4], ("_write_data_files", "transcripts"), DATA_COMMIT, *HARNESS_WRITES["cow"][4:],
+]
+
+
+def _sorted_rows(df, drop=()):
+    return sorted((tuple(r) for r in df.drop(*drop).collect()), key=repr)
+
+
+def lake_state(p):
+    """Everything a crash could get wrong, per table the sink writes."""
+    from odibel_spark.lake import LakeTable
+
+    roots = (p.table_root, p.dead_root, p.lineage_root, p.metrics_root)
+    heads = [LakeTable(p.spark, r).manifest() for r in roots]
+    return {
+        # (op, epoch) per commit: a skipped or doubled merge,
+        # compaction or side append changes this sequence
+        "commits": [
+            [
+                (m["summary"].get("op"), m["summary"].get("epoch", m["summary"].get("after_epoch")))
+                for m in LakeTable(p.spark, r).history()
+            ]
+            for r in roots
+        ],
+        "data": _sorted_rows(p.table().read(include_tombstones=True)),
+        "dead_letters": _sorted_rows(p.dead_letters()),
+        "lineage": _sorted_rows(p.lineage(), drop=("committed_at",)),
+        "metrics": _sorted_rows(p.metrics(), drop=("committed_at", "batch_seconds", "events_per_sec")),
+        "watermarks": [h.get("watermarks") for h in heads],
+    }
+
+
+def assert_vacuum_leaves_no_orphan(p):
+    """``vacuum(keep_versions=1, grace_seconds=0)`` leaves on disk
+    exactly the head's data files, in every table the sink writes."""
+    from odibel_spark.lake import LakeTable
+
+    for root in (p.table_root, p.dead_root, p.lineage_root, p.metrics_root):
+        t = LakeTable(p.spark, root)
+        t.vacuum(keep_versions=1, grace_seconds=0)
+        on_disk = {
+            os.path.relpath(os.path.join(d, n), root)
+            for d, _dirs, names in os.walk(os.path.join(root, "data"))
+            for n in names
+            if n.endswith(".parquet")
+        }
+        assert on_disk == {f["path"] for f in t.files()}, root
+
+
+@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
+def test_crash_at_every_durable_write_matches_clean_run(spark, wal_dir, tmpdir_path, monkeypatch, merge_mode):
+    """Crash consistency at every durable write of one epoch (the ALICE
+    method at the granularity of lake commits). A clean run enumerates
+    the epoch's writes: dead-letter files and commit, data files and
+    commit, compaction files and commit (merge-on-read), lineage commit,
+    metrics commit. Then, for a crash before each write and one after
+    the last (before the checkpoint), one restart must leave every
+    table equal to the clean run's: data rows with ``_lsn``/``_deleted``,
+    dead letters, lineage and metrics rows, watermarks and each table's
+    (op, epoch) commit sequence. A replay fenced on the data table reads
+    no side table and writes a missing metrics row with
+    ``batch_seconds`` 0, and vacuum leaves no orphan and no dangling
+    file."""
+    from odibel_spark.lake import LakeTable
+
+    e = HARNESS_EPOCH
+    kw = dict(max_files_per_trigger=2, merge_mode=merge_mode, compact_every_epochs=2)
+    with monkeypatch.context() as m:
+        writes = crash_hook(m, e)
+        clean = run_pipeline(spark, wal_dir, os.path.join(tmpdir_path, "clean"), **kw)
+    assert writes == HARNESS_WRITES[merge_mode]
     cols = PAYLOAD_COLS
-    assert checksum(got.select(*cols), cols) == checksum(exp.select(*cols), cols)
+    assert checksum(clean.table().read().select(*cols), cols) == checksum(
+        oracle_state(spark, CFG).select(*cols), cols
+    )
+    want = lake_state(clean)
 
-    # the fenced epoch appears exactly once in lineage and merge history
-    lin = p.lineage().filter(F.col("epoch") == 1)
-    assert lin.groupBy("bucket").count().filter("count > 1").count() == 0
-    merges_e1 = [
-        m
-        for m in p.table().history()
-        if m["summary"].get("epoch") == 1 and m["summary"].get("op", "merge") == "merge"
-    ]
-    assert len(merges_e1) == 1, "epoch 1 must be applied exactly once"
-    # ... with exact lineage: the rows re-emitted after the fence carry
-    # the buckets and LSN bounds stamped into epoch 1's data commit
-    e1 = merges_e1[0]["summary"]
-    lin_rows = sorted((r.bucket, r.n_events, r.min_lsn, r.max_lsn) for r in lin.collect())
-    assert [b for b, *_ in lin_rows] == e1["touched_buckets"] and lin_rows == sorted(
-        (r["bucket"], r["n_events"], r["min_lsn"], r["max_lsn"]) for r in e1.get("lineage", [])
-    ), f"fenced epoch lineage {lin_rows} != data commit {e1.get('lineage')}"
+    points = [{"before": k} for k in range(len(writes))] + [{"after": writes[-1]}]
+    for i, point in enumerate(points):
+        base = os.path.join(tmpdir_path, f"crash{i}")
+        with monkeypatch.context() as m:
+            crash_hook(m, e, **point)
+            with pytest.raises(Exception, match="fault-injection"):
+                run_pipeline(spark, wal_dir, base, **kw)
+        landed = writes[: point.get("before", len(writes))]
+        data_t = LakeTable(spark, os.path.join(base, "transcripts"))
+        fenced = DATA_COMMIT in landed
+        assert data_t.watermark("wal") == (e if fenced else e - 1), point
+        metrics_done = ("_commit", "transcripts_metrics") in landed
+
+        read_roots: list = []
+        real_read = LakeTable.read
+
+        def spy_read(self, *args, **kwargs):
+            read_roots.append(os.path.basename(self.root))
+            return real_read(self, *args, **kwargs)
+
+        with monkeypatch.context() as m:
+            m.setattr(LakeTable, "read", spy_read)
+            p = run_pipeline(spark, wal_dir, base, **kw)
+        assert not {"transcripts_lineage", "transcripts_metrics"} & set(read_roots), (point, read_roots)
+
+        got = lake_state(p)
+        for part in want:
+            assert got[part] == want[part], (point, part)
+        (e_commit,) = [
+            m["summary"] for m in p.table().history()
+            if m["summary"].get("epoch") == e and m["summary"]["op"].startswith("merge")
+        ]
+        lin = p.lineage().filter(F.col("epoch") == e).collect()
+        assert sorted((r.bucket, r.n_events, r.min_lsn, r.max_lsn) for r in lin) == sorted(
+            (r["bucket"], r["n_events"], r["min_lsn"], r["max_lsn"]) for r in e_commit["lineage"]
+        ), point
+        (met,) = p.metrics().filter(F.col("epoch") == e).collect()
+        assert (met.n_events, met.n_dead) == (e_commit["n_events"], e_commit["n_dead"]), point
+        assert (met.batch_seconds == 0.0) == (fenced and not metrics_done), (point, met.batch_seconds)
+        assert_vacuum_leaves_no_orphan(p)
 
 
 def test_dead_letters_exactly_once_when_crash_precedes_data_commit(
@@ -165,33 +293,27 @@ def test_dead_letters_exactly_once_when_crash_precedes_data_commit(
     assert (len(got), got) == (len(want), want)
 
 
-def test_side_rows_exact_when_metrics_append_crashes(spark, wal_dir, tmpdir_path, monkeypatch):
-    """A crash between the lineage and the metrics append: the replay is
-    fenced on the data table, and the side table left behind is
-    finished from the data commit's record — one metrics row, lineage
-    equal to the commit's per-bucket ``lineage``."""
-    from odibel_spark.lake import LakeTable
+def test_null_op_event_is_dead_lettered_not_lost(spark, tmpdir_path):
+    """An event whose ``op`` is NULL (keys, LSN and text valid) is a
+    dead letter: live plus dead equals the input, in the sink and in
+    ``split_dead_letters``. A NULL ``_dead`` flag would pass neither
+    the live nor the dead filter, and the event would vanish."""
+    import datetime as dt
 
-    real_append_rows = LakeTable.append_rows
+    ts = dt.datetime(2024, 1, 1)
+    rows = [(i + 1, "insert", f"conv-{i % 5}", i, "user", f"m{i}", None, ts) for i in range(40)]
+    rows[7] = (8, None, "conv-2", 7, "user", "m7", None, ts)
+    schema = ("lsn long, op string, conv_id string, turn_idx int, role string, "
+              "text string, tool string, ts timestamp")
+    wal = os.path.join(tmpdir_path, "nullop")
+    events = spark.createDataFrame(rows, schema)
+    events.coalesce(1).write.parquet(wal)
 
-    def crashing_append_rows(self, rows, summary=None, *args, **kwargs):
-        if self.root.endswith("_metrics") and (summary or {}).get("epoch") == 1:
-            raise RuntimeError("fault-injection: crash before the metrics append")
-        return real_append_rows(self, rows, summary, *args, **kwargs)
-
-    monkeypatch.setattr(LakeTable, "append_rows", crashing_append_rows)
-    with pytest.raises(Exception):  # Spark wraps the injected RuntimeError
-        run_pipeline(spark, wal_dir, tmpdir_path, max_files_per_trigger=2)
-    monkeypatch.undo()
-    p = run_pipeline(spark, wal_dir, tmpdir_path, max_files_per_trigger=2)
-
-    (e1,) = [m["summary"] for m in p.table().history() if m["summary"].get("epoch") == 1]
-    met = p.metrics().filter(F.col("epoch") == 1).collect()
-    assert [(r.n_events, r.n_dead, r.batch_seconds) for r in met] == [(e1["n_events"], e1["n_dead"], 0.0)]
-    lin = p.lineage().filter(F.col("epoch") == 1).collect()
-    assert sorted((r.bucket, r.n_events, r.min_lsn, r.max_lsn) for r in lin) == sorted(
-        (r["bucket"], r["n_events"], r["min_lsn"], r["max_lsn"]) for r in e1["lineage"]
-    )
+    ok, dead = split_dead_letters(events)
+    assert (ok.count(), [r.lsn for r in dead.collect()]) == (39, [8])
+    p = run_pipeline(spark, wal, os.path.join(tmpdir_path, "sink"))
+    assert [r.lsn for r in p.dead_letters().collect()] == [8]
+    assert p.table().read().count() + p.dead_letters().count() == len(rows)
 
 
 def test_meta_listings_per_epoch_do_not_grow_with_history(spark, wal_dir, tmpdir_path, monkeypatch):
@@ -537,29 +659,6 @@ def test_mor_pipeline_clustered_compaction(spark, wal_dir, tmpdir_path):
         assert pairs == sorted(pairs), path
 
 
-def test_mor_crash_restart_exactly_once(spark, wal_dir, tmpdir_path):
-    base = os.path.join(tmpdir_path, "morcrash")
-    os.makedirs(base)
-    with pytest.raises(Exception):
-        run_pipeline(
-            spark, wal_dir, base, max_files_per_trigger=2,
-            merge_mode="mor", fail_after_commit_epoch=1, compact_every_epochs=None,
-        )
-    p = run_pipeline(
-        spark, wal_dir, base, max_files_per_trigger=2,
-        merge_mode="mor", compact_every_epochs=None,
-    )
-    exp = oracle_state(spark, CFG)
-    got = p.table().read()
-    cols = PAYLOAD_COLS
-    assert checksum(got.select(*cols), cols) == checksum(exp.select(*cols), cols)
-    merges_e1 = [
-        m for m in p.table().history() if m["summary"].get("epoch") == 1
-        and m["summary"].get("op") == "merge-mor"
-    ]
-    assert len(merges_e1) == 1, "epoch 1 must be applied exactly once"
-
-
 def test_normalizer_promotes_legacy_variants(spark):
     from odibel_spark.cdc import normalize_batch
 
@@ -662,11 +761,11 @@ def test_rollback_reprocess_with_fresh_checkpoint_converges(spark, wal_dir, tmpd
     assert checksum(got.select(*cols), cols) == checksum(exp.select(*cols), cols)
 
 
-def test_randomized_multi_crash_gauntlet(spark, wal_dir, tmpdir_path):
+def test_randomized_multi_crash_gauntlet(spark, wal_dir, tmpdir_path, monkeypatch):
     """North-rule wording: byte-identical final table under RANDOMIZED
     crash/restart. Seeded RNG picks several crash epochs; the pipeline
-    is killed after each corresponding lake commit (the worst ordering:
-    data committed, checkpoint not) and restarted, ending with a clean
+    is killed after each one's data commit (``crash_hook``: data
+    committed, checkpoint not) and restarted, ending with a clean
     drain. Both merge modes must converge to the batch oracle."""
     import random
 
@@ -678,11 +777,11 @@ def test_randomized_multi_crash_gauntlet(spark, wal_dir, tmpdir_path):
         os.makedirs(base)
         crash_epochs = sorted(rng.sample(range(5), k=2))
         for epoch in crash_epochs:
-            with pytest.raises(Exception):
+            with monkeypatch.context() as m, pytest.raises(Exception):
+                crash_hook(m, epoch, after=DATA_COMMIT)
                 run_pipeline(
                     spark, wal_dir, base, max_files_per_trigger=1,
                     merge_mode=mode, compact_every_epochs=3,
-                    fail_after_commit_epoch=epoch,
                 )
         p = run_pipeline(
             spark, wal_dir, base, max_files_per_trigger=1,
@@ -765,9 +864,9 @@ def test_state_store_rejects_unknown_backend(spark, wal_dir, tmpdir_path):
         run_pipeline(spark, wal_dir, tmpdir_path, state_store="leveldb")
 
 
-def test_rocksdb_crash_restart_exactly_once(spark, wal_dir, tmpdir_path):
+def test_rocksdb_crash_restart_exactly_once(spark, wal_dir, tmpdir_path, monkeypatch):
     """The north rule's resume clause under the RocksDB backend: crash
-    after the lake commit of epoch 1 (worst ordering — lake advanced,
+    after the data commit of epoch 1 (worst ordering — lake advanced,
     checkpoint not), then restart WITHOUT re-requesting RocksDB (the
     default heap config) — the provider CLASS pinned in the
     checkpoint's offset metadata must keep the resumed query on
@@ -777,10 +876,10 @@ def test_rocksdb_crash_restart_exactly_once(spark, wal_dir, tmpdir_path):
     production resumes should keep state_store='rocksdb'. The restart
     must fence the replayed epoch and converge byte-identically to the
     batch oracle."""
-    with pytest.raises(Exception):  # Spark wraps the injected RuntimeError
+    with monkeypatch.context() as m, pytest.raises(Exception):  # Spark wraps the injected RuntimeError
+        crash_hook(m, 1, after=DATA_COMMIT)
         run_pipeline(
-            spark, wal_dir, tmpdir_path, max_files_per_trigger=2,
-            state_store="rocksdb", fail_after_commit_epoch=1,
+            spark, wal_dir, tmpdir_path, max_files_per_trigger=2, state_store="rocksdb",
         )
     state_dir = os.path.join(tmpdir_path, "ckpt", "state")
 
