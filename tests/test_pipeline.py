@@ -127,21 +127,24 @@ def crash_hook(monkeypatch, epoch, before=None, after=None):
     return writes
 
 
-#: the data table's commit, as ``crash_hook`` names the write
-DATA_COMMIT = ("_commit", "transcripts")
+#: durable writes as ``crash_hook`` names them
+DATA_FILES, DATA_COMMIT = ("_write_data_files", "transcripts"), ("_commit", "transcripts")
+DEAD_FILES = ("_write_data_files", "transcripts_deadletter")
+DEAD_COMMIT = ("_commit", "transcripts_deadletter")
+LINEAGE_COMMIT, METRICS_COMMIT = ("_commit", "transcripts_lineage"), ("_commit", "transcripts_metrics")
 #: the harness's epoch: it writes dead letters and data, and with
-#: compaction every 2 epochs it compacts a merge-on-read table
+#: compaction every 2 epochs it compacts a merge-on-read table. At 3
+#: WAL files per trigger the module WAL's data fills epochs 0-3, so a
+#: restart replays this epoch and runs one more data epoch.
 HARNESS_EPOCH = 2
 HARNESS_WRITES = {
-    "cow": [
-        ("_write_data_files", "transcripts_deadletter"), ("_commit", "transcripts_deadletter"),
-        ("_write_data_files", "transcripts"), DATA_COMMIT,
-        ("_commit", "transcripts_lineage"), ("_commit", "transcripts_metrics"),
+    "cow": [DEAD_FILES, DEAD_COMMIT, DATA_FILES, DATA_COMMIT, LINEAGE_COMMIT, METRICS_COMMIT],
+    # the compaction rewrites the data table: its files, then its commit
+    "mor": [
+        DEAD_FILES, DEAD_COMMIT, DATA_FILES, DATA_COMMIT,
+        DATA_FILES, DATA_COMMIT, LINEAGE_COMMIT, METRICS_COMMIT,
     ],
 }
-HARNESS_WRITES["mor"] = [
-    *HARNESS_WRITES["cow"][:4], ("_write_data_files", "transcripts"), DATA_COMMIT, *HARNESS_WRITES["cow"][4:],
-]
 
 
 def _sorted_rows(df, drop=()):
@@ -206,7 +209,7 @@ def test_crash_at_every_durable_write_matches_clean_run(spark, wal_dir, tmpdir_p
     from odibel_spark.lake import LakeTable
 
     e = HARNESS_EPOCH
-    kw = dict(max_files_per_trigger=2, merge_mode=merge_mode, compact_every_epochs=2)
+    kw = dict(max_files_per_trigger=3, merge_mode=merge_mode, compact_every_epochs=2)
     with monkeypatch.context() as m:
         writes = crash_hook(m, e)
         clean = run_pipeline(spark, wal_dir, os.path.join(tmpdir_path, "clean"), **kw)
@@ -228,7 +231,7 @@ def test_crash_at_every_durable_write_matches_clean_run(spark, wal_dir, tmpdir_p
         data_t = LakeTable(spark, os.path.join(base, "transcripts"))
         fenced = DATA_COMMIT in landed
         assert data_t.watermark("wal") == (e if fenced else e - 1), point
-        metrics_done = ("_commit", "transcripts_metrics") in landed
+        metrics_done = METRICS_COMMIT in landed
 
         read_roots: list = []
         real_read = LakeTable.read
@@ -249,10 +252,14 @@ def test_crash_at_every_durable_write_matches_clean_run(spark, wal_dir, tmpdir_p
             m["summary"] for m in p.table().history()
             if m["summary"].get("epoch") == e and m["summary"]["op"].startswith("merge")
         ]
-        lin = p.lineage().filter(F.col("epoch") == e).collect()
-        assert sorted((r.bucket, r.n_events, r.min_lsn, r.max_lsn) for r in lin) == sorted(
+        lin = sorted(
+            (r.bucket, r.n_events, r.min_lsn, r.max_lsn)
+            for r in p.lineage().filter(F.col("epoch") == e).collect()
+        )
+        assert lin == sorted(
             (r["bucket"], r["n_events"], r["min_lsn"], r["max_lsn"]) for r in e_commit["lineage"]
         ), point
+        assert [b for b, *_ in lin] == e_commit.get("touched_buckets", [b for b, *_ in lin]), point
         (met,) = p.metrics().filter(F.col("epoch") == e).collect()
         assert (met.n_events, met.n_dead) == (e_commit["n_events"], e_commit["n_dead"]), point
         assert (met.batch_seconds == 0.0) == (fenced and not metrics_done), (point, met.batch_seconds)
