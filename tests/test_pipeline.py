@@ -266,6 +266,85 @@ def test_crash_at_every_durable_write_matches_clean_run(spark, wal_dir, tmpdir_p
         assert_vacuum_leaves_no_orphan(p)
 
 
+def test_exactly_once_under_crash_restart(spark, wal_dir, tmpdir_path, monkeypatch):
+    from odibel_spark.lake import LakeTable
+
+    # phase 1: crash right AFTER the lake commit of epoch 1 (worst case:
+    # lake state advanced, checkpoint not yet — batch will replay)
+    with monkeypatch.context() as m:
+        crash_hook(m, 1, after=DATA_COMMIT)
+        with pytest.raises(Exception, match="fault-injection"):
+            run_pipeline(spark, wal_dir, tmpdir_path, max_files_per_trigger=2)
+    # the crash hit after the lake commit: watermark already at epoch 1
+    t = LakeTable.load(spark, os.path.join(tmpdir_path, "transcripts"))
+    assert t.watermark("wal") == 1
+
+    # phase 2: restart without fault — replayed epoch must be fenced,
+    # and finishing its side rows must not probe the lineage table
+    read_roots = []
+    real_read = LakeTable.read
+
+    def spy_read(self, *args, **kwargs):
+        read_roots.append(self.root)
+        return real_read(self, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(LakeTable, "read", spy_read)
+        p = run_pipeline(spark, wal_dir, tmpdir_path, max_files_per_trigger=2)
+    assert p.lineage_root not in read_roots
+
+    exp = oracle_state(spark, CFG)
+    got = p.table().read()
+    cols = PAYLOAD_COLS
+    assert checksum(got.select(*cols), cols) == checksum(exp.select(*cols), cols)
+
+    # the fenced epoch appears exactly once in lineage and merge history
+    lin = p.lineage().filter(F.col("epoch") == 1)
+    assert lin.groupBy("bucket").count().filter("count > 1").count() == 0
+    merges_e1 = [
+        m
+        for m in p.table().history()
+        if m["summary"].get("epoch") == 1 and m["summary"].get("op", "merge") == "merge"
+    ]
+    assert len(merges_e1) == 1, "epoch 1 must be applied exactly once"
+    # ... with exact lineage: the rows re-emitted after the fence carry
+    # the buckets and LSN bounds stamped into epoch 1's data commit
+    e1 = merges_e1[0]["summary"]
+    lin_rows = sorted((r.bucket, r.n_events, r.min_lsn, r.max_lsn) for r in lin.collect())
+    assert [b for b, *_ in lin_rows] == e1["touched_buckets"] and lin_rows == sorted(
+        (r["bucket"], r["n_events"], r["min_lsn"], r["max_lsn"]) for r in e1.get("lineage", [])
+    ), f"fenced epoch lineage {lin_rows} != data commit {e1.get('lineage')}"
+
+
+def test_side_rows_exact_when_metrics_append_crashes(spark, wal_dir, tmpdir_path, monkeypatch):
+    """A crash between the lineage and the metrics append: the replay is
+    fenced on the data table, and the side table left behind is
+    finished from the data commit's record — one metrics row, lineage
+    equal to the commit's per-bucket ``lineage``."""
+    from odibel_spark.lake import LakeTable
+
+    real_append_rows = LakeTable.append_rows
+
+    def crashing_append_rows(self, rows, summary=None, *args, **kwargs):
+        if self.root.endswith("_metrics") and (summary or {}).get("epoch") == 1:
+            raise RuntimeError("fault-injection: crash before the metrics append")
+        return real_append_rows(self, rows, summary, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(LakeTable, "append_rows", crashing_append_rows)
+        with pytest.raises(Exception, match="fault-injection"):
+            run_pipeline(spark, wal_dir, tmpdir_path, max_files_per_trigger=2)
+    p = run_pipeline(spark, wal_dir, tmpdir_path, max_files_per_trigger=2)
+
+    (e1,) = [m["summary"] for m in p.table().history() if m["summary"].get("epoch") == 1]
+    met = p.metrics().filter(F.col("epoch") == 1).collect()
+    assert [(r.n_events, r.n_dead, r.batch_seconds) for r in met] == [(e1["n_events"], e1["n_dead"], 0.0)]
+    lin = p.lineage().filter(F.col("epoch") == 1).collect()
+    assert sorted((r.bucket, r.n_events, r.min_lsn, r.max_lsn) for r in lin) == sorted(
+        (r["bucket"], r["n_events"], r["min_lsn"], r["max_lsn"]) for r in e1["lineage"]
+    )
+
+
 def test_dead_letters_exactly_once_when_crash_precedes_data_commit(
     spark, wal_dir, tmpdir_path, monkeypatch
 ):
