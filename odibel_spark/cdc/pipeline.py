@@ -13,19 +13,20 @@ North-rule mechanics and where they live:
   braces: the in-stream dedup bounds state, the in-merge fold is the
   correctness guarantee).
 - **exactly-once commits** → one epoch fence for every table the sink
-  writes (data, dead letters, lineage, metrics): each write stamps the
-  micro-batch id into that table's ``watermarks`` map atomically with
-  its rows, and a table whose watermark already reaches the epoch is
-  skipped. A batch replayed after a crash at any of its durable writes
-  (or before the checkpoint) redoes only the writes that had not
-  landed, a due compaction included. Reference gap this fixes: blind
-  ``overwrite`` sink (DBpediaTKGExtractionSpark.scala:44).
+  writes (data, dead letters): each write stamps the micro-batch id
+  into that table's ``watermarks`` map atomically with its rows, and a
+  table whose watermark already reaches the epoch is skipped. A batch
+  replayed after a crash at any of its durable writes (or before the
+  checkpoint) redoes only the writes that had not landed, a due
+  compaction included. Reference gap this fixes: blind ``overwrite``
+  sink (DBpediaTKGExtractionSpark.scala:44).
 - **resumable lineage** → per-epoch, per-bucket applied-LSN high-water
-  marks and the epoch's event/dead-letter counts, stamped into the data
-  commit's summary; the lineage and throughput-metrics side tables are
-  built from that one record (reference ThroughputMonitor/
-  HeartbeatMonitor semantics, utils/ThrougputMonitor.scala:5-23,
-  log/HeartbeatMonitor.scala:11-71).
+  marks, event/dead-letter counts and start time, stamped into the
+  data commit's summary. ``lineage()`` and ``metrics()`` are views of
+  those summaries (reference ThroughputMonitor/HeartbeatMonitor,
+  utils/ThrougputMonitor.scala:5-23, log/HeartbeatMonitor.scala:11-71);
+  ``batch_seconds`` sums ``committed_at_ms - started_at_ms`` over the
+  epoch's data commit and its due compaction.
 - **failures never become deletes** → corrupt events split to a
   dead-letter LakeTable before MERGE
   (DBpediaTKGExtraction.scala:174-195 policy).
@@ -41,6 +42,7 @@ North-rule mechanics and where they live:
 
 from __future__ import annotations
 
+import datetime
 import functools
 import json
 import threading
@@ -130,7 +132,7 @@ class PipelineConfig:
     #: near-O(result)). () = fold order only.
     compact_cluster_by: tuple[str, ...] = ()
     #: >1 splits each bucket's commit write across this many tasks
-    #: (deterministic row-hash salt) — hot-conversation skew insurance:
+    #: (salt = a hash of the row's key) — hot-conversation skew insurance:
     #: one dominant conv_id otherwise serializes the commit behind a
     #: single straggler task. The default "auto" derives the salt per
     #: micro-batch from the per-bucket stats the sink already collects:
@@ -187,7 +189,7 @@ def _batch_exprs(jvm) -> tuple:
 
 
 class TranscriptCdcPipeline:
-    """One CDC stream → one transcript LakeTable (+ side tables)."""
+    """One CDC stream → one transcript LakeTable (+ a dead-letter table)."""
 
     def __init__(self, spark: SparkSession, cfg: PipelineConfig):
         self.spark = spark
@@ -202,7 +204,7 @@ class TranscriptCdcPipeline:
         return [f for f in wal_schema.fields if f.name not in WAL_META_COLS]
 
     def ensure_tables(self) -> tuple[LakeTable, T.StructType]:
-        """Create/evolve the target + side tables from the current
+        """Create/evolve the target + dead-letter tables from the current
         unified WAL schema. Returns (table, wal_read_schema). An
         existing table costs one head read (one ``_meta/`` listing)
         unless its schema evolves."""
@@ -230,37 +232,26 @@ class TranscriptCdcPipeline:
         new = diff_new_fields(_schema_of(head), wal_schema, ignore=(*WAL_META_COLS, *SYSTEM_FIELDS))
         if new:
             table.add_columns(new, summary={"source": "wal-schema-discovery"})
-        applied = head.get("watermarks", {}).get(self.cfg.stream_id)
-        for root, schema in (
-            (self.dead_root, wal_schema),
-            (self.lineage_root, LINEAGE_SCHEMA),
-            (self.metrics_root, METRICS_SCHEMA),
-        ):
-            side = LakeTable(self.spark, root)
-            side_head = _head(side)
-            if side_head is None:
+        dl = LakeTable(self.spark, self.dead_root)
+        dl_head = _head(dl)
+        if dl_head is None:
+            LakeTable.create(self.spark, self.dead_root, wal_schema)
+        else:
+            added = diff_new_fields(_schema_of(dl_head), wal_schema)
+            self._stamp_fence(dl, dl.add_columns(added) if added else dl_head)
+        # created, never written: perfbench/workloads.py _epoch_commits lists their _meta/
+        for root, schema in ((self.lineage_root, LINEAGE_SCHEMA), (self.metrics_root, METRICS_SCHEMA)):
+            if _head(LakeTable(self.spark, root)) is None:
                 LakeTable.create(self.spark, root, schema)
-                continue
-            added = diff_new_fields(_schema_of(side_head), schema)
-            if added:
-                side_head = side.add_columns(added)
-            if root == self.dead_root or applied is not None:
-                self._stamp_fence(side, side_head)
         return table, wal_schema, BucketSpec.from_json(head["bucket"])
 
     def _stamp_fence(self, side: LakeTable, head: dict) -> None:
-        """Fence a side table written before side tables carried one.
-        Such a table holds no ``watermarks`` at all, and a replayed
-        epoch would append its rows a second time. Its commits are
-        serial per epoch, so the newest one whose ``summary`` names an
-        epoch of this stream is exactly its fence; the walk passes
-        schema-evolution commits. One metadata commit, no Spark job.
-        Dead-letter appends record ``stream_id`` and ``epoch``; lineage
-        and metrics appends record ``epoch`` only, so ``ensure_tables``
-        stamps those only when the data table holds this stream's fence
-        (they are written after the data commit): a stream that never
-        wrote, such as a fresh ``stream_id`` after a rollback, owns
-        none of their rows."""
+        """Fence a dead-letter table written before it carried one. Such
+        a table holds no ``watermarks`` at all, and a replayed epoch
+        would append its rows a second time. Its commits are serial per
+        epoch, so the newest one whose ``summary`` names an epoch of
+        this stream is exactly its fence; the walk passes
+        schema-evolution commits. One metadata commit, no Spark job."""
         if head.get("watermarks"):
             return
         sid = self.cfg.stream_id
@@ -293,7 +284,7 @@ class TranscriptCdcPipeline:
             # partition — the upstream dedup state stores must commit),
             # then finish whatever of the epoch the crash left undone.
             batch_df.write.format("noop").mode("overwrite").save()
-            return self._finish_epoch(table, head, epoch_id, None)
+            return self._finish_epoch(table, head, epoch_id)
 
         # One materialization of the micro-batch (pins the stream-dedup
         # output — every derived job below reuses the cache instead of
@@ -350,11 +341,11 @@ class TranscriptCdcPipeline:
                 table,
                 flagged.filter(live),  # the flag columns are not table columns
                 KEY_COLS,
-                # the epoch's record: the side rows are built from it,
-                # on a fenced replay too (_epoch_summary)
+                # the epoch's record: lineage() and metrics() read it
                 summary={
                     "stream_id": self.cfg.stream_id,
                     "epoch": epoch_id,
+                    "started_at_ms": int(t0 * 1000),
                     "n_events": n_ok,
                     "n_dead": n_dead,
                     "lineage": lineage_rows,
@@ -365,7 +356,7 @@ class TranscriptCdcPipeline:
                 write_salt=write_salt,
                 _base=head,
             )
-            self._finish_epoch(table, man, epoch_id, t0)
+            self._finish_epoch(table, man, epoch_id)
         finally:
             flagged.unpersist()
 
@@ -375,22 +366,16 @@ class TranscriptCdcPipeline:
             return None
         return max(max(r["max_lsn"] for r in lineage) - self.cfg.tombstone_gc_lsn_slack, 0)
 
-    def _finish_epoch(self, table: LakeTable, newest: dict, epoch_id: int, t0: float | None) -> None:
+    def _finish_epoch(self, table: LakeTable, newest: dict, epoch_id: int) -> None:
         """An epoch's tail after its data commit, one path for a first
-        run and a fenced replay (``t0`` None: ``batch_seconds`` 0).
-        ``newest`` is the table's newest commit (``merge_upsert``'s, or
-        the head on a replay). While it is still this epoch's data
-        commit, a due compaction runs: a crash before the compaction
-        commit leaves it to the replay. Then the side tables the fence
-        shows behind get their lineage/metrics rows from the data
-        commit's record, appended driver-side by pyarrow (a few rows)."""
-        import datetime as _dt
-
+        run and a fenced replay. ``newest`` is the table's newest commit
+        (``merge_upsert``'s, or the head on a replay). While it is still
+        this epoch's data commit, a due compaction runs: a crash before
+        the compaction commit leaves it to the replay."""
         summary = newest.get("summary", {})
-        if (summary.get("stream_id"), summary.get("epoch")) != (self.cfg.stream_id, epoch_id):
-            summary = self._epoch_summary(table, newest, epoch_id)
-        elif (
-            self.cfg.merge_mode == "mor"
+        if (
+            (summary.get("stream_id"), summary.get("epoch")) == (self.cfg.stream_id, epoch_id)
+            and self.cfg.merge_mode == "mor"
             and self.cfg.compact_every_epochs
             and epoch_id > 0
             and epoch_id % self.cfg.compact_every_epochs == 0
@@ -400,38 +385,10 @@ class TranscriptCdcPipeline:
             compact_buckets(
                 table,
                 tombstone_gc_below_lsn=self._gc_below(summary.get("lineage", [])),
-                summary={"stream_id": self.cfg.stream_id, "after_epoch": epoch_id},
+                summary={"stream_id": self.cfg.stream_id, "after_epoch": epoch_id,
+                         "started_at_ms": int(time.time() * 1000)},
                 cluster_by=self.cfg.compact_cluster_by,
             )
-        secs = 0.0 if t0 is None else time.time() - t0
-        key = {"stream_id": self.cfg.stream_id, "epoch": epoch_id,
-               "committed_at": _dt.datetime.now(_dt.timezone.utc)}
-        n_ok = summary.get("n_events", 0)
-        lineage = [{**key, **r} for r in summary.get("lineage", [])] or [{**key, "bucket": None, "n_events": 0}]
-        metrics = [{
-            **key, "n_events": n_ok, "n_dead": summary.get("n_dead", 0), "batch_seconds": secs,
-            "events_per_sec": (n_ok / secs) if secs > 0 else None,
-        }]
-        for root, rows in ((self.lineage_root, lineage), (self.metrics_root, metrics)):
-            side = LakeTable(self.spark, root)
-            side_head = side.manifest()
-            if self._behind(side_head, epoch_id):
-                side.append_rows(
-                    rows, summary={"epoch": epoch_id},
-                    watermarks_update={self.cfg.stream_id: epoch_id}, _base=side_head,
-                )
-
-    def _epoch_summary(self, table: LakeTable, head: dict, epoch_id: int) -> dict:
-        """A fenced epoch's data-commit summary. The walk goes back from
-        the head and stops at the epoch's commit (or an older epoch of
-        this stream), so its cost does not grow with table history."""
-        for v in range(head["version"], 0, -1):
-            s = table.manifest(v).get("summary", {})
-            if s.get("stream_id") != self.cfg.stream_id or "epoch" not in s:
-                continue  # other writers, schema evolution, compaction
-            if s["epoch"] <= epoch_id:
-                return s if s["epoch"] == epoch_id else {}
-        return {}
 
     # ---------------------------------------------------------- running
     def _stream_reader(self, wal_schema: T.StructType, spec: BucketSpec) -> DataFrame:
@@ -578,8 +535,43 @@ class TranscriptCdcPipeline:
     def dead_letters(self) -> DataFrame:
         return LakeTable(self.spark, self.dead_root).read()
 
+    def _epochs(self) -> list[list]:
+        """``[summary, committed_at, batch_seconds]`` per data commit of
+        this stream, from the data table's commit chain. A due compaction
+        (``after_epoch``) moves ``committed_at`` and adds to the seconds;
+        a commit without ``started_at_ms`` makes them None."""
+        out, by_epoch = [], {}
+        for m in LakeTable(self.spark, self.table_root).history():
+            s = m.get("summary", {})
+            if s.get("stream_id") != self.cfg.stream_id:
+                continue
+            at = datetime.datetime.fromtimestamp(m["committed_at_ms"] / 1000, datetime.timezone.utc)
+            secs = (m["committed_at_ms"] - s["started_at_ms"]) / 1000 if "started_at_ms" in s else None
+            if "epoch" in s:
+                by_epoch[s["epoch"]] = rec = [s, at, secs]
+                out.append(rec)
+            elif (rec := by_epoch.get(s.get("after_epoch"))) is not None:
+                rec[1:] = [at, None if rec[2] is None or secs is None else rec[2] + secs]
+        return out
+
     def lineage(self) -> DataFrame:
-        return LakeTable(self.spark, self.lineage_root).read()
+        """Per-epoch, per-bucket applied-LSN bounds (``LINEAGE_SCHEMA``),
+        a view of the data commits; an epoch that applied nothing has
+        one row with ``bucket`` NULL and ``n_events`` 0."""
+        rows = [
+            (s["stream_id"], s["epoch"], b.get("bucket"), b.get("n_events", 0),
+             b.get("min_lsn"), b.get("max_lsn"), at)
+            for s, at, _secs in self._epochs()
+            for b in s.get("lineage") or [{}]
+        ]
+        return self.spark.createDataFrame(rows, LINEAGE_SCHEMA)
 
     def metrics(self) -> DataFrame:
-        return LakeTable(self.spark, self.metrics_root).read()
+        """One throughput row per epoch (``METRICS_SCHEMA``), a view of
+        the data commits: ``events_per_sec`` is ``n_events /
+        batch_seconds``."""
+        rows = []
+        for s, at, secs in self._epochs():
+            n = s.get("n_events", 0)
+            rows.append((s["stream_id"], s["epoch"], n, s.get("n_dead", 0), secs, n / secs if secs else None, at))
+        return self.spark.createDataFrame(rows, METRICS_SCHEMA)

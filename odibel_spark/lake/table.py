@@ -332,8 +332,8 @@ def _file_in_ranges(fdesc: dict, ranges: dict) -> bool:
 
 def _arrow_type(dt: T.DataType):
     """Spark type → pyarrow type for the driver-side small-append path
-    (only the types the side tables use; Spark reads the file back by
-    name against the manifest schema)."""
+    (flat scalar types only; Spark reads the file back by name against
+    the manifest schema)."""
     import pyarrow as pa
 
     mapping = {
@@ -462,7 +462,8 @@ class LakeTable:
         return int(self.manifest().get("watermarks", {}).get(stream_id, -1))
 
     def _commit(self, man: dict) -> dict:
-        """Publish ``man`` (stamped with commit time and row count)."""
+        """Publish ``man`` (stamped with commit time and row count), then
+        fsync ``_meta/`` so the published name survives an OS crash."""
         version = man["version"]
         man = {
             **man,
@@ -482,6 +483,11 @@ class LakeTable:
             raise CommitConflict(f"version {version} already committed at {self.root}") from e
         finally:
             os.unlink(tmp)
+        fd = os.open(self.meta_dir, os.O_RDONLY)
+        try:
+            os.fsync(fd)
+        finally:
+            os.close(fd)
         return man
 
     # -------------------------------------------------------- data IO
@@ -867,11 +873,9 @@ class LakeTable:
         self, rows: list[dict], summary: dict | None = None,
         watermarks_update: dict | None = None, *, _base: dict | None = None,
     ) -> dict:
-        """Driver-side append of a handful of rows (lineage/metrics
-        bookkeeping): writes one parquet file via pyarrow, no Spark job.
-        A streaming sink that launched a distributed job to persist a
-        three-row metrics record would spend more on scheduling than on
-        data — this is the per-micro-batch fast path. ``_base`` as in
+        """Driver-side append of a handful of rows: writes one parquet
+        file via pyarrow, no Spark job, where a distributed job would
+        spend more on scheduling than on data. ``_base`` as in
         ``append``."""
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -1104,7 +1108,8 @@ class LakeTable:
     # ------------------------------------------------------ maintenance
     def vacuum(self, keep_versions: int = 1, grace_seconds: float = 600.0) -> list[str]:
         """Delete data files unreferenced by the last ``keep_versions``
-        manifests (crash orphans + copy-on-write leftovers).
+        manifests (crash orphans + copy-on-write leftovers) and their
+        ``.crc`` sidecars; a commit dir holding no live file goes whole.
 
         Concurrency safety: data files land BEFORE their manifest, so a
         file can be legitimately unreferenced because its writer hasn't
@@ -1129,6 +1134,12 @@ class LakeTable:
                     return int(head)
             return None
 
+        def young(p: str) -> bool:
+            try:
+                return now - os.path.getmtime(p) < grace_seconds
+            except FileNotFoundError:
+                return False
+
         commit_dirs = sorted(os.listdir(data_root)) if os.path.isdir(data_root) else []
         for entry in commit_dirs:
             d = os.path.join(data_root, entry)
@@ -1137,19 +1148,15 @@ class LakeTable:
             hint = _version_hint(entry)
             if hint is not None and hint > cur:
                 continue  # in-flight writer: data landed, manifest pending
-            for dirpath, _dirs, names in os.walk(d):
-                for n in names:
-                    p = os.path.join(dirpath, n)
-                    rel = os.path.relpath(p, self.root)
-                    if rel in live or not n.endswith(".parquet"):
-                        continue
-                    try:
-                        if now - os.path.getmtime(p) < grace_seconds:
-                            continue
-                    except FileNotFoundError:
-                        continue
-                    os.unlink(p)
-                    removed.append(rel)
-            if not any(files for _, _, files in os.walk(d)):
+            files = [os.path.join(dp, n) for dp, _dirs, ns in os.walk(d) for n in ns]
+            parquet = [p for p in files if p.endswith(".parquet")]
+            dead = [p for p in parquet if os.path.relpath(p, self.root) not in live and not young(p)]
+            removed += [os.path.relpath(p, self.root) for p in dead]
+            if len(dead) == len(parquet) and not any(map(young, files)):
                 shutil.rmtree(d, ignore_errors=True)
+                continue
+            for p in dead:
+                for q in (p, os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.crc")):
+                    if os.path.exists(q):
+                        os.unlink(q)
         return removed

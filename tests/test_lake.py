@@ -269,6 +269,31 @@ def test_schema_evolution_read_old_files(spark, tmpdir_path):
     assert vals == {"c1": None, "c2": '{"client":"v2"}'}
 
 
+def test_commit_fsyncs_meta_dir_after_link(spark, tmpdir_path, monkeypatch):
+    """A commit fsyncs the ``_meta/`` directory after it links the
+    manifest in, so the published name survives an OS crash."""
+    t = make_table(spark, os.path.join(tmpdir_path, "tfs"))
+    real_link, real_fsync = os.link, os.fsync
+    events: list = []
+
+    def link(src, dst, *args, **kwargs):
+        real_link(src, dst, *args, **kwargs)
+        events.append(("link", dst))
+
+    def fsync(fd):
+        st = os.fstat(fd)
+        events.append(("fsync", (st.st_dev, st.st_ino)))
+        real_fsync(fd)
+
+    monkeypatch.setattr(os, "link", link)
+    monkeypatch.setattr(os, "fsync", fsync)
+    man = t.commit_metadata({"op": "probe"})
+    monkeypatch.undo()
+    st = os.stat(t.meta_dir)
+    linked = events.index(("link", t._manifest_path(man["version"])))
+    assert ("fsync", (st.st_dev, st.st_ino)) in events[linked + 1:], events
+
+
 def test_watermark_fencing_and_vacuum(spark, tmpdir_path):
     t = make_table(spark, os.path.join(tmpdir_path, "t7"))
     assert t.watermark("s1") == -1
@@ -285,6 +310,39 @@ def test_watermark_fencing_and_vacuum(spark, tmpdir_path):
     removed = t.vacuum(keep_versions=1)
     assert live & set(removed) == set()
     assert t.read().count() == 1
+
+
+def test_vacuum_removes_dead_commit_dirs_and_crc_sidecars(spark, tmpdir_path):
+    """Spark leaves a ``_SUCCESS`` marker and one ``.crc`` sidecar per
+    file in every commit dir. Vacuum removes a dead file's sidecar with
+    it, and a commit dir holding no live file as a whole: what is left
+    is the head's files, their sidecars and dirs that hold them."""
+    t = make_table(spark, os.path.join(tmpdir_path, "t7v"), buckets=2)
+    schema = ("lsn long, op string, conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts timestamp")
+    first = merge_upsert(t, spark.createDataFrame(
+        [(i + 1, "insert", f"c{i}", 0, "user", "hi", None, None) for i in range(8)], schema,
+    ), KEYS)
+    for lsn in (20, 30):  # rewrite c0's bucket twice (copy-on-write)
+        merge_upsert(t, spark.createDataFrame([(lsn, "update", "c0", 0, "user", "yo", None, None)], schema), KEYS)
+    data = os.path.join(t.root, "data")
+
+    def on_disk():
+        return {os.path.relpath(os.path.join(d, n), t.root) for d, _, ns in os.walk(data) for n in ns}
+
+    head = {f["path"] for f in t.files()}
+    first_dir = {f["path"].split("/")[1] for f in first["files"]}
+    assert len(first_dir) == 1 and any(p.split("/")[1] in first_dir for p in head)  # partly dead
+    assert any(p.endswith(".crc") for p in on_disk() - head) and any(
+        p.endswith("_SUCCESS") for p in on_disk()
+    ), "fixture needs Spark's sidecar files"
+
+    t.vacuum(keep_versions=1, grace_seconds=0)
+    left = on_disk()
+    assert {p for p in left if p.endswith(".parquet")} == head
+    crcs = {p for p in left if p.endswith(".parquet.crc")}
+    assert crcs == {os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.crc") for p in head}
+    assert {f"data/{c}" for c in os.listdir(data)} == {"/".join(p.split("/")[:2]) for p in head}
 
 
 def test_salted_write_spreads_hot_bucket(spark, tmpdir_path):
