@@ -12,14 +12,13 @@ North-rule mechanics and where they live:
   (bounded keyed state) plus the exact fold inside MERGE (belt and
   braces: the in-stream dedup bounds state, the in-merge fold is the
   correctness guarantee).
-- **exactly-once commits** → one epoch fence for every table the sink
-  writes (data, dead letters): each write stamps the micro-batch id
-  into that table's ``watermarks`` map atomically with its rows, and a
-  table whose watermark already reaches the epoch is skipped. A batch
-  replayed after a crash at any of its durable writes (or before the
-  checkpoint) redoes only the writes that had not landed, a due
-  compaction included. Reference gap this fixes: blind ``overwrite``
-  sink (DBpediaTKGExtractionSpark.scala:44).
+- **exactly-once commits** → one epoch fence on one atomic data commit
+  per epoch: it stamps the micro-batch id into ``watermarks`` with the
+  epoch's rows, dead letters and record, and an epoch the watermark
+  already reaches is skipped. A batch replayed after a crash at any of
+  its durable writes (or before the checkpoint) rewrites what was not
+  committed and runs a due compaction the crash cut off. Reference gap
+  this fixes: blind ``overwrite`` sink (DBpediaTKGExtractionSpark.scala:44).
 - **resumable lineage** → per-epoch, per-bucket applied-LSN high-water
   marks, event/dead-letter counts and start time, stamped into the
   data commit's summary. ``lineage()`` and ``metrics()`` are views of
@@ -27,9 +26,10 @@ North-rule mechanics and where they live:
   utils/ThrougputMonitor.scala:5-23, log/HeartbeatMonitor.scala:11-71);
   ``batch_seconds`` sums ``committed_at_ms - started_at_ms`` over the
   epoch's data commit and its due compaction.
-- **failures never become deletes** → corrupt events split to a
-  dead-letter LakeTable before MERGE
-  (DBpediaTKGExtraction.scala:174-195 policy).
+- **failures never become deletes** → corrupt events split before MERGE
+  into one file the data commit names in ``dead_files``, not in its rows
+  (DBpediaTKGExtraction.scala:174-195 policy); ``dead_letters()`` also
+  reads the ``_deadletter`` table earlier versions appended to.
 - **schema evolution** → unified WAL schema discovered from file
   footers; new payload columns promoted with ``table.add_columns``;
   legacy enum variants normalized by Arrow-typed pandas UDFs
@@ -44,7 +44,7 @@ from __future__ import annotations
 
 import datetime
 import functools
-import json
+import os
 import threading
 import time
 from dataclasses import dataclass
@@ -167,17 +167,6 @@ def _head(table: LakeTable) -> dict | None:
         return None
 
 
-@functools.lru_cache(maxsize=16)
-def _dead_letter_exprs(jvm, schema_json: str, batch_cols: tuple[str, ...]) -> tuple[F.Column, ...]:
-    """The dead-letter table's row projection of a flagged batch: each
-    column of its schema (``schema_json``), NULL where the batch lacks
-    it. Keyed as ``lake.table._jvm`` describes."""
-    return tuple(
-        (F.col(f.name) if f.name in batch_cols else F.lit(None).cast(f.dataType)).alias(f.name)
-        for f in T.StructType.fromJson(json.loads(schema_json)).fields
-    )
-
-
 @functools.lru_cache(maxsize=8)
 def _batch_exprs(jvm) -> tuple:
     """The sink's fixed trees over a flagged batch: the dead and live
@@ -189,7 +178,7 @@ def _batch_exprs(jvm) -> tuple:
 
 
 class TranscriptCdcPipeline:
-    """One CDC stream → one transcript LakeTable (+ a dead-letter table)."""
+    """One CDC stream → one transcript LakeTable, dead letters included."""
 
     def __init__(self, spark: SparkSession, cfg: PipelineConfig):
         self.spark = spark
@@ -198,15 +187,20 @@ class TranscriptCdcPipeline:
         self.dead_root = cfg.table_root + "_deadletter"
         self.lineage_root = cfg.table_root + "_lineage"
         self.metrics_root = cfg.table_root + "_metrics"
+        #: ``_deadletter``'s fence, read at stream start: the last epoch
+        #: whose dead letters earlier versions appended there
+        self._legacy_dead_fence = -1
 
     # ------------------------------------------------------ DDL/bootstrap
     def _payload_fields(self, wal_schema: T.StructType) -> list[T.StructField]:
         return [f for f in wal_schema.fields if f.name not in WAL_META_COLS]
 
     def ensure_tables(self) -> tuple[LakeTable, T.StructType]:
-        """Create/evolve the target + dead-letter tables from the current
-        unified WAL schema. Returns (table, wal_read_schema). An
-        existing table costs one head read (one ``_meta/`` listing)
+        """Create/evolve the target table from the current unified WAL
+        schema, and create the ``_deadletter``, ``_lineage`` and
+        ``_metrics`` roots once (never written: the data commits carry
+        their content). Returns (table, wal_read_schema). An existing
+        table costs one head read (one ``_meta/`` listing) per root
         unless its schema evolves."""
         table, wal_schema, _spec = self._ensure_tables()
         return table, wal_schema
@@ -232,55 +226,27 @@ class TranscriptCdcPipeline:
         new = diff_new_fields(_schema_of(head), wal_schema, ignore=(*WAL_META_COLS, *SYSTEM_FIELDS))
         if new:
             table.add_columns(new, summary={"source": "wal-schema-discovery"})
-        dl = LakeTable(self.spark, self.dead_root)
-        dl_head = _head(dl)
-        if dl_head is None:
-            LakeTable.create(self.spark, self.dead_root, wal_schema)
-        else:
-            added = diff_new_fields(_schema_of(dl_head), wal_schema)
-            self._stamp_fence(dl, dl.add_columns(added) if added else dl_head)
         # created, never written: perfbench/workloads.py _epoch_commits lists their _meta/
-        for root, schema in ((self.lineage_root, LINEAGE_SCHEMA), (self.metrics_root, METRICS_SCHEMA)):
-            if _head(LakeTable(self.spark, root)) is None:
+        for root, schema in (
+            (self.dead_root, wal_schema), (self.lineage_root, LINEAGE_SCHEMA), (self.metrics_root, METRICS_SCHEMA),
+        ):
+            side = _head(LakeTable(self.spark, root))
+            if side is None:
                 LakeTable.create(self.spark, root, schema)
+            elif root == self.dead_root:
+                self._legacy_dead_fence = side.get("watermarks", {}).get(self.cfg.stream_id, -1)
         return table, wal_schema, BucketSpec.from_json(head["bucket"])
 
-    def _stamp_fence(self, side: LakeTable, head: dict) -> None:
-        """Fence a dead-letter table written before it carried one. Such
-        a table holds no ``watermarks`` at all, and a replayed epoch
-        would append its rows a second time. Its commits are serial per
-        epoch, so the newest one whose ``summary`` names an epoch of
-        this stream is exactly its fence; the walk passes
-        schema-evolution commits. One metadata commit, no Spark job."""
-        if head.get("watermarks"):
-            return
-        sid = self.cfg.stream_id
-        for v in range(head["version"], 0, -1):
-            s = (head if v == head["version"] else side.manifest(v)).get("summary", {})
-            if "epoch" in s and s.get("stream_id", sid) == sid:
-                side.commit_metadata(
-                    {"op": "stamp-fence", "stream_id": sid, "fence_from_version": v},
-                    {sid: s["epoch"]},
-                    _base=head,
-                )
-                return
-
     # --------------------------------------------------------- the sink
-    def _behind(self, man: dict, epoch_id: int) -> bool:
-        """The epoch fence, one rule for every table the sink writes: a
-        table whose ``watermarks[stream_id]`` already reaches the epoch
-        holds this epoch's write, so the sink skips it."""
-        return man.get("watermarks", {}).get(self.cfg.stream_id, -1) < epoch_id
-
     def _apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         t0 = time.time()
         fence = {self.cfg.stream_id: epoch_id}
         table = LakeTable(self.spark, self.table_root)
         head = table.manifest()
-        if not self._behind(head, epoch_id):
-            # crash happened after the data commit, before the checkpoint
-            # commit: the batch replays. Drain it through the noop sink
-            # (Spark 4 validates that foreachBatch consumed every
+        if head.get("watermarks", {}).get(self.cfg.stream_id, -1) >= epoch_id:
+            # the epoch fence: a crash after the data commit, before the
+            # checkpoint commit, replays the batch. Drain it through the
+            # noop sink (Spark 4 validates that foreachBatch consumed every
             # partition — the upstream dedup state stores must commit),
             # then finish whatever of the epoch the crash left undone.
             batch_df.write.format("noop").mode("overwrite").save()
@@ -305,20 +271,15 @@ class TranscriptCdcPipeline:
             ]
             n_ok = sum(r["n_events"] for r in lineage_rows)
 
-            if n_dead:
-                dl = LakeTable(self.spark, self.dead_root)
-                dl_head = dl.manifest()
-                if self._behind(dl_head, epoch_id):
-                    out = flagged.filter(dead).select(
-                        *_dead_letter_exprs(_jvm(), dl_head["schema"], tuple(flagged.columns))
-                    )
-                    # dead letters are a trickle — one output file keeps
-                    # the commit (and its footer bookkeeping) off the
-                    # batch's critical path
-                    dl.append(
-                        out.coalesce(1), summary={"stream_id": self.cfg.stream_id, "epoch": epoch_id},
-                        watermarks_update=fence, _base=dl_head,
-                    )
+            dead_files = []
+            if n_dead and epoch_id > self._legacy_dead_fence:
+                # dead letters are a trickle: one unbucketed, stats-free file
+                # (its base holds only the version hint), named by the data
+                # commit; an epoch at or below the legacy fence has them in
+                # ``_deadletter`` already
+                dead_files = table._write_data_files(
+                    flagged.filter(dead).drop("_dead", "_b").coalesce(1), {"version": head["version"]}
+                )
 
             write_salt = self.cfg.write_salt
             if write_salt == "auto":
@@ -355,6 +316,7 @@ class TranscriptCdcPipeline:
                 tombstone_gc_below_lsn=self._gc_below(lineage_rows),
                 write_salt=write_salt,
                 _base=head,
+                _dead_files=dead_files,
             )
             self._finish_epoch(table, man, epoch_id)
         finally:
@@ -533,7 +495,15 @@ class TranscriptCdcPipeline:
         return LakeTable.load(self.spark, self.table_root)
 
     def dead_letters(self) -> DataFrame:
-        return LakeTable(self.spark, self.dead_root).read()
+        """Every dead-lettered event, in the WAL's columns: the data head's
+        ``dead_files`` (``mergeSchema`` lines up WAL generations) plus the
+        rows earlier versions appended to the ``_deadletter`` table."""
+        out = LakeTable(self.spark, self.dead_root).read()
+        head = LakeTable(self.spark, self.table_root).manifest()
+        if paths := [os.path.join(self.table_root, f["path"]) for f in head.get("dead_files", [])]:
+            files = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+            out = out.unionByName(files, allowMissingColumns=True)
+        return out
 
     def _epochs(self) -> list[list]:
         """``[summary, committed_at, batch_seconds]`` per data commit of

@@ -19,7 +19,8 @@ t.applied_lsn` merge):
   ``compact_buckets`` once the stream's low-watermark LSN passes them;
 - a corrupt/failed event must be dead-lettered *before* calling this
   (reference policy: failures never become deletes,
-  DBpediaTKGExtraction.scala:174-195).
+  DBpediaTKGExtraction.scala:174-195); its files may ride the merge's
+  commit as ``_dead_files``.
 
 The merge modes differ only in *when* the fold meets the target:
 merge-on-read appends the folded batch delta (readers and
@@ -207,10 +208,13 @@ def merge_upsert(
     write_salt: int = 1,
     *,
     _base: dict | None = None,
+    _dead_files: list | tuple = (),
 ) -> dict:
     """Apply a CDC batch to the table; returns the committed manifest.
     ``_base`` (lake-internal): a head manifest the caller already read,
-    merged and committed on as is.
+    merged and committed on as is. ``_dead_files`` (lake-internal):
+    the batch's dead-letter file descriptors, which ride the merge's
+    one commit (``LakeTable._next_commit``), empty batches included.
 
     The table schema must contain ``key_cols`` + payload columns +
     ``_lsn``/``_deleted`` (see ``cdc_table_schema``). Source columns
@@ -264,7 +268,7 @@ def merge_upsert(
 
     empty_summary = LakeTable._tagged({**(summary or {}), "empty_batch": True}, "merge")
     if touched_buckets is not None and not touched_buckets:
-        return table._next_commit(man, [], empty_summary, watermarks_update)
+        return table._next_commit(man, [], empty_summary, watermarks_update, _dead_files=_dead_files)
 
     delta = _delta(source, man["schema"], spec, key_cols, lsn_col, op_col, delete_op)
     if mor:
@@ -278,6 +282,7 @@ def merge_upsert(
             watermarks_update=watermarks_update,
             op="merge-mor",
             _base=man,
+            _dead_files=_dead_files,
         )
 
     # copy-on-write: compaction of (target ∪ delta) over the buckets
@@ -289,12 +294,12 @@ def merge_upsert(
         else {r[0] for r in delta.select("_bucket").distinct().collect()}
     )
     if not touched:
-        return table._next_commit(man, [], empty_summary, watermarks_update)
+        return table._next_commit(man, [], empty_summary, watermarks_update, _dead_files=_dead_files)
     return _rewrite_buckets(
         table, man, touched, key_cols, delta=delta, salt=write_salt,
         tombstone_gc_below_lsn=tombstone_gc_below_lsn,
         summary={"touched_buckets": sorted(touched), **(summary or {})},
-        watermarks_update=watermarks_update,
+        watermarks_update=watermarks_update, _dead_files=_dead_files,
     )
 
 

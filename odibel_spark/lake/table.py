@@ -93,7 +93,7 @@ def _jvm():
     """The gateway's JVM view: the first key of every schema-keyed
     expression builder (``_bucket_expr``, ``_lww_exprs``,
     ``_tombstone_exprs``, ``lake.merge._delta_exprs``,
-    ``cdc.pipeline._dead_letter_exprs`` and ``_batch_exprs``). Building
+    ``cdc.pipeline._batch_exprs``). Building
     a Column costs py4j round trips per node, and a streaming epoch's
     trees depend only on its schemas, so each builder is a bounded
     ``lru_cache`` on the JVM view plus hashable schema inputs (JSON
@@ -375,7 +375,7 @@ class LakeTable:
             raise FileExistsError(f"table already exists at {root}")
         t._commit({
             "format_version": 1, "version": 1, "parent": None, "schema": schema.json(),
-            "bucket": bucket.to_json() if bucket else None, "files": [],
+            "bucket": bucket.to_json() if bucket else None, "files": [], "dead_files": [],
             "summary": {"op": "create"}, "watermarks": {}, "properties": properties or {},
         })
         return t
@@ -828,6 +828,7 @@ class LakeTable:
         keep=None,
         schema: T.StructType | None = None,
         retries: int = 5,
+        *, _dead_files: list | tuple = (),
     ) -> dict:
         """Optimistic commit of the child of ``base``, the manifest the
         caller computed from; only a lost race re-reads the head. The
@@ -836,7 +837,10 @@ class LakeTable:
         (default: all its files) is re-evaluated on every fresh head,
         so a retry carries over the *winner's* files; it may raise
         :class:`CommitConflict` itself when the fresh state invalidates
-        the caller's data (see ``replace_buckets``)."""
+        the caller's data (see ``replace_buckets``). ``_dead_files``
+        (lake-internal: a stream's dead letters) join the ``dead_files``
+        of the manifest the commit lands on, which ``read``, ``changes``,
+        compaction and ``row_count`` ignore and ``vacuum`` keeps."""
         keep_fn = keep or (lambda b: b["files"])
         for attempt in range(retries):
             child = {
@@ -844,6 +848,7 @@ class LakeTable:
                 "version": base["version"] + 1,
                 "parent": base["version"],
                 "files": keep_fn(base) + new_files,
+                "dead_files": base.get("dead_files", []) + list(_dead_files),
                 "summary": summary,
                 "watermarks": {**base.get("watermarks", {}), **(watermarks_update or {})},
             }
@@ -920,12 +925,14 @@ class LakeTable:
         cluster_files: int | None = None,
         *,
         _base: dict | None = None,
+        _dead_files: list | tuple = (),
     ) -> dict:
         """Append ``df``. ``_base`` (lake-internal): a head manifest the
-        caller already read and built ``df`` from, committed on as is."""
+        caller already read and built ``df`` from, committed on as is;
+        ``_dead_files`` as in ``_next_commit``."""
         base = _base or self.manifest()
         new = self._write_data_files(df, base, cluster_by=cluster_by, cluster_files=cluster_files)
-        return self._next_commit(base, new, self._tagged(summary, op), watermarks_update)
+        return self._next_commit(base, new, self._tagged(summary, op), watermarks_update, _dead_files=_dead_files)
 
     def overwrite(
         self,
@@ -987,6 +994,7 @@ class LakeTable:
         base_version: int | None = None,
         op: str = "merge",
         cluster_by: tuple[str, ...] = (),
+        *, _dead_files: list | tuple = (),
     ) -> dict:
         """Copy-on-write commit unit: atomically swap all files of the
         given buckets for the new data (which must only contain rows of
@@ -1004,7 +1012,8 @@ class LakeTable:
         lands on it. If a concurrent commit changed the *target*
         buckets since then, the replacement would silently drop that
         writer's rows — the commit aborts with :class:`CommitConflict`
-        instead; the caller must recompute from the fresh snapshot."""
+        instead; the caller must recompute from the fresh snapshot.
+        ``_dead_files`` as in ``_next_commit``."""
         base = self.manifest(base_version)
         base_target = sorted(f["path"] for f in base["files"] if f.get("bucket") in buckets)
         new = self._write_data_files(df, base, cluster_by=cluster_by)
@@ -1025,7 +1034,8 @@ class LakeTable:
             return [f for f in fresh["files"] if f.get("bucket") not in buckets]
 
         return self._next_commit(
-            base, new, self._tagged(summary, op), watermarks_update, keep=keep_fn, schema=schema
+            base, new, self._tagged(summary, op), watermarks_update, keep=keep_fn, schema=schema,
+            _dead_files=_dead_files,
         )
 
     def rollback(
@@ -1110,6 +1120,9 @@ class LakeTable:
         """Delete data files unreferenced by the last ``keep_versions``
         manifests (crash orphans + copy-on-write leftovers) and their
         ``.crc`` sidecars; a commit dir holding no live file goes whole.
+        Live means in a manifest's ``files`` or ``dead_files``. Temporary
+        manifests a writer killed inside ``_commit`` left in ``_meta/``
+        go once they pass the grace window.
 
         Concurrency safety: data files land BEFORE their manifest, so a
         file can be legitimately unreferenced because its writer hasn't
@@ -1122,7 +1135,8 @@ class LakeTable:
         cur = self.current_version() or 0
         live: set[str] = set()
         for v in range(max(1, cur - keep_versions + 1), cur + 1):
-            live |= {f["path"] for f in self.manifest(v)["files"]}
+            man = self.manifest(v)
+            live |= {f["path"] for f in man["files"] + man.get("dead_files", [])}
         removed = []
         now = time.time()
         data_root = os.path.join(self.root, DATA_DIR)
@@ -1159,4 +1173,9 @@ class LakeTable:
                 for q in (p, os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.crc")):
                     if os.path.exists(q):
                         os.unlink(q)
+        for n in os.listdir(self.meta_dir) if os.path.isdir(self.meta_dir) else []:
+            p = os.path.join(self.meta_dir, n)
+            if n.startswith(".tmp-") and n.endswith(".json") and not young(p):
+                os.unlink(p)
+                removed.append(os.path.relpath(p, self.root))
         return removed

@@ -345,6 +345,62 @@ def test_vacuum_removes_dead_commit_dirs_and_crc_sidecars(spark, tmpdir_path):
     assert {f"data/{c}" for c in os.listdir(data)} == {"/".join(p.split("/")[:2]) for p in head}
 
 
+def test_vacuum_removes_stale_temp_manifests(spark, tmpdir_path):
+    """A writer killed inside ``_commit`` between the temporary
+    manifest's write and its unlink leaves ``_meta/.tmp-*.json``
+    behind. Vacuum removes one older than the grace window and keeps a
+    younger one, which may belong to a commit in flight."""
+    import time
+
+    t = make_table(spark, os.path.join(tmpdir_path, "t7t"))
+    old, young = (os.path.join(t.meta_dir, f".tmp-{n}.json") for n in ("old", "young"))
+    for p in (old, young):
+        with open(p, "w") as f:
+            f.write("{}")
+    os.utime(old, (time.time() - 3600,) * 2)
+    t.vacuum(grace_seconds=600)
+    assert sorted(n for n in os.listdir(t.meta_dir) if n.startswith(".tmp-")) == [".tmp-young.json"]
+    assert t.current_version() == 1
+
+
+@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
+def test_dead_files_ride_commits_and_survive_vacuum(spark, tmpdir_path, merge_mode):
+    """``merge_upsert``'s ``_dead_files`` land in its commit's
+    ``dead_files`` list, an empty batch's included, and every later
+    commit carries the list forward: a commit that loses a race lands
+    on the winner with the winner's entries and its own. ``read`` and
+    ``row_count`` see only ``files``; ``vacuum`` keeps the dead files."""
+    t = create_cdc_table(
+        spark, os.path.join(tmpdir_path, "t7d"), TRANSCRIPT_FIELDS, BucketSpec("conv_id", 2),
+        key_cols=KEYS, merge_mode=merge_mode,
+    )
+    schema = ("lsn long, op string, conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts timestamp")
+    dead = spark.createDataFrame([(9, None, "c9", 0, "user", "bad", None, None)], schema).coalesce(1)
+
+    def dead_file(base):
+        return t._write_data_files(dead, {"version": base["version"]})
+
+    stale = t.manifest()
+    first = dead_file(stale)
+    assert [(f["bucket"], f["rows"], "stats" in f) for f in first] == [(None, 1, False)]
+    batch = spark.createDataFrame([(1, "insert", "c1", 0, "user", "hi", None, None)], schema)
+    m1 = merge_upsert(t, batch, KEYS, _base=stale, _dead_files=first)
+    second = dead_file(m1)
+    m2 = merge_upsert(t, batch.limit(0), KEYS, touched_buckets=set(), _dead_files=second)
+    assert m2["summary"]["empty_batch"] and m2["dead_files"] == first + second
+    third = dead_file(stale)
+    m3 = t._next_commit(stale, [], {"op": "race"}, _dead_files=third)  # computed before m1 and m2
+    assert (m3["version"], m3["dead_files"]) == (m2["version"] + 1, first + second + third)
+    m4 = merge_upsert(t, batch.withColumn("conv_id", F.lit("c2")), KEYS)
+    assert m4["dead_files"] == m3["dead_files"] and m4["row_count"] == 2
+
+    t.vacuum(keep_versions=1, grace_seconds=0)
+    assert t.read().count() == 2
+    paths = [os.path.join(t.root, f["path"]) for f in m4["dead_files"]]
+    assert spark.read.parquet(*paths).count() == 3
+
+
 def test_salted_write_spreads_hot_bucket(spark, tmpdir_path):
     """write_salt splits a skewed bucket's commit across several files
     without changing read results or bucket pruning."""

@@ -69,8 +69,7 @@ def test_stream_end_to_end(spark, wal_dir, tmpdir_path):
     cols = PAYLOAD_COLS
     assert checksum(got.select(*cols), cols) == checksum(exp.select(*cols), cols)
 
-    # dead letters captured, never applied
-    assert p.dead_letters().count() > 0
+    # dead letters never applied
     assert got.filter(F.col("text").isNull()).count() == 0
 
     # lineage: per-bucket HWMs per epoch, one NULL-bucket row for an
@@ -87,19 +86,25 @@ def test_stream_end_to_end(spark, wal_dir, tmpdir_path):
         (e, 0) for e in empty
     ]
 
-    # the commit sequence: one data commit per (stream_id, epoch), one
-    # dead-letter commit exactly for the epochs with dead letters, and
-    # no commit but ``create`` on the lineage and metrics roots
+    # the commit sequence: one data commit per (stream_id, epoch); the
+    # head's ``dead_files`` hold one file per epoch with dead letters,
+    # written for that epoch's commit, with its ``n_dead`` rows; no
+    # commit but ``create`` on the dead-letter, lineage and metrics roots
     from odibel_spark.lake import LakeTable
 
-    def summaries(root):
-        return [m["summary"] for m in LakeTable(spark, root).history()]
-
-    data = [(s["stream_id"], s["epoch"]) for s in summaries(p.table_root) if "epoch" in s]
-    assert len(data) == len(set(data)) and {e for _, e in data} == {r.epoch for r in met.collect()}
-    dead = sorted(s["epoch"] for s in summaries(p.dead_root) if "epoch" in s)
-    assert dead == sorted(s["epoch"] for s in summaries(p.table_root) if s.get("n_dead"))
-    assert [[s["op"] for s in summaries(r)] for r in (p.lineage_root, p.metrics_root)] == [["create"]] * 2
+    history = LakeTable(spark, p.table_root).history()
+    epochs = [m for m in history if "epoch" in m["summary"]]
+    data = {(m["summary"]["stream_id"], m["summary"]["epoch"]): m["version"] for m in epochs}
+    assert len(data) == len(epochs)
+    assert {e for _, e in data} == {r.epoch for r in met.collect()}
+    dead_files = sorted((int(f["path"].split("/")[1][1:].split("-")[0]), f["rows"]) for f in history[-1]["dead_files"])
+    assert dead_files == sorted((data[(r.stream_id, r.epoch)], r.n_dead) for r in met.collect() if r.n_dead)
+    assert [[m["summary"]["op"] for m in LakeTable(spark, r).history()] for r in (
+        p.dead_root, p.lineage_root, p.metrics_root,
+    )] == [["create"]] * 3
+    dl = p.dead_letters()
+    assert "meta" in dl.columns
+    assert dl.count() == met.agg(F.sum("n_dead")).collect()[0][0] > 0
 
 
 def crash_hook(monkeypatch, epoch, before=None, after=None):
@@ -149,17 +154,16 @@ def crash_hook(monkeypatch, epoch, before=None, after=None):
 
 #: durable writes as ``crash_hook`` names them
 DATA_FILES, DATA_COMMIT = ("_write_data_files", "transcripts"), ("_commit", "transcripts")
-DEAD_FILES = ("_write_data_files", "transcripts_deadletter")
-DEAD_COMMIT = ("_commit", "transcripts_deadletter")
 #: the harness's epoch: it writes dead letters and data, and with
 #: compaction every 2 epochs it compacts a merge-on-read table. At 3
 #: WAL files per trigger the module WAL's data fills epochs 0-3, so a
 #: restart replays this epoch and runs one more data epoch.
 HARNESS_EPOCH = 2
 HARNESS_WRITES = {
-    "cow": [DEAD_FILES, DEAD_COMMIT, DATA_FILES, DATA_COMMIT],
+    # the dead-letter file, the data files, then the one commit naming both
+    "cow": [DATA_FILES, DATA_FILES, DATA_COMMIT],
     # the compaction rewrites the data table: its files, then its commit
-    "mor": [DEAD_FILES, DEAD_COMMIT, DATA_FILES, DATA_COMMIT, DATA_FILES, DATA_COMMIT],
+    "mor": [DATA_FILES, DATA_FILES, DATA_COMMIT, DATA_FILES, DATA_COMMIT],
 }
 
 
@@ -174,8 +178,8 @@ def lake_state(p):
     roots = (p.table_root, p.dead_root, p.lineage_root, p.metrics_root)
     heads = [LakeTable(p.spark, r).manifest() for r in roots]
     return {
-        # (op, epoch) per commit: a skipped or doubled merge,
-        # compaction or dead-letter append changes this sequence
+        # (op, epoch) per commit: a skipped or doubled merge or
+        # compaction, or any write to a side root, changes this sequence
         "commits": [
             [
                 (m["summary"].get("op"), m["summary"].get("epoch", m["summary"].get("after_epoch")))
@@ -193,8 +197,8 @@ def lake_state(p):
 
 def assert_vacuum_leaves_no_orphan(p):
     """``vacuum(keep_versions=1, grace_seconds=0)`` leaves on disk
-    exactly the head's data files, in every table the sink writes, and
-    no commit dir without one of them."""
+    exactly the head's data and dead-letter files, in every root the
+    sink creates, and no commit dir without one of them."""
     from odibel_spark.lake import LakeTable
 
     for root in (p.table_root, p.dead_root, p.lineage_root, p.metrics_root):
@@ -207,7 +211,8 @@ def assert_vacuum_leaves_no_orphan(p):
             for n in names
             if n.endswith(".parquet")
         }
-        head = {f["path"] for f in t.files()}
+        man = t.manifest()
+        head = {f["path"] for f in man["files"] + man["dead_files"]}
         assert on_disk == head, root
         commit_dirs = os.listdir(data) if os.path.isdir(data) else []
         assert {f"data/{c}" for c in commit_dirs} == {"/".join(f.split("/")[:2]) for f in head}, root
@@ -217,11 +222,11 @@ def assert_vacuum_leaves_no_orphan(p):
 def test_crash_at_every_durable_write_matches_clean_run(spark, wal_dir, tmpdir_path, monkeypatch, merge_mode):
     """Crash consistency at every durable write of one epoch (the ALICE
     method at the granularity of lake commits). A clean run enumerates
-    the epoch's writes: dead-letter files and commit, data files and
-    commit, compaction files and commit (merge-on-read). Then, for a
-    crash before each write and one after the last (before the
-    checkpoint), one restart must leave every table equal to the clean
-    run's: data rows with ``_lsn``/``_deleted``, dead letters, lineage
+    the epoch's writes: its dead-letter file, its data files, the one
+    commit naming both, then compaction files and commit
+    (merge-on-read). Then, for a crash before each write and one after
+    the last (before the checkpoint), one restart must leave every
+    table equal to the clean run's: data rows with ``_lsn``/``_deleted``, dead letters, lineage
     and metrics rows, watermarks and each table's (op, epoch) commit
     sequence. A replay reads neither the lineage nor the metrics root,
     the epoch's ``batch_seconds`` is positive (a fenced replay reports
@@ -364,10 +369,10 @@ def test_side_rows_exact_when_metrics_append_crashes(spark, wal_dir, tmpdir_path
 def test_dead_letters_exactly_once_when_crash_precedes_data_commit(
     spark, wal_dir, tmpdir_path, monkeypatch
 ):
-    """A crash between the dead-letter commit and the data commit: the
-    replayed epoch finds the dead-letter table's fence already at that
-    epoch and skips the write, so the dead letters equal a clean run's
-    row for row."""
+    """A crash after an epoch's dead-letter file is written, before the
+    data commit that would name it: the file stays an orphan, and the
+    replayed epoch writes its dead letters again into the commit it
+    lands, so the dead letters equal a clean run's row for row."""
     import odibel_spark.cdc.pipeline as pipeline_mod
 
     real_merge = pipeline_mod.merge_upsert
@@ -421,8 +426,8 @@ def test_null_op_event_is_dead_lettered_not_lost(spark, tmpdir_path):
 def test_meta_listings_per_epoch_do_not_grow_with_history(spark, wal_dir, tmpdir_path, monkeypatch):
     """``_meta/`` listings (``current_version``) per data epoch are a
     constant: equal on a fresh table and on one aged by 50 metadata
-    commits, and at most one per table an epoch writes (data, dead
-    letters) when it has dead letters and does not compact."""
+    commits, and exactly one (the data head) in every epoch that does
+    not compact, with dead letters or without."""
     from odibel_spark.lake import LakeTable
 
     listing, apply_batch = LakeTable.current_version, TranscriptCdcPipeline._apply_batch
@@ -467,7 +472,7 @@ def test_meta_listings_per_epoch_do_not_grow_with_history(spark, wal_dir, tmpdir
         label: {e: calls[(p.table_root, e)] for e in data_epochs} for label, p in runs.items()
     }
     assert per_epoch["fresh"] == per_epoch["aged"]
-    assert all(per_epoch["fresh"][e] <= 2 for e, n_dead in data_epochs.items() if n_dead), per_epoch
+    assert set(per_epoch["fresh"].values()) == {1}, per_epoch
 
 
 def test_stream_start_reads_each_table_head_once(spark, wal_dir, tmpdir_path, monkeypatch):
@@ -629,50 +634,44 @@ def test_benchmark_coupling_holds(spark, wal_dir, tmpdir_path, monkeypatch):
             sys.modules.pop(name, None)
 
 
-def _strip_fences(root):
-    """Rewrite a table's manifests as a writer that kept no epoch fence
-    on it left them: no ``watermarks``."""
-    import json
-
-    meta = os.path.join(root, "_meta")
-    for n in os.listdir(meta):
-        path = os.path.join(meta, n)
-        with open(path) as f:
-            man = json.load(f)
-        man["watermarks"] = {}
-        with open(path, "w") as f:
-            json.dump(man, f)
-
-
 def test_replay_across_fence_upgrade_adds_no_duplicate_rows(spark, wal_dir, tmpdir_path, monkeypatch):
-    """A dead-letter table written before it carried an epoch fence (its
-    manifests hold no ``watermarks``) gets one stamped at stream start
-    from its commit summaries, so a replay across the upgrade appends
-    nothing twice. Two crashes of such a writer, each followed by
-    stripping the side roots' fences: (1) dead letters committed, the
-    data commit not — the replayed epoch would re-append its dead
-    letters; (2) after the whole epoch, before the checkpoint. Dead
-    letters, lineage and metrics then equal a clean run's."""
+    """A stream upgraded from a version that appended each epoch's dead
+    letters to the ``_deadletter`` table, with that epoch's fence,
+    before the data commit. Such a writer, crashed between the two,
+    left one epoch's dead letters there and its data uncommitted. The
+    crash hook makes that state: it appends the epoch's dead rows to
+    ``_deadletter`` as that version did, then raises before the data
+    commit. The replay of the epoch writes no dead-letter file (it is
+    at the legacy table's fence); a second crash, after the whole epoch
+    and before the checkpoint, replays it once more. Dead letters,
+    read from both places, lineage and metrics then equal a clean
+    run's."""
     import odibel_spark.cdc.pipeline as pipeline_mod
+    from odibel_spark.lake import LakeTable
 
     base = os.path.join(tmpdir_path, "upgrade")
-    sides = [os.path.join(base, "transcripts" + s) for s in ("_deadletter", "_lineage", "_metrics")]
     real_merge = pipeline_mod.merge_upsert
     crashed = []
 
-    def merge_crashing_once(*args, **kwargs):
-        if not crashed and kwargs["summary"]["n_dead"]:
-            crashed.append(kwargs["summary"]["epoch"])
+    def merge_after_legacy_dead_letters(table, *args, _dead_files=(), **kwargs):
+        s = kwargs["summary"]
+        if not crashed and s["n_dead"]:
+            crashed.append(s["epoch"])
+            legacy = LakeTable(spark, table.root + "_deadletter")
+            rows = spark.read.parquet(*(os.path.join(table.root, f["path"]) for f in _dead_files))
+            legacy.append(
+                rows.select(*legacy.schema().fieldNames()).coalesce(1),
+                summary={"stream_id": s["stream_id"], "epoch": s["epoch"]},
+                watermarks_update={s["stream_id"]: s["epoch"]},
+            )
             raise RuntimeError("fault-injection: crash before the data commit")
-        return real_merge(*args, **kwargs)
+        return real_merge(table, *args, _dead_files=_dead_files, **kwargs)
 
-    monkeypatch.setattr(pipeline_mod, "merge_upsert", merge_crashing_once)
+    monkeypatch.setattr(pipeline_mod, "merge_upsert", merge_after_legacy_dead_letters)
     with pytest.raises(Exception):  # Spark wraps the injected RuntimeError
         run_pipeline(spark, wal_dir, base, max_files_per_trigger=2)
     monkeypatch.undo()
     assert crashed
-    for root in sides:
-        _strip_fences(root)
 
     real_apply = TranscriptCdcPipeline._apply_batch
 
@@ -685,11 +684,14 @@ def test_replay_across_fence_upgrade_adds_no_duplicate_rows(spark, wal_dir, tmpd
     with pytest.raises(Exception):
         run_pipeline(spark, wal_dir, base, max_files_per_trigger=2)
     monkeypatch.undo()
-    for root in sides:
-        _strip_fences(root)
 
     p = run_pipeline(spark, wal_dir, base, max_files_per_trigger=2)
     clean = run_pipeline(spark, wal_dir, os.path.join(tmpdir_path, "clean"), max_files_per_trigger=2)
+
+    n_dead = {r.epoch: r.n_dead for r in p.metrics().collect()}
+    legacy = LakeTable(spark, p.dead_root)
+    assert (legacy.watermark("wal"), legacy.read().count()) == (crashed[0], n_dead[crashed[0]])
+    assert len(p.table().manifest()["dead_files"]) == sum(bool(n) for e, n in n_dead.items() if e != crashed[0])
 
     def rows(df, cols):
         return sorted((tuple(r) for r in df.select(*cols).collect()), key=repr)

@@ -872,7 +872,7 @@ def ab_epoch_driver(events: int, reps: int, cpus: int) -> None:
         for mod, name in (
             (lake_table, "_bucket_expr"), (lake_table, "_tombstone_exprs"), (lake_table, "_lww_exprs"),
             (lake_merge, "_delta_exprs"),
-            (cdc_pipeline, "_dead_letter_exprs"), (cdc_pipeline, "_batch_exprs"),
+            (cdc_pipeline, "_batch_exprs"),
         )
     }
 
